@@ -6,7 +6,8 @@ through 1+ hierarchy edges, annotated with ``min_levels`` /
 The reference emits only the DIRECT 'Is a' edges as rdfs:subClassOf
 (``omop2owl_vocab.py`` robot-template rows); the derived ancestor table —
 the thing OMOP analytics actually join against — is left to downstream
-tooling.  Here it is a first-class distributed operator.
+tooling.  Here it is a first-class distributed operator (no reference
+analog; mandated kg-construction surface).
 
 Algorithm: path doubling.  ``P_0`` = direct edges at length 1; each
 round joins the current pair set with itself on the shared midpoint and
@@ -33,18 +34,17 @@ as ``connected_components``) — the closure doubles as cycle detection.
 100 TB posture: each round is one self-equi-join on the midpoint plus a
 hash-aggregate — both shuffle on pair keys, both AQE-skew-splittable.
 Output size is the closure itself (O(V · depth) for bounded-fan-in
-hierarchies — SNOMED's ~450k concepts close to ~7M pairs); per-round
-``localCheckpoint``/``checkpoint`` truncates lineage exactly as in
-`operators/link.py:connected_components`.
-
-Reference analog: none (derived table the reference leaves to
-downstream OMOP tooling); mandated kg-construction surface.
+hierarchies — SNOMED's ~450k concepts close to ~7M pairs); the rounds
+run on the shared `operators/fixpoint.py` driver, which truncates
+lineage per round.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from omop2owl_vocab_spark.operators.fixpoint import iterate, truncation
 
 
 def ancestor_closure(
@@ -69,22 +69,8 @@ def ancestor_closure(
     fixpoint — which, for any acyclic input, means ``max_iter`` <
     ⌈log2(depth)⌉ + 1; for cyclic input it is the cycle detector.
     """
-    ckpt_subdir = None
-    if checkpoint_dir is not None:
-        import uuid
-
-        ckpt_subdir = f"{checkpoint_dir.rstrip('/')}/tc-{uuid.uuid4().hex}"
-        sc = edges.sparkSession.sparkContext
-        sc.setCheckpointDir(ckpt_subdir)
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
-    pairs = _ckpt(
+    ckpt = truncation(edges.sparkSession, checkpoint_dir, "tc")
+    pairs = ckpt(
         edges.select(
             F.col(parent_col).alias("ancestor"),
             F.col(child_col).alias("descendant"),
@@ -100,19 +86,14 @@ def ancestor_closure(
     )
 
     def _sig(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.sum("min_levels").alias("s_min"),
-            F.sum("max_levels").alias("s_max"),
-        ).collect()[0]
-        return (row["n"], row["s_min"], row["s_max"])
+        """(n, Σmin, Σmax): strictly monotone until the fixpoint."""
+        return tuple(
+            df.agg(
+                F.count("*"), F.sum("min_levels"), F.sum("max_levels")
+            ).collect()[0]
+        )
 
-    stats: dict = {"rounds": 0, "pairs_per_round": [], "converged": False}
-    if ckpt_subdir is not None:
-        stats["checkpoint_subdir"] = ckpt_subdir
-    sig = _sig(pairs)
-    stats["pairs_per_round"].append(sig[0])
-    for _ in range(max_iter):
+    def step(pairs: DataFrame, _r: int) -> DataFrame:
         mid = (
             pairs.alias("l")
             .join(
@@ -131,7 +112,7 @@ def ancestor_closure(
             )
             .filter(F.col("ancestor") != F.col("descendant"))
         )
-        new_pairs = _ckpt(
+        return (
             pairs.unionByName(mid)
             .groupBy("ancestor", "descendant")
             .agg(
@@ -139,14 +120,19 @@ def ancestor_closure(
                 F.max("max_levels").alias("max_levels"),
             )
         )
-        new_sig = _sig(new_pairs)
-        pairs = new_pairs
-        stats["rounds"] += 1
-        stats["pairs_per_round"].append(new_sig[0])
-        if new_sig == sig:
-            stats["converged"] = True
-            break
-        sig = new_sig
+
+    sig0 = _sig(pairs)
+    pairs, stats = iterate(
+        pairs,
+        step,
+        max_rounds=max_iter,
+        signature=_sig,
+        initial=sig0,
+        truncate=ckpt,
+    )
+    stats["pairs_per_round"] = [sig0[0]] + [
+        sig[0] for sig in stats.pop("signatures")
+    ]
     if not stats["converged"]:
         raise RuntimeError(
             f"ancestor_closure did not reach a fixpoint in {max_iter} "

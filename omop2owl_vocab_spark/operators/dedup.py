@@ -43,7 +43,7 @@ def _materialize(df: DataFrame) -> DataFrame:
     parquet inputs, so repeated bench sweeps never reuse an earlier
     run's bytes (no cross-run result caching), and no cache entry
     outlives the returned plan.  The cluster-reliability caveat is the
-    same as `link.connected_components`' documented localCheckpoint use.
+    one `fixpoint.Truncation` documents for its localCheckpoint default.
     """
     return df.localCheckpoint(eager=True)
 

@@ -1,43 +1,31 @@
-"""Fixed-iteration PageRank in pure integer arithmetic — the iterative
-graph-centrality primitive next to `operators/link.py`'s connected
-components: rank suppliers/documents/concepts by incoming-link mass
-(importance weighting for curation, canonical-pick tie-breaking,
-crawl-frontier prioritization).
+"""Graph operators over edge-list DataFrames: integer PageRank, HITS,
+k-core, BFS, label propagation, shortest paths, DAG layering and
+temporal reachability (iterative), plus triangles, degrees, node
+similarity, walks, link prediction, modularity and basket co-occurrence
+(one-shot).
 
-Determinism is the design center: ranks are 10^9-scaled longs, the
-damping factor a percent, and every update uses integer division —
+Determinism is the design center: scores are 10^9-scaled longs, every
+update uses integer division, and every fold is associative, so results
+are bit-identical in any engine (each DuckDB oracle unrolls the same
+recurrence) and independent of partitioning and summation order.
 
-    r_{t+1}(v) = (100-d_pct)·S div 100  +  d_pct·Σ_{u→v} (r_t(u) div deg⁺(u)) div 100
-
-with S = 10^9.  No float appears at any point, so the result is
-bit-identical in any engine (the DuckDB oracle unrolls the same
-recurrence) and independent of partitioning and summation order
-(integer addition is associative — the float-PageRank reduction-order
-problem does not exist here).  Rounding mass (≤ deg⁺ per node per
-round) evaporates exactly as dangling-node mass does in the
-no-redistribution variant — fine for RANKING, which is what this is
-for; totals are not conserved and don't need to be.
-
-Plan shape per iteration: one hash equi-join (ranks ⋈ edges on src) +
-one hash-aggregate (sum by dst) + one left join back to the node spine
-— all key-partitioned shuffles AQE handles, with ``localCheckpoint``
-per round truncating the lineage exactly as in
-`connected_components`.  Fixed iteration count (the classic
-power-iteration budget, default 5) rather than a convergence test:
-iteration cost is known up front, and the oracle can unroll it.
-
-100 TB posture: state is one long per node; each round shuffles
-O(edges) contribution rows.  High-in-degree skew (the web's power law)
-lands on the sum-by-dst aggregate, which does map-side partial
-aggregation — the classic PageRank-on-MapReduce hot-spot is already
-absorbed by Spark's two-phase agg.  Reference analog: none (mandated
+Every iterative operator runs its rounds on the `operators/fixpoint.py`
+driver, which truncates lineage per round.  Fixed round counts (not
+convergence tests) where the oracle must unroll the recurrence: cost is
+known up front.  Each round is a few node-keyed hash joins and
+map-side-combined hash aggregates, so in-degree skew is absorbed by
+Spark's two-phase aggregation.  Reference analog: none (mandated
 kg/graph surface).
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from omop2owl_vocab_spark.operators.fixpoint import iterate
 
 _SCALE = 10**9
 
@@ -101,12 +89,9 @@ def _orient_by_degree(und: DataFrame, deg: DataFrame) -> DataFrame:
     )
 
 
-def _undirected_adjacency(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
-    """Long-form undirected adjacency ``(node, nbr)`` — both directions
-    of every simple edge (self-loops dropped, duplicates collapsed),
-    checkpointed; the shared input of the neighbor-set operators."""
+def _symmetric(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """Both directions ``(src, dst)`` of every simple edge: self-loops
+    dropped, duplicates collapsed."""
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     return (
         e.unionByName(
@@ -114,6 +99,25 @@ def _undirected_adjacency(
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
+    )
+
+
+def _nodes(e: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+    """The distinct endpoints of edge frame ``e`` as column ``node``."""
+    return (
+        e.select(F.col(a).alias("node"))
+        .unionByName(e.select(F.col(b).alias("node")))
+        .distinct()
+    )
+
+
+def _undirected_adjacency(
+    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
+) -> DataFrame:
+    """Long-form undirected adjacency ``(node, nbr)`` over `_symmetric`,
+    checkpointed; the shared input of the neighbor-set operators."""
+    return (
+        _symmetric(edges, src_col, dst_col)
         .select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
         .localCheckpoint(eager=True)
     )
@@ -126,12 +130,33 @@ def pagerank_fixed(
     iterations: int = 5,
     damping_pct: int = 85,
 ) -> DataFrame:
-    """Return ``(node, rank_e9)`` after exactly ``iterations`` integer
-    power-iteration rounds over the DEDUPLICATED edge set (parallel
-    edges collapse — rank measures link structure, not multiplicity;
-    pre-weight by keeping multiplicity upstream if wanted).  Every node
-    appearing as src or dst is in the spine; all start at 10^9.
+    """Fixed-iteration PageRank in pure integer arithmetic: ``(node,
+    rank_e9)`` after exactly ``iterations`` rounds of
+
+        r_{t+1}(v) = (100-d_pct)·S div 100  +  d_pct·Σ_{u→v} (r_t(u) div deg⁺(u)) div 100
+
+    with S = 10^9 and every node starting at S, over the DEDUPLICATED
+    edge set (rank measures link structure, not multiplicity).  Every
+    node appearing as src or dst is in the spine.  Rounding mass and
+    dangling-node mass evaporate (no redistribution) — fine for
+    RANKING; totals are not conserved.
     """
+    return _integer_pagerank(edges, src, dst, None, iterations, damping_pct)
+
+
+def _integer_pagerank(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    seeds: DataFrame | None,
+    iterations: int,
+    damping_pct: int,
+) -> DataFrame:
+    """The integer power iteration shared by `pagerank_fixed` (``seeds``
+    None: every node is a seed, so the seed flag is the literal 1 and no
+    join is planned) and `personalized_pagerank` (``seeds`` = one column
+    ``node``; the flag is a broadcast left join hoisted out of the loop,
+    computed once on the node spine).  Returns ``(node, rank_e9)``."""
     if not (0 <= damping_pct <= 100):
         raise ValueError("damping_pct must be in 0..100")
     if iterations < 1:
@@ -141,19 +166,24 @@ def pagerank_fixed(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = _nodes(e)
+    seed = F.lit(1)
+    if seeds is not None:
+        nodes = nodes.join(
+            F.broadcast(seeds.distinct().withColumn("__seed", F.lit(1))),
+            "node",
+            "left",
+        ).na.fill({"__seed": 0})
+        seed = F.col("__seed")
+    nodes = nodes.localCheckpoint(eager=True)
     deg = e.groupBy("src").agg(F.count("*").cast("long").alias("deg"))
     ed = e.join(deg, "src").localCheckpoint(eager=True)
-    base = F.expr(f"CAST({(100 - damping_pct) * _SCALE} AS BIGINT) div 100")
+    base = (100 - damping_pct) * _SCALE // 100
     ranks = nodes.select(
-        "node", F.lit(_SCALE).cast("long").alias("rank_e9")
+        "node", (seed * _SCALE).cast("long").alias("rank_e9")
     ).localCheckpoint(eager=True)
-    for _ in range(iterations):
+
+    def step(ranks: DataFrame, _r: int) -> DataFrame:
         contrib = (
             ranks.join(ed, ranks["node"] == ed["src"])
             .select(
@@ -163,21 +193,18 @@ def pagerank_fixed(
             .groupBy("node")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    base
-                    + F.expr(
-                        f"CAST({damping_pct} AS BIGINT)"
-                        " * coalesce(s, CAST(0 AS BIGINT)) div 100"
-                    )
-                ).alias("rank_e9"),
-            )
-            .localCheckpoint(eager=True)
+        return nodes.join(contrib, "node", "left").select(
+            "node",
+            (
+                (seed * base).cast("long")
+                + F.expr(
+                    f"CAST({damping_pct} AS BIGINT)"
+                    " * coalesce(s, CAST(0 AS BIGINT)) div 100"
+                )
+            ).alias("rank_e9"),
         )
-    return ranks
+
+    return iterate(ranks, step, max_rounds=iterations)[0]
 
 
 def triangle_count(
@@ -277,70 +304,40 @@ def k_core(
 ) -> DataFrame:
     """Bulk-synchronous k-core peel: ``(node, degree)`` for nodes
     remaining after ``rounds`` peel iterations on the canonical
-    undirected SIMPLE graph (parallel edges collapse, self-loops drop
-    — core number is about distinct neighbors' support).  Each round
-    removes every node whose current degree is < k and the edges it
-    supports; at the fixpoint the survivors are exactly the k-core
-    (degeneracy-style sequential peel gives core NUMBERS; this bulk
-    variant answers the membership question a denoising /
-    community-seeding pass needs, one O(E) sweep per round).
+    undirected SIMPLE graph (parallel edges collapse, self-loops drop).
+    Each round removes every node whose current degree is < k and the
+    edges it supports; at the fixpoint the survivors are exactly the
+    k-core (the membership question, not core NUMBERS).
 
-    Fixed-round contract like `pagerank_fixed`: the DuckDB oracle
-    unrolls the same ``rounds`` iterations; the Spark loop early-exits
-    when the edge set is stable, which is observationally identical
-    (peel only removes — an unchanged edge COUNT is an unchanged SET,
-    and a stable round is stable forever).
-
-    Plan shape per round: one hash-agg (degree, map-side combined) +
-    two ``left_semi`` joins reinstating the induced subgraph — all
-    node-keyed shuffles, no window/sort; ``localCheckpoint`` truncates
-    lineage each round exactly as `connected_components` does.
-    100 TB posture: state is the shrinking edge list itself; rounds is
-    a knob, and real corpora peel >90% of the fringe in the first two
-    sweeps.
+    The DuckDB oracle unrolls the same ``rounds``; the Spark loop exits
+    early once the edge count is stable, which is observationally
+    identical (peel only removes, so an unchanged COUNT is an unchanged
+    SET, and a stable round is stable forever).  Per round: one degree
+    hash-agg + two ``left_semi`` joins reinstating the induced subgraph.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _undirected_simple(edges, src_col, dst_col)
+
+    def step(e: DataFrame, _r: int) -> DataFrame:
+        alive = _degrees(e).filter(F.col("deg") >= k).select("node")
+        return e.join(
+            alive.withColumnRenamed("node", "a"), "a", "left_semi"
+        ).join(alive.withColumnRenamed("node", "b"), "b", "left_semi")
+
+    # stop on a stable edge count, or once every edge is peeled
     n_edges = e.count()
-    for _ in range(rounds):
-        if n_edges == 0:
-            break
-        deg = (
-            e.select(F.col("a").alias("node"))
-            .unionByName(e.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").cast("long").alias("degree"))
-        )
-        alive = deg.filter(F.col("degree") >= k).select("node")
-        e2 = (
-            e.join(
-                alive.withColumnRenamed("node", "a"), "a", "left_semi"
-            )
-            .join(alive.withColumnRenamed("node", "b"), "b", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        n2 = e2.count()
-        e = e2
-        if n2 == n_edges:
-            break
-        n_edges = n2
-    return (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("degree"))
+    e, _ = iterate(
+        e,
+        step,
+        max_rounds=rounds if n_edges else 0,
+        signature=lambda df: df.count(),
+        converged=lambda prev, n: n in (prev, 0),
+        initial=n_edges,
     )
+    return _degrees(e).withColumnRenamed("deg", "degree")
 
 
 def bfs_distances(
@@ -352,25 +349,16 @@ def bfs_distances(
     directed: bool = False,
 ) -> DataFrame:
     """Multi-source BFS: ``(node, dist)`` = minimum hop count from ANY
-    source node, cut off at ``max_hops`` — the neighborhood-radius
-    primitive (blast-radius queries, seed-set expansion, curriculum
-    distance from a trusted core).  ``sources`` is a one-column
-    DataFrame named ``node``; distances are exact minima, sources
-    report 0, unreached nodes are absent.
+    source node, cut off at ``max_hops``.  ``sources`` is a one-column
+    DataFrame named ``node``; sources report 0, unreached nodes are
+    absent.
 
-    Frontier form: per hop, join the CURRENT frontier to the edge
-    list, anti-join away already-visited nodes, dedup the new frontier
-    — each edge is expanded at most once per incident frontier visit,
-    total work O(E · diameter_cut) worst case, O(E) on expander-ish
-    graphs where the frontier saturates early (the loop exits when the
-    frontier empties).  One hash-join + one anti-join + one distinct
-    per hop, all node-keyed; ``localCheckpoint`` truncates lineage
-    per round as in `connected_components`.
-
-    The DuckDB oracle unrolls reachability sets r_0 ⊆ r_1 ⊆ … ⊆ r_H
-    (MATERIALIZED CTEs) and takes ``min(i)`` per node — a different
-    but provably equivalent formulation (frontier_i = r_i \\ r_{i-1}),
-    so the hash-exact match checks the SEMANTICS, not the plan.
+    Frontier form: per hop, join the CURRENT frontier to the edge list,
+    anti-join away visited nodes, dedup the new frontier (each edge is
+    expanded at most once per incident frontier visit); the loop exits
+    when the frontier empties.  The DuckDB oracle unrolls reachability
+    sets r_0 ⊆ … ⊆ r_H and takes ``min(i)`` per node — a different but
+    equivalent formulation, so the hash-exact match checks SEMANTICS.
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
@@ -386,9 +374,9 @@ def bfs_distances(
         F.col("node"), F.lit(0).cast("long").alias("dist")
     ).distinct().localCheckpoint(eager=True)
     frontier = dist.select("node").localCheckpoint(eager=True)
-    for h in range(1, max_hops + 1):
-        if frontier.isEmpty():
-            break
+
+    def step(state: tuple, h: int) -> tuple:
+        dist, frontier = state
         nxt = (
             frontier.join(e, frontier["node"] == e["src"])
             .select(F.col("dst").alias("node"))
@@ -396,10 +384,21 @@ def bfs_distances(
             .join(dist.select("node"), "node", "left_anti")
             .localCheckpoint(eager=True)
         )
-        dist = dist.unionByName(
-            nxt.select("node", F.lit(h).cast("long").alias("dist"))
-        ).localCheckpoint(eager=True)
-        frontier = nxt
+        return (
+            dist.unionByName(
+                nxt.select("node", F.lit(h).cast("long").alias("dist"))
+            ),
+            nxt,
+        )
+
+    # early exit once the frontier empties
+    (dist, _), _ = iterate(
+        (dist, frontier),
+        step,
+        max_rounds=max_hops,
+        signature=lambda state: state[1].isEmpty(),
+        converged=lambda _, empty: empty,
+    )
     return dist
 
 
@@ -412,53 +411,33 @@ def label_propagation(
     """Synchronous label propagation (fixed ``rounds``): ``(node,
     label)`` where every node starts as its own label and each round
     adopts the MOST FREQUENT label among its neighbors, ties broken
-    toward the SMALLEST label — the linear-time community-detection
-    baseline (near-duplicate cluster consolidation, topic islands,
-    vocabulary module discovery) next to `connected_components`
-    (which ignores density) and `k_core` (which ignores assignment).
+    toward the SMALLEST label — the community-detection baseline next to
+    `connected_components` (ignores density) and `k_core` (ignores
+    assignment).
 
-    Fixed-round contract like `pagerank_fixed`: synchronous LPA can
-    oscillate on bipartite-ish structures, so convergence is not
-    assumed — the DuckDB oracle unrolls the IDENTICAL recurrence
-    (count → argmax with the same tiebreak) and matches bit-for-bit
-    whatever the dynamics.  Labels are node ids (longs); the argmax
-    is ``max(struct(count, -label))`` — pure integer comparison, no
-    float, no hash-order exposure.
-
-    Plan shape per round: one edge-sized hash-join delivering each
-    neighbor's label + two hash-aggs (count per (node, label), argmax
-    per node) — all node-keyed shuffles, map-side combined;
-    ``localCheckpoint`` truncates lineage per round.  100 TB posture:
-    state is one long per node, work O(E) per round, skewed hubs hit
-    the same salting/AQE answer as every node-keyed agg here.
+    Synchronous LPA can oscillate, so convergence is not assumed; the
+    DuckDB oracle unrolls the identical recurrence.  Labels are node ids
+    (longs) and the argmax is ``max(struct(count, -label))`` — pure
+    integer comparison, no hash-order exposure.  Per round: one
+    label-delivery join + two hash-aggs (count, argmax).
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    e = (
-        e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _symmetric(edges, src_col, dst_col).localCheckpoint(eager=True)
     labels = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
+        _nodes(e)
         .select("node", F.col("node").cast("long").alias("label"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(rounds):
-        delivered = (
-            labels.join(e, labels["node"] == e["src"])
-            .select(F.col("dst").alias("node"), "label")
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
+        delivered = labels.join(e, labels["node"] == e["src"]).select(
+            F.col("dst").alias("node"), "label"
         )
         cnt = delivered.groupBy("node", "label").agg(
             F.count("*").cast("long").alias("c")
         )
-        labels = (
+        return (
             cnt.groupBy("node")
             .agg(
                 F.max(
@@ -468,9 +447,9 @@ def label_propagation(
                 ).alias("m")
             )
             .select("node", (-F.col("m.neg_label")).alias("label"))
-            .localCheckpoint(eager=True)
         )
-    return labels
+
+    return iterate(labels, step, max_rounds=rounds)[0]
 
 
 def bellman_ford(
@@ -482,26 +461,14 @@ def bellman_ford(
     weight_col: str = "w",
 ) -> DataFrame:
     """Multi-source WEIGHTED shortest paths, Bellman–Ford style:
-    ``(node, dist)`` = minimum total integer weight from any source,
-    relaxed for exactly ``rounds`` synchronous sweeps — so the result
-    is exact for every node whose shortest path uses ≤ ``rounds``
-    edges (the full fixpoint needs rounds ≥ longest shortest-path hop
-    count; same fixed-round contract as `pagerank_fixed`, and the
-    oracle unrolls the identical recurrence).  The hop-bounded form is
-    itself meaningful: "cheapest cost reachable within k hops" is the
-    budgeted-traversal question KG curation asks.
-
-    Integer weights only (longs) — sums are exact, no float
-    accumulation order to drift.  Negative weights are accepted
-    (Bellman–Ford's whole point) but negative CYCLES make the
-    fixed-round result round-dependent by definition; unreached nodes
-    are absent.
-
-    Plan shape per round: one hash-join (frontier dist ⋈ edges on src)
-    + one min-aggregate by dst + one full-outer-style min-merge with
-    the previous dists (a union + min-agg — cheaper than a join for
-    two key-value frames) — all node-keyed shuffles;
-    ``localCheckpoint`` truncates lineage per round.
+    ``(node, dist)`` = minimum total integer weight from any source
+    after exactly ``rounds`` synchronous relaxations — exact for every
+    node whose shortest path uses ≤ ``rounds`` edges ("cheapest cost
+    within k hops"); the oracle unrolls the same recurrence.  Integer
+    weights only.  Negative weights are accepted, but negative CYCLES
+    make the result round-dependent; unreached nodes are absent.  Per
+    round: dist ⋈ edges on src, then a union + min-agg merge with the
+    previous dists (`_min_relaxation`).
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
@@ -515,21 +482,38 @@ def bellman_ford(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    for _ in range(rounds):
-        relaxed = (
-            dist.join(e, dist["node"] == e["src"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-        )
-        dist = (
-            dist.unionByName(relaxed)
+    return _min_relaxation(
+        dist,
+        e,
+        rounds,
+        lambda j: j.select(
+            F.col("dst").alias("node"),
+            (F.col("dist") + F.col("w")).alias("dist"),
+        ),
+    )
+
+
+def _min_relaxation(
+    state: DataFrame,
+    e: DataFrame,
+    rounds: int,
+    relax: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """``rounds`` synchronous min-relaxations of ``state = (node, value)``
+    over the edges ``e``: ``relax`` maps the ``state ⋈ e`` (on ``src``)
+    rows to candidate ``(node, value)`` rows, and each node keeps the
+    minimum of its old value and its candidates."""
+    col = state.columns[1]
+
+    def step(state: DataFrame, _r: int) -> DataFrame:
+        cand = relax(state.join(e, state["node"] == e["src"]))
+        return (
+            state.unionByName(cand)
             .groupBy("node")
-            .agg(F.min("dist").cast("long").alias("dist"))
-            .localCheckpoint(eager=True)
+            .agg(F.min(col).alias(col))
         )
-    return dist
+
+    return iterate(state, step, max_rounds=rounds)[0]
 
 
 def cooccurrence_pairs(
@@ -605,64 +589,47 @@ def dag_longest_levels(
 ) -> DataFrame:
     """Longest-path DAG layering: ``(node, level)`` where roots (nodes
     that never appear as a child) sit at level 0 and every other node's
-    level is ``max(level(parent)) + 1`` over its in-edges — the
-    topological strata used to schedule hierarchy rollups (each level
-    depends only on lower ones) and to report ontology depth.
+    level is ``max(level(parent)) + 1`` — the topological strata for
+    hierarchy rollups and ontology depth.
 
-    Bellman-style max-propagation with a FIXED round budget: per round,
-    join current levels to the edge list on the parent side, take
-    ``max(level(parent) + 1, level(child))`` per child, stop early when
-    no level changed.  ``max_iter`` must be >= the DAG depth (raises if
-    the budget is exhausted while still changing — which also catches a
-    cycle fed in by mistake, since a cycle never converges).  Work per
-    round is one key-partitioned join + one hash-agg, O(E) each —
-    depth-bounded, and real concept hierarchies are shallow (SNOMED
-    ~30, file trees ~20), so the round count is a small constant;
-    ``localCheckpoint`` per round truncates lineage as in
-    `connected_components`.
+    Per round: join levels to the edges on the parent side and take
+    ``max(level(parent) + 1, level(child))`` per child.  Raises
+    ``ValueError`` when ``max_iter`` rounds end still changing — the
+    budget is below the DAG depth, or the input has a cycle.
 
-    Convergence is detected by MONOTONICITY, not a diff join: levels
-    only ever increase (each update is a max with the old value), so
-    ``sum(level)`` strictly increases exactly when any level changed —
-    one single-row aggregate over the already-checkpointed state per
-    round instead of an old⋈new self-join, halving the per-round job
-    count (the dominant cost on shallow DAGs, where every round is
-    scheduler-floor-bound).  The sum is exact: level ≤ depth ≤
-    ``max_iter`` and nodes ≤ 2^63/max_iter at any real scale.
+    Convergence by MONOTONICITY, not a diff join: levels only increase,
+    so ``sum(level)`` is unchanged exactly when no level changed — one
+    single-row aggregate over the truncated state per round.  The sum
+    is exact: level ≤ depth ≤ ``max_iter`` and nodes ≤ 2^63/max_iter.
     """
     e = edges.select(
         F.col(child_col).alias("child"), F.col(parent_col).alias("parent")
     ).filter(F.col("child") != F.col("parent"))
-    nodes = (
-        e.select(F.col("child").alias("node"))
-        .unionByName(e.select(F.col("parent").alias("node")))
-        .distinct()
-    )
-    levels = nodes.select("node", F.lit(0).cast("long").alias("level"))
-    levels = levels.localCheckpoint(eager=True)
-    total = 0
-    for _ in range(max_iter):
-        cand = (
-            e.join(levels, e.parent == levels.node)
-            .select(
-                F.col("child").alias("node"),
-                (F.col("level") + 1).alias("level"),
-            )
+    levels = _nodes(e, "child", "parent").select(
+        "node", F.lit(0).cast("long").alias("level")
+    ).localCheckpoint(eager=True)
+
+    def step(levels: DataFrame, _r: int) -> DataFrame:
+        cand = e.join(levels, e.parent == levels.node).select(
+            F.col("child").alias("node"),
+            (F.col("level") + 1).alias("level"),
         )
-        new_levels = (
+        return (
             levels.unionByName(cand)
             .groupBy("node")
             .agg(F.max("level").alias("level"))
-            .localCheckpoint(eager=True)
         )
-        new_total = new_levels.agg(
+
+    def total(levels: DataFrame) -> int:
+        return levels.agg(
             F.coalesce(F.sum("level"), F.lit(0)).cast("long")
         ).collect()[0][0]
-        changed = new_total != total
-        total = new_total
-        levels = new_levels
-        if not changed:
-            return levels
+
+    levels, stats = iterate(
+        levels, step, max_rounds=max_iter, signature=total, initial=0
+    )
+    if stats["converged"]:
+        return levels
     raise ValueError(
         f"dag_longest_levels did not converge in {max_iter} rounds — "
         "either raise max_iter above the DAG depth or check for cycles"
@@ -732,10 +699,13 @@ def deterministic_walks(
     """DeepWalk/node2vec-style walk corpus, DERANDOMIZED: one walk of
     ``length`` steps from every node over the undirected simple graph,
     the step-i choice picked by the arithmetic hash
-    ``(cur * mult_a + i * mult_b) mod deg(cur)`` into the node's
-    SORTED neighbor list — reproducible across engines and runs (the
-    property a 100 TB embedding pipeline needs for resumable corpus
+    ``((cur mod 2^31) * mult_a + i * mult_b) mod deg(cur)`` into the
+    node's SORTED neighbor list — reproducible across engines and runs
+    (the property a 100 TB embedding pipeline needs for resumable corpus
     generation; swap ``mult_a/mult_b`` per epoch for fresh walks).
+    Reducing ``cur`` mod 2^31 before the multiply keeps the product in
+    int64 for any node id; raises ``ValueError`` when
+    ``(2^31-1)·mult_a + length·mult_b`` reaches 2^63, where it would not.
 
     Returns ``(start, path)`` with ``path`` the '>'-joined node chain
     including the start (length+1 nodes).
@@ -746,13 +716,12 @@ def deterministic_walks(
     adjacency side is reused every round (cache/checkpoint it when
     length is large).  All integer expressions, no UDF.
     """
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    adj = (
-        e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    if (2**31 - 1) * mult_a + length * mult_b >= 2**63:
+        raise ValueError(
+            "(2**31-1)*mult_a + length*mult_b must stay below 2**63"
         )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
+    adj = (
+        _symmetric(edges, src_col, dst_col)
         .groupBy(F.col("src").alias("node"))
         .agg(F.sort_array(F.collect_set("dst")).alias("nbrs"))
     )
@@ -762,12 +731,11 @@ def deterministic_walks(
         F.col("node").cast("string").alias("path"),
     )
     for step in range(1, length + 1):
-        # r5 advice: reduce cur mod 2^31 BEFORE the multiply — the raw
-        # product overflows int64 for node ids above ~3.47e9 (silent
-        # wraparound non-ANSI, runtime error under ansi.enabled, and
-        # divergence from any HUGEINT-based replay).  (2^31-1)·mult_a +
-        # step·mult_b < 2^63 always; ids in [0, 2^31) — every declared
-        # graph — hash identically to the unreduced form.
+        # reduce cur mod 2^31 BEFORE the multiply — the raw product
+        # overflows int64 for node ids above ~3.47e9 (silent wraparound
+        # non-ANSI, runtime error under ansi.enabled, and divergence from
+        # any HUGEINT-based replay); the guard above bounds the rest.
+        # Ids in [0, 2^31) hash identically to the unreduced form.
         idx = F.pmod(
             F.pmod(F.col("cur"), F.lit(1 << 31)) * F.lit(mult_a)
             + F.lit(step * mult_b),
@@ -986,31 +954,18 @@ def hits_fixed(
     iterations: int = 3,
 ) -> DataFrame:
     """Kleinberg HITS in pure integer arithmetic: ``(node, hub_e9,
-    auth_e9)`` after exactly ``iterations`` mutual-reinforcement rounds
-    over the DEDUPLICATED directed edge set (self-loops dropped) — the
-    bipartite-centrality twin of `pagerank_fixed` (good hubs point at
-    good authorities; directories vs sources, index pages vs content,
-    'Maps to'-rich concepts vs mapped-to canonicals).
-
-    Determinism is the design center, as in `pagerank_fixed`: scores
-    are 10^9-scaled longs, each round is
+    auth_e9)`` after exactly ``iterations`` rounds over the DEDUPLICATED
+    directed edge set (self-loops dropped) — the hub/authority twin of
+    `pagerank_fixed`.  Each round is
 
         auth'(v) = Σ_{u→v} hub(u)      then L∞-normalize
         hub'(u)  = Σ_{u→v} auth'(v)    then L∞-normalize
 
-    with L∞ normalization ``x' = (x · 10^9) div max(x)`` — the max
-    norm, NOT the textbook L2, precisely because sqrt forces floats
-    whose libm rounding is engine-specific; under any norm HITS
-    converges to the same principal-eigenvector DIRECTION, and with a
-    fixed round budget the integer recurrence is bit-identical in any
-    engine (the DuckDB oracle unrolls it).  The top hub/authority
-    always reads exactly 10^9.
-
-    Plan shape per round: two hash equi-joins (scores ⋈ edges) + two
-    key-partitioned sum aggregates + two single-row max folds that
-    Spark broadcasts back — all AQE-friendly, with ``localCheckpoint``
-    truncating lineage per round.  In-degree skew lands on the sums'
-    map-side partial aggregation, same story as PageRank.
+    with ``x' = (x · 10^9) div max(x)``: the max norm, not L2, because
+    sqrt forces floats whose rounding is engine-specific (any norm
+    converges to the same eigenvector direction).  The top
+    hub/authority always reads exactly 10^9.  The driver truncates the
+    hub state; the step materializes the authority half-round itself.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
@@ -1020,16 +975,23 @@ def hits_fixed(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = _nodes(e).localCheckpoint(eager=True)
 
-    def _norm(scores: DataFrame, col: str) -> DataFrame:
-        mx = scores.agg(F.max(col).alias("__mx"))
-        return scores.crossJoin(F.broadcast(mx)).select(
+    def half(
+        scores: DataFrame, score: str, frm: str, to: str, col: str
+    ) -> DataFrame:
+        """Sum ``score`` along the edges ``frm → to`` into ``col`` and
+        L∞-normalize."""
+        summed = (
+            scores.join(e, scores["node"] == e[frm])
+            .groupBy(F.col(to).alias("node"))
+            .agg(F.sum(score).alias(col))
+        )
+        raw = nodes.join(summed, "node", "left").select(
+            "node", F.coalesce(F.col(col), F.lit(0)).alias(col)
+        )
+        mx = raw.agg(F.max(col).alias("__mx"))
+        return raw.crossJoin(F.broadcast(mx)).select(
             "node",
             # the multiply rides 128-bit decimal: raw sums reach
             # in_degree·10^9, so a long×10^9 would overflow past
@@ -1047,35 +1009,15 @@ def hits_fixed(
             .alias(col),
         )
 
+    def step(state: tuple, _r: int) -> tuple:
+        auth = half(state[0], "hub_e9", "src", "dst", "auth_e9")
+        auth = auth.localCheckpoint(eager=True)
+        return half(auth, "auth_e9", "dst", "src", "hub_e9"), auth
+
     hub = nodes.select(
         "node", F.lit(_SCALE).cast("long").alias("hub_e9")
     ).localCheckpoint(eager=True)
-    auth = None
-    for _ in range(iterations):
-        a_sum = (
-            hub.join(e, hub["node"] == e["src"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub_e9").alias("auth_e9"))
-        )
-        auth = _norm(
-            nodes.join(a_sum, "node", "left").select(
-                "node",
-                F.coalesce(F.col("auth_e9"), F.lit(0)).alias("auth_e9"),
-            ),
-            "auth_e9",
-        ).localCheckpoint(eager=True)
-        h_sum = (
-            auth.join(e, auth["node"] == e["dst"])
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("auth_e9").alias("hub_e9"))
-        )
-        hub = _norm(
-            nodes.join(h_sum, "node", "left").select(
-                "node",
-                F.coalesce(F.col("hub_e9"), F.lit(0)).alias("hub_e9"),
-            ),
-            "hub_e9",
-        ).localCheckpoint(eager=True)
+    (hub, auth), _ = iterate((hub, None), step, max_rounds=iterations)
     return hub.join(auth, "node").select("node", "hub_e9", "auth_e9")
 
 
@@ -1267,30 +1209,19 @@ def temporal_reachability(
     node_col: str = "node",
     start_col: str = "t0",
 ) -> DataFrame:
-    """Time-RESPECTING reachability over a temporal edge list: the
-    earliest arrival time at every node reachable from ``sources``
-    within ``rounds`` hops, where an edge ``(u, v, t)`` is traversable
-    only if ``t >= arrival(u)`` — information/contagion flow on a
-    dynamic graph (a fact asserted at t can only propagate along later
-    links; static reachability OVERcounts by ignoring time order).
-    Returns ``(node, arrival)``; unreached nodes are absent.
-
-    The earliest-arrival recurrence, run exactly ``rounds``
-    bulk-synchronous relaxations (a hop budget, as in `bellman_ford` —
-    cost known up front, oracle unrollable):
+    """Time-RESPECTING reachability: ``(node, arrival)`` = the earliest
+    arrival time at every node reachable from ``sources`` within
+    ``rounds`` hops, where an edge ``(u, v, t)`` is traversable only if
+    ``t >= arrival(u)`` (static reachability overcounts by ignoring time
+    order).  Unreached nodes are absent.  Exactly ``rounds``
+    relaxations of
 
         arrival'(v) = min(arrival(v), min{ t : (u,v,t) ∈ E,
                                                t >= arrival(u) })
 
-    min is associative/commutative/idempotent so the fold is
-    partitioning- and order-independent — integer times, no float.
-
-    Plan shape per round: one hash equi-join (arrivals ⋈ edges on the
-    source key) + the time-respect filter + one min-aggregate over the
-    union with the previous state; ``localCheckpoint`` truncates
-    lineage per round.  Temporal fan-in skew (a hub receiving many
-    timed edges) lands on the min-aggregate's map-side partial, the
-    same absorption story as `pagerank_fixed`'s sums.
+    — the `bellman_ford` round shape (`_min_relaxation`) with the
+    time-respect filter; min is order-independent, so the oracle unrolls
+    it bit-exactly.
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
@@ -1307,19 +1238,14 @@ def temporal_reachability(
         .agg(F.min("arrival").alias("arrival"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(rounds):
-        step = (
-            arr.join(e, arr["node"] == e["src"])
-            .filter(F.col("t") >= F.col("arrival"))
-            .select(F.col("dst").alias("node"), F.col("t").alias("arrival"))
-        )
-        arr = (
-            arr.unionByName(step)
-            .groupBy("node")
-            .agg(F.min("arrival").alias("arrival"))
-            .localCheckpoint(eager=True)
-        )
-    return arr
+    return _min_relaxation(
+        arr,
+        e,
+        rounds,
+        lambda j: j.filter(F.col("t") >= F.col("arrival")).select(
+            F.col("dst").alias("node"), F.col("t").alias("arrival")
+        ),
+    )
 
 
 def personalized_pagerank(
@@ -1331,83 +1257,20 @@ def personalized_pagerank(
     iterations: int = 3,
     damping_pct: int = 85,
 ) -> DataFrame:
-    """Personalized PageRank in the same pure-integer discipline as
-    `pagerank_fixed`: random-walk-with-restart mass RESTRICTED to a
-    seed set — the KG relatedness/recommendation primitive ("entities
-    most related to THESE concepts", crawl expansion from a trusted
-    frontier) where global PageRank answers the wrong question.
-    Returns ``(node, rank_e9)`` over every node of the deduplicated
-    edge set; seeds both hold the initial mass and receive the
-    teleport refill:
+    """Personalized PageRank: random-walk-with-restart mass RESTRICTED to
+    a seed set ("entities most related to THESE concepts").  Returns
+    ``(node, rank_e9)`` over every node of the deduplicated edge set;
+    seeds both hold the initial mass and receive the teleport refill:
 
         r_0(v)    = S·[v ∈ seeds]
         r_{t+1}(v) = (100-d)·S div 100 · [v ∈ seeds]
                      + d·Σ_{u→v} (r_t(u) div deg⁺(u)) div 100
 
-    with S = 10^9 — integer division throughout, so the DuckDB oracle
-    unrolls it bit-exactly and summation order is irrelevant.  Mass
-    decays off dangling paths exactly as in `pagerank_fixed` (ranking
-    semantics, not a conserved distribution).
-
-    Plan shape per iteration: identical to `pagerank_fixed` (one
-    scores ⋈ edges hash join + one sum-by-dst with map-side partials +
-    one spine left-join), plus one broadcast-sized seed membership
-    join hoisted OUT of the loop — the seed flag is computed once on
-    the node spine, not per round.
+    `pagerank_fixed` is the every-node-a-seed case, and both run one
+    integer core; the seed flag is a broadcast join computed once on the
+    node spine, not per round.
     """
-    if not (0 <= damping_pct <= 100):
-        raise ValueError("damping_pct must be in 0..100")
-    if iterations < 1:
-        raise ValueError("iterations must be >= 1")
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    seed_nodes = seeds.select(F.col(node_col).alias("node"))
+    return _integer_pagerank(
+        edges, src_col, dst_col, seed_nodes, iterations, damping_pct
     )
-    seed_nodes = seeds.select(F.col(node_col).alias("node")).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(
-            F.broadcast(seed_nodes.withColumn("__seed", F.lit(1))),
-            "node",
-            "left",
-        )
-        .na.fill({"__seed": 0})
-        .localCheckpoint(eager=True)
-    )
-    deg = e.groupBy("src").agg(F.count("*").cast("long").alias("deg"))
-    ed = e.join(deg, "src").localCheckpoint(eager=True)
-    base_val = (100 - damping_pct) * _SCALE // 100
-    ranks = nodes.select(
-        "node",
-        "__seed",
-        (F.col("__seed") * _SCALE).cast("long").alias("rank_e9"),
-    ).localCheckpoint(eager=True)
-    for _ in range(iterations):
-        contrib = (
-            ranks.join(ed, ranks["node"] == ed["src"])
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_e9 div deg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                "__seed",
-                (
-                    (F.col("__seed") * base_val).cast("long")
-                    + F.expr(
-                        f"CAST({damping_pct} AS BIGINT)"
-                        " * coalesce(s, CAST(0 AS BIGINT)) div 100"
-                    )
-                ).alias("rank_e9"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks.select("node", "rank_e9")

@@ -5,21 +5,19 @@ The reference emits 'Maps to' edges but never merges them
 equivalence canonicalization, so this is new surface.
 
 Algorithm: iterative min-label propagation — each round every node takes
-the minimum label among itself and its neighbors; converges in O(diameter)
-rounds (O(log n) on typical mapping graphs whose components are small and
-star-shaped).  Driver-side loop, not a Catalyst rule:
-
-- ``localCheckpoint()`` every round truncates lineage (else the plan doubles
-  per iteration and the driver OOMs planning round ~15);
-- labels only ever decrease, so convergence = zero changed rows;
-- round cap guards pathological everything-maps-to-everything graphs; the
-  per-round changed-count is recorded for the stage metrics.
+the minimum label among itself and its neighbors, plus pointer doubling;
+converges in O(log diameter) rounds.  The rounds run on the shared
+`operators/fixpoint.py` driver (per-round lineage truncation, round cap);
+labels only ever decrease, so convergence = zero changed rows, and the
+per-round changed-count is recorded for the stage metrics.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from omop2owl_vocab_spark.operators.fixpoint import iterate, truncation
 
 
 def connected_components(
@@ -35,64 +33,38 @@ def connected_components(
 
     Input edges need not be symmetric or deduplicated.
 
-    ``checkpoint_dir``: when set, per-round lineage truncation uses
-    RELIABLE checkpoints via ``setCheckpointDir`` + ``DataFrame.checkpoint``
-    into a UNIQUE subdirectory of ``checkpoint_dir`` (HDFS/S3/shared fs).
-    Default (None) uses ``localCheckpoint`` — fine on local[*] and fastest,
-    but executor-local blocks are LOST under executor failure or dynamic
-    deallocation on a real cluster, killing a long CC run.
-
-    Spark never deletes reliable checkpoint files on its own (unless
-    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is set), and the
-    returned ``labels`` frame still reads from the final round's files —
-    so the subdir path is surfaced as ``stats['checkpoint_subdir']`` and
-    the CALLER deletes it once labels are materialized elsewhere (the
-    pipeline does this right after the canon-map checkpoint lands).  Note
-    ``setCheckpointDir`` is SparkContext-global; the unique subdir keeps
-    concurrent components from interleaving files, but the last caller's
-    setting wins for anyone checkpointing without re-setting it.
+    ``checkpoint_dir``: when set, lineage truncation uses RELIABLE
+    checkpoints into a unique ``cc-<uuid>`` subdirectory of
+    ``checkpoint_dir`` (HDFS/S3/shared fs), surfaced as
+    ``stats['checkpoint_subdir']`` for the CALLER to delete once labels
+    are materialized elsewhere (the pipeline does this right after the
+    canon-map checkpoint lands).  Default (None) uses ``localCheckpoint``
+    — see `fixpoint.Truncation` for the cluster caveats.
     """
-    ckpt_subdir = None
-    if checkpoint_dir is not None:
-        import uuid
-
-        ckpt_subdir = f"{checkpoint_dir.rstrip('/')}/cc-{uuid.uuid4().hex}"
-        sc = edges.sparkSession.sparkContext
-        sc.setCheckpointDir(ckpt_subdir)
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
+    ckpt = truncation(edges.sparkSession, checkpoint_dir, "cc")
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
     )
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    sym = _ckpt(sym)
+    sym = ckpt(sym)
 
-    labels = _ckpt(
+    labels = ckpt(
         sym.select(F.col("a").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
     )
 
-    stats: dict = {"rounds": 0, "changed_per_round": [], "converged": False}
-    if ckpt_subdir is not None:
-        stats["checkpoint_subdir"] = ckpt_subdir
-    for rnd in range(max_iter):
+    def step(state: DataFrame, r: int) -> DataFrame:
+        labels = state.select("node", "label")
         # neighbor labels: edge (a,b) sends b's label to a
         msgs = sym.join(labels, sym["b"] == labels["node"]).select(
             F.col("a").alias("node"), "label", F.lit(0).alias("__old")
         )
-        parts = [
-            labels.select("node", "label", F.lit(1).alias("__old")),
-            msgs,
-        ]
-        if rnd > 0:
+        acc = labels.select("node", "label", F.lit(1).alias("__old")).unionByName(
+            msgs
+        )
+        if r > 1:
             # pointer doubling: adopt the label of one's current label
             # (labels are monotone non-increasing, so label-of-label ≤
             # label); turns O(diameter) convergence into O(log diameter).
@@ -106,40 +78,37 @@ def connected_components(
                     F.lit(0).alias("__old"),
                 )
             )
-            parts.append(lol)
-        acc = parts[0]
-        for p in parts[1:]:
-            acc = acc.unionByName(p)
-        # change detection FUSED into the label aggregate (r6): the old
-        # label rides the union tagged __old=1, so the same hash-agg that
-        # takes the new min also recovers the previous label, and the
-        # per-round convergence check becomes one tiny aggregate over the
-        # just-checkpointed state instead of a new⋈old join+count job —
-        # the same job-count halving the r5 verdict credited for
-        # kg_dag_levels' monotone-sum check, valid here for ARBITRARY
-        # string node ids (no numeric-sum assumption).  Every node has
-        # exactly one __old=1 row, so __o is never NULL.
-        new_state = _ckpt(
-            acc.groupBy("node").agg(
-                F.min("label").alias("label"),
-                F.min(F.when(F.col("__old") == 1, F.col("label"))).alias(
-                    "__o"
-                ),
-            ).select(
-                "node",
-                "label",
-                (F.col("label") != F.col("__o")).cast("long").alias("__chg"),
-            )
+            acc = acc.unionByName(lol)
+        # change detection FUSED into the label aggregate: the old label
+        # rides the union tagged __old=1, so the same hash-agg that takes
+        # the new min also recovers the previous label, and the round's
+        # signature is one tiny aggregate over the truncated state
+        # instead of a new⋈old join+count job — valid for ARBITRARY string
+        # node ids.  Every node has exactly one __old=1 row, so __o is
+        # never NULL.
+        return acc.groupBy("node").agg(
+            F.min("label").alias("label"),
+            F.min(F.when(F.col("__old") == 1, F.col("label"))).alias("__o"),
+        ).select(
+            "node",
+            "label",
+            (F.col("label") != F.col("__o")).cast("long").alias("__chg"),
         )
-        changed = new_state.agg(
+
+    def changed(state: DataFrame) -> int:
+        return state.agg(
             F.coalesce(F.sum("__chg"), F.lit(0)).cast("long")
         ).collect()[0][0]
-        labels = new_state.select("node", "label")
-        stats["rounds"] += 1
-        stats["changed_per_round"].append(changed)
-        if changed == 0:
-            stats["converged"] = True
-            break
+
+    state, stats = iterate(
+        labels,
+        step,
+        max_rounds=max_iter,
+        signature=changed,
+        converged=lambda _, n: n == 0,
+        truncate=ckpt,
+    )
+    stats["changed_per_round"] = stats.pop("signatures")
     if not stats["converged"]:
         # returning unconverged labels would silently split components
         raise RuntimeError(
@@ -147,7 +116,7 @@ def connected_components(
             f"(changed_per_round={stats['changed_per_round'][-3:]}); raise "
             "max_iter — pointer doubling needs ~log2(max component diameter)"
         )
-    return labels, stats
+    return state.select("node", "label"), stats
 
 
 def canonical_map(labels: DataFrame) -> DataFrame:

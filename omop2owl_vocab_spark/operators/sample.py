@@ -303,29 +303,33 @@ def allocate_budget(
         *[F.col(c) for c in group_cols],
         F.col(size_col).cast("long").alias("n"),
     )
-    total = base_frame.agg(F.sum("n").cast("long").alias("__total"))
-    # r5 advice: a zero-mass input (Σ n == 0, incl. the empty frame)
-    # made ``div __total`` NULL and silently broke the Σ alloc == budget
-    # invariant.  Now: budget == 0 degrades to all-zero allocations
-    # (trivially conserving), while a POSITIVE budget over zero mass
-    # raises — there is no valid apportionment to hide behind NULLs.
+    # a zero-mass input (Σ n == 0, incl. the empty frame, whose sum is
+    # NULL) would make ``div __total`` NULL and silently break the
+    # Σ alloc == budget invariant.  budget == 0 degrades to all-zero
+    # allocations (trivially conserving), while a POSITIVE budget over
+    # zero mass raises — there is no valid apportionment to hide behind
+    # NULLs.  The check rides the always-one-row total, so it fires even
+    # when there is no group row to evaluate it on.
     ok = F.assert_true(
         (F.lit(budget) == 0) | (F.col("__total") > 0),
         "allocate_budget: zero-mass input (sum of size_col is 0) cannot "
         "absorb a positive budget",
     ).isNull()
+    total = base_frame.agg(F.sum("n").cast("long").alias("__total")).select(
+        F.when(ok, F.col("__total")).alias("__total")
+    )
     staged = base_frame.crossJoin(F.broadcast(total)).select(
         *group_cols,
         "n",
         F.when(
-            ok & (F.col("__total") > 0),
+            F.col("__total") > 0,
             F.expr(
                 f"CAST((CAST({budget} AS DECIMAL(38,0)) * n) div __total"
                 " AS BIGINT)"
             ),
         ).otherwise(F.lit(0).cast("long")).alias("__base"),
         F.when(
-            ok & (F.col("__total") > 0),
+            F.col("__total") > 0,
             F.expr(
                 f"CAST(CAST({budget} AS DECIMAL(38,0)) * n"
                 f" - ((CAST({budget} AS DECIMAL(38,0)) * n) div __total)"

@@ -55,6 +55,13 @@ def test_allocate_budget_zero_mass(spark):
     with pytest.raises(Exception) as ei:
         allocate_budget(zero, ["g"], "n", budget=5).collect()
     assert "zero-mass" in str(ei.value)
+    # the empty frame is zero mass too: no group row exists to carry the
+    # check, so it must fire on the one-row total
+    empty = spark.createDataFrame([], "g string, n long")
+    assert allocate_budget(empty, ["g"], "n", budget=0).collect() == []
+    with pytest.raises(Exception) as ei:
+        allocate_budget(empty, ["g"], "n", budget=5).collect()
+    assert "zero-mass" in str(ei.value)
 
 
 def test_allocate_budget_unchanged_on_positive_mass(spark):

@@ -98,11 +98,16 @@ def test_output_partition_pruning(spark, tmp_path):
             "formatted"
         )
     )
-    # r6: with constraintPropagation disabled the redundant inferred
-    # isnotnull no longer rides the partition-filter list; the equality
-    # filter alone prunes (equality never matches a NULL partition value)
-    assert "PartitionFilters: [" in plan
-    assert "(vocabulary_id#" in plan and "= python)" in plan.replace("  ", " ")
+    # the vocabulary_id equality must sit INSIDE the scan's partition
+    # filter list — an empty list, or the same predicate in a post-scan
+    # Filter node, would mean no pruning.  (With constraintPropagation
+    # disabled the inferred isnotnull no longer rides that list; the
+    # equality alone prunes, as it never matches a NULL partition value.)
+    import re
+
+    m = re.search(r"PartitionFilters: \[(.*)\]$", plan, re.M)
+    assert m, plan
+    assert re.search(r"\(vocabulary_id#\d+ = python\)", m.group(1)), m.group(0)
 
 
 def test_edge_stage_never_rereads_content(spark, tmp_path):

@@ -75,3 +75,18 @@ def test_walks_epoch_seed_changes_paths(spark):
     b = {r["start"]: r["path"] for r in
          deterministic_walks(edges, length=4, mult_b=99991).collect()}
     assert a != b  # a different epoch seed explores different paths
+
+
+def test_walks_reject_overflowing_multipliers(spark):
+    import pytest
+
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    # (2^31-1)·mult_a alone passes 2^63 for mult_a = 2^32 + 3
+    with pytest.raises(ValueError, match="2\\*\\*63"):
+        deterministic_walks(edges, length=2, mult_a=2**32 + 3)
+    # the bound counts the step term too: this mult_a fits on its own
+    mult_a = (2**63 - 1) // (2**31 - 1)
+    with pytest.raises(ValueError, match="2\\*\\*63"):
+        deterministic_walks(edges, length=4, mult_a=mult_a, mult_b=2**40)
+    # the defaults are far inside the bound
+    assert len(deterministic_walks(edges, length=2).collect()) == 3
