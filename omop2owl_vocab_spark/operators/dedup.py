@@ -13,6 +13,12 @@ Scale posture (100 TB corpus, 10⁹+ docs):
 - n-gram Jaccard: exact verification operator for candidate pairs (and a
   small-scale direct pair finder for tests/oracles).
 - embedding cosine: see operators/similarity.py (near-dup = cos ≥ τ).
+
+Every pair finder here — LSH and SimHash buckets, winnowed fingerprints,
+Jaccard and containment verification — and the co-occurrence, node
+similarity and link-prediction operators in `operators/graph.py` run on
+one shared-key pair join, `_shared_key_pairs`: SparkER's blocking →
+block purging → pair count (PAPERS.md), written once.
 """
 
 from __future__ import annotations
@@ -21,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from omop2owl_vocab_spark.operators.text import RE2_WS
+from omop2owl_vocab_spark.operators.text import RE2_WS, _e4
 
 
 def _materialize(df: DataFrame) -> DataFrame:
@@ -44,8 +50,107 @@ def _materialize(df: DataFrame) -> DataFrame:
     run's bytes (no cross-run result caching), and no cache entry
     outlives the returned plan.  The cluster-reliability caveat is the
     one `fixpoint.Truncation` documents for its localCheckpoint default.
+
+    A frame whose analyzed plan is already a bare ``LogicalRDD`` (an
+    earlier checkpoint's output, or a frame built from an RDD or local
+    rows) is returned unchanged, so a composite that passes a
+    materialized frame down (``near_duplicate_groups`` →
+    ``jaccard_pairs``) checkpoints it once, not twice.
     """
+    if df._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD":
+        return df
     return df.localCheckpoint(eager=True)
+
+
+def _purge_keys(rows: DataFrame, key: str | list[str], cap: int) -> DataFrame:
+    """Block purging: drop the rows of every ``key`` (a column name or
+    list of names) held by more than ``cap`` rows."""
+    small = (
+        rows.groupBy(key)
+        .agg(F.count("*").alias("__n"))
+        .filter(F.col("__n") <= cap)
+        .drop("__n")
+    )
+    return rows.join(small, key, "left_semi")
+
+
+def _shared_key_pairs(
+    rows: DataFrame,
+    key: str | list[str],
+    *,
+    id_col: str = "id",
+    max_postings: int | None = None,
+    within: DataFrame | None = None,
+) -> DataFrame:
+    """``(id_a, id_b, n)``: every pair of ids with ``id_a < id_b`` that
+    shares ``n`` >= 1 keys — the candidate step of every set-similarity
+    join in this module and in `operators/graph.py`, written once.
+
+    ``rows`` has columns ``(id_col, *key)`` and MUST be distinct per
+    ``(id_col, key)``: ``n`` counts joined rows, so a repeated row would
+    count its key twice.  No defensive ``distinct`` (it would add a
+    shuffle); ``word_shingles`` (``array_distinct``),
+    ``winnow_fingerprints`` (``distinct``) and the graph operators'
+    deduplicated edge and basket frames all meet it.
+
+    Plan, in order: ``rows`` is materialized once (it feeds the purge
+    count and both join sides); keys with more than ``max_postings``
+    rows are purged (`_purge_keys`); with ``within`` (candidate pairs
+    ``(id_a, id_b)``) both sides are semi-pruned to candidate ids before
+    the self-join and the pair stream is semi-joined to ``within``
+    before the count — the full co-key blowup never reaches the
+    aggregate.  The self-join applies ``id_a < id_b`` at join time, so
+    each unordered pair is emitted once per shared key.
+    """
+    keys = [key] if isinstance(key, str) else list(key)
+    rows = _materialize(rows)
+    if max_postings is not None:
+        rows = _purge_keys(rows, keys, max_postings)
+    if within is not None:
+        within = _materialize(within)
+        ids = (
+            within.select(F.col("id_a").alias(id_col))
+            .unionByName(within.select(F.col("id_b").alias(id_col)))
+            .distinct()
+        )
+        rows = rows.join(ids, id_col, "left_semi")
+    on = F.col(f"__a.{id_col}") < F.col(f"__b.{id_col}")
+    for k in keys:
+        on = on & (F.col(f"__a.{k}") == F.col(f"__b.{k}"))
+    pairs = (
+        rows.alias("__a")
+        .join(rows.alias("__b"), on)
+        .select(
+            F.col(f"__a.{id_col}").alias("id_a"),
+            F.col(f"__b.{id_col}").alias("id_b"),
+        )
+    )
+    if within is not None:
+        pairs = pairs.join(within, ["id_a", "id_b"], "left_semi")
+    return pairs.groupBy("id_a", "id_b").agg(F.count("*").alias("n"))
+
+
+def _overlap(
+    rows: DataFrame,
+    key: str,
+    *,
+    id_col: str = "id",
+    within: DataFrame | None = None,
+) -> DataFrame:
+    """``(id_a, id_b, inter, sz_a, sz_b)``: the `_shared_key_pairs`
+    count plus each side's full row count (set size, taken before any
+    ``within`` pruning) — the shared input of the Jaccard, containment
+    and neighbor-Jaccard verifiers."""
+    rows = _materialize(rows)
+    sizes = rows.groupBy(id_col).agg(F.count("*").alias("sz"))
+    sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
+    sz_b = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    return (
+        _shared_key_pairs(rows, key, id_col=id_col, within=within)
+        .join(sz_a, "id_a")
+        .join(sz_b, "id_b")
+        .select("id_a", "id_b", F.col("n").alias("inter"), "sz_a", "sz_b")
+    )
 
 
 def exact_duplicates(
@@ -186,7 +291,8 @@ def _bucket_bounded_pairs(
 ) -> DataFrame:
     """Same-bucket pairs (id_a < id_b, distinct) with the within-bucket n²
     blowup bounded: buckets larger than ``max_bucket_size`` are DROPPED
-    before the self-join.
+    before the self-join (`_shared_key_pairs` over the (band, key)
+    bucket).
 
     Rationale (100 TB posture): the (band, key) self-join is quadratic
     within a bucket; real corpora have degenerate buckets (boilerplate,
@@ -197,27 +303,9 @@ def _bucket_bounded_pairs(
     still caught by ``exact_duplicates``.  Use ``lsh_bucket_stats`` to
     surface how many buckets/ids a given bound drops.
     """
-    # the banded frame carries the whole signature lineage (shingle +
-    # minhash/simhash hashing) and feeds up to four subtrees below
-    # (bucket sizes, the semi-prune, both self-join sides) — materialize
-    # it once instead of re-hashing the corpus per subtree
-    banded = _materialize(banded)
-    if max_bucket_size is not None:
-        small = (
-            banded.groupBy("band", "key")
-            .agg(F.count("*").alias("bucket_n"))
-            .filter(F.col("bucket_n") <= max_bucket_size)
-            .drop("bucket_n")
-        )
-        banded = banded.join(small, ["band", "key"], "left_semi")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    return _shared_key_pairs(
+        banded, ["band", "key"], max_postings=max_bucket_size
+    ).select("id_a", "id_b")
 
 
 def lsh_candidate_pairs(
@@ -284,45 +372,14 @@ def jaccard_pairs(
     shingle; union = |A|+|B|-∩. The no-candidates form is the textbook
     inverted-index join: only pairs sharing ≥1 shingle are ever materialized.
 
-    The shingled input (and the candidate set, when given) feed several
-    independent subtrees (sizes, both self-join sides, the semi-prunes);
-    both are materialized once via ``_materialize`` so the shingle
-    lineage is not re-derived under every exchange.
+    ``shingled`` must be distinct per (id, shingle) — see
+    `_shared_key_pairs`, which also owns the candidate semi-prunes.
     """
-    shingled = _materialize(shingled)
-    if candidates is not None:
-        candidates = _materialize(candidates)
-    sizes = shingled.groupBy("id").agg(F.count("*").alias("sz"))
-    if candidates is not None:
-        # prune BEFORE the self-join: restrict each side to ids that appear
-        # in any candidate pair, and drop non-candidate pairs before the
-        # aggregation — otherwise the full co-shingle blowup (the thing LSH
-        # exists to avoid) happens anyway and is discarded afterwards
-        cand_ids = (
-            candidates.select(F.col("id_a").alias("id"))
-            .unionByName(candidates.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        shingled = shingled.join(cand_ids, "id", "left_semi")
-    a = shingled.alias("sa")
-    b = shingled.alias("sb")
-    pair_stream = (
-        a.join(b, F.col("sa.shingle") == F.col("sb.shingle"))
-        .filter(F.col("sa.id") < F.col("sb.id"))
-        .select(F.col("sa.id").alias("id_a"), F.col("sb.id").alias("id_b"))
-    )
-    if candidates is not None:
-        pair_stream = pair_stream.join(candidates, ["id_a", "id_b"], "left_semi")
-    inter = pair_stream.groupBy("id_a", "id_b").agg(F.count("*").alias("inter"))
-    sz_a = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
     jac = F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
     return (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
-        .withColumn("jaccard_e4", F.floor(jac * 10000 + F.lit(0.5)).cast("long"))
+        _overlap(shingled, "shingle", within=candidates)
         .filter(jac >= threshold)
-        .select("id_a", "id_b", "jaccard_e4")
+        .select("id_a", "id_b", _e4(jac).alias("jaccard_e4"))
     )
 
 
@@ -420,24 +477,12 @@ def winnow_near_duplicates(
     documents" rule.  Same scale rationale as the LSH bucket cap: one
     boilerplate fingerprint shared by 10⁶ docs is 10¹² pairs on a single
     key; a fingerprint that common carries no near-dup signal anyway.
+    ``fingerprints`` must be distinct per (id, fp) — see
+    `_shared_key_pairs`; ``winnow_fingerprints`` output is.
     """
-    # fingerprints carry the winnowing lineage (per-chunk k-gram hashing)
-    # and feed the postings count plus both self-join sides — materialize
-    fingerprints = _materialize(fingerprints)
-    if max_postings is not None:
-        rare = (
-            fingerprints.groupBy("fp")
-            .agg(F.count("*").alias("postings"))
-            .filter(F.col("postings") <= max_postings)
-            .drop("postings")
-        )
-        fingerprints = fingerprints.join(rare, "fp", "left_semi")
-    a, b = fingerprints.alias("a"), fingerprints.alias("b")
     return (
-        a.join(b, "fp")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").cast("long").alias("shared"))
+        _shared_key_pairs(fingerprints, "fp", max_postings=max_postings)
+        .select("id_a", "id_b", F.col("n").alias("shared"))
         .filter(F.col("shared") >= min_shared)
     )
 
@@ -677,39 +722,14 @@ def containment_pairs(
     semi-prune BEFORE the self-join), same integer cross-multiplied
     filter (``inter·100 ≥ pct·sz`` — no float threshold), integer
     fixed-point outputs — hash-exact against the SQL re-derivation.
+    ``shingled`` must be distinct per (id, shingle) — see
+    `_shared_key_pairs`.
     """
     if not (1 <= int(threshold_pct) <= 100):
         raise ValueError("threshold_pct must be in 1..100")
-    shingled = _materialize(shingled)
-    sizes = shingled.groupBy("id").agg(F.count("*").alias("sz"))
-    if candidates is not None:
-        candidates = _materialize(candidates)
-        cand_ids = (
-            candidates.select(F.col("id_a").alias("id"))
-            .unionByName(candidates.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        shingled = shingled.join(cand_ids, "id", "left_semi")
-    a = shingled.alias("ca")
-    b = shingled.alias("cb")
-    pair_stream = (
-        a.join(b, F.col("ca.shingle") == F.col("cb.shingle"))
-        .filter(F.col("ca.id") < F.col("cb.id"))
-        .select(F.col("ca.id").alias("id_a"), F.col("cb.id").alias("id_b"))
-    )
-    if candidates is not None:
-        pair_stream = pair_stream.join(
-            candidates, ["id_a", "id_b"], "left_semi"
-        )
-    inter = pair_stream.groupBy("id_a", "id_b").agg(
-        F.count("*").cast("long").alias("inter")
-    )
-    sz_a = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
     t = int(threshold_pct)
     return (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
+        _overlap(shingled, "shingle", within=candidates)
         .filter(
             (F.col("inter") * 100 >= F.lit(t) * F.col("sz_a"))
             | (F.col("inter") * 100 >= F.lit(t) * F.col("sz_b"))
@@ -718,8 +738,8 @@ def containment_pairs(
             "id_a",
             "id_b",
             "inter",
-            F.col("sz_a").cast("long").alias("sz_a"),
-            F.col("sz_b").cast("long").alias("sz_b"),
+            "sz_a",
+            "sz_b",
             F.expr("(inter * 10000) div sz_a").alias("cont_a_e4"),
             F.expr("(inter * 10000) div sz_b").alias("cont_b_e4"),
         )
@@ -754,7 +774,13 @@ def prefix_filter_pairs(
     frequency order is evaluated per-document.
 
     Returns (id_a, id_b, jaccard_e4), identical to
-    ``jaccard_pairs(shingled, threshold)``.
+    ``jaccard_pairs(shingled, threshold)`` under the same precondition:
+    ``shingled`` distinct per (id, shingle) (see `_shared_key_pairs`) —
+    sizes count rows while the verification intersects distinct codes.
+
+    Not built on `_shared_key_pairs`: the candidate join keeps one row
+    per prefix match so the positional filter can read both ranks, and
+    dedups the survivors instead of counting them.
     """
     from pyspark.sql import Window
 
@@ -854,7 +880,6 @@ def prefix_filter_pairs(
         cands.join(da, "id_a")
         .join(db, "id_b")
         .select("id_a", "id_b", "sza", "szb", inter.alias("inter"))
-        .withColumn("jaccard_e4", F.floor(jac * 10000 + F.lit(0.5)).cast("long"))
         .filter(jac >= threshold)
-        .select("id_a", "id_b", "jaccard_e4")
+        .select("id_a", "id_b", _e4(jac).alias("jaccard_e4"))
     )

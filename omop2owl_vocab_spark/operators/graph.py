@@ -25,7 +25,13 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from omop2owl_vocab_spark.operators.dedup import (
+    _overlap,
+    _purge_keys,
+    _shared_key_pairs,
+)
 from omop2owl_vocab_spark.operators.fixpoint import iterate
+from omop2owl_vocab_spark.operators.text import _e4
 
 _SCALE = 10**9
 
@@ -108,6 +114,18 @@ def _nodes(e: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
         e.select(F.col(a).alias("node"))
         .unionByName(e.select(F.col(b).alias("node")))
         .distinct()
+    )
+
+
+def _basket_items(df: DataFrame, basket_col: str, item_col: str) -> DataFrame:
+    """Distinct ``(basket, item)`` rows, checkpointed: the input of the
+    basket pair join and of every support count."""
+    return (
+        df.select(
+            F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
+        )
+        .distinct()
+        .localCheckpoint(eager=True)
     )
 
 
@@ -530,10 +548,10 @@ def cooccurrence_pairs(
     recommend/cluster pass downstream consumes (co-purchased parts,
     co-cited concepts, co-edited files).
 
-    Plan shape: distinct (basket, item) — one hash-agg — then a
-    basket-keyed self-join with ``item_a < item_b`` (each unordered
-    pair once, join-time) and one pair-keyed count.  Pair fan-out is
-    Σ_b |b|²/2, bounded by the basket size, NOT the corpus — the same
+    Plan shape: distinct (basket, item) — one hash-agg — then the
+    shared-key pair join `dedup._shared_key_pairs` keyed on the basket.
+    Pair fan-out is Σ_b |b|²/2, bounded by the basket size, NOT the
+    corpus — the same
     quadratic-inside-blocks shape as `resolve.fuzzy_pairs`, with the
     same escape hatch: ``max_basket_size`` drops degenerate baskets
     BEFORE the join (a basket holding half the catalog — the
@@ -543,40 +561,20 @@ def cooccurrence_pairs(
     """
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
-    # materialized once (r6): the distinct feeds both self-join sides
-    # (plus the optional basket-size prune) — without it each consumer
-    # re-scans and re-dedups the transaction table (same pattern as
-    # association_rules, which already checkpoints here)
-    items = (
-        df.select(
-            F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if max_basket_size is not None:
-        if max_basket_size < 2:
-            raise ValueError("max_basket_size must be >= 2")
-        ok = (
-            items.groupBy("basket")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") <= max_basket_size)
-            .select("basket")
-        )
-        items = items.join(ok, "basket", "left_semi")
-    a = items.alias("pa")
-    b = items.alias("pb")
+    if max_basket_size is not None and max_basket_size < 2:
+        raise ValueError("max_basket_size must be >= 2")
     return (
-        a.join(
-            b,
-            (F.col("pa.basket") == F.col("pb.basket"))
-            & (F.col("pa.item") < F.col("pb.item")),
+        _shared_key_pairs(
+            _basket_items(df, basket_col, item_col),
+            "basket",
+            id_col="item",
+            max_postings=max_basket_size,
         )
-        .groupBy(
-            F.col("pa.item").alias("item_a"),
-            F.col("pb.item").alias("item_b"),
+        .select(
+            F.col("id_a").alias("item_a"),
+            F.col("id_b").alias("item_b"),
+            F.col("n").alias("n_baskets"),
         )
-        .agg(F.count("*").cast("long").alias("n_baskets"))
         .filter(F.col("n_baskets") >= min_count)
     )
 
@@ -650,40 +648,26 @@ def neighbor_jaccard(
     role-equivalence primitive (two files imported by the same modules,
     two users touching the same items).
 
-    Same shape as the set-similarity joins in `dedup`: adjacency long
-    form (node, neighbor) with self-loops dropped and duplicate edges
-    collapsed, self-joined on the NEIGHBOR key — only pairs sharing a
-    neighbor are ever materialized, so the blowup is bounded by
-    sum(deg²) over neighbors; skewed hub neighbors are the classic
+    Same verifier as `dedup.jaccard_pairs` (`dedup._overlap`): the
+    deduplicated adjacency (node, neighbor) pair-joined on the NEIGHBOR
+    key — only pairs sharing a neighbor are ever materialized, so the
+    blowup is bounded by sum(deg²) over neighbors; skewed hub neighbors
+    are the classic
     hazard and should be capped upstream (compose with `k_core` or a
     degree filter) exactly like LSH bucket caps.
     """
+    uni = F.col("sz_a") + F.col("sz_b") - F.col("inter")
+    jac = F.col("inter") / uni
     adj = _undirected_adjacency(edges, src_col, dst_col)
-    deg = adj.groupBy("node").agg(F.count("*").alias("deg"))
-    common = (
-        adj.alias("a")
-        .join(adj.alias("b"), F.col("a.nbr") == F.col("b.nbr"))
-        .filter(F.col("a.node") < F.col("b.node"))
-        .groupBy(
-            F.col("a.node").alias("node_a"), F.col("b.node").alias("node_b")
-        )
-        .agg(F.count("*").cast("long").alias("common"))
-        .filter(F.col("common") >= min_common)
-    )
-    da = deg.select(F.col("node").alias("node_a"), F.col("deg").alias("__da"))
-    db = deg.select(F.col("node").alias("node_b"), F.col("deg").alias("__db"))
-    uni = F.col("__da") + F.col("__db") - F.col("common")
-    jac = F.col("common") / uni
     return (
-        common.join(da, "node_a")
-        .join(db, "node_b")
-        .filter(jac >= threshold)
+        _overlap(adj, "nbr", id_col="node")
+        .filter((F.col("inter") >= min_common) & (jac >= threshold))
         .select(
-            "node_a",
-            "node_b",
-            "common",
+            F.col("id_a").alias("node_a"),
+            F.col("id_b").alias("node_b"),
+            F.col("inter").alias("common"),
             uni.cast("long").alias("union_sz"),
-            F.floor(jac * 10000 + F.lit(0.5)).cast("long").alias("jaccard_e4"),
+            _e4(jac).alias("jaccard_e4"),
         )
     )
 
@@ -898,7 +882,7 @@ def link_prediction(
     partners but no direct mapping; co-review / co-purchase
     recommendation).
 
-    Plan shape: adjacency self-join on the shared-NEIGHBOR key (only
+    Plan shape: `dedup._shared_key_pairs` on the NEIGHBOR key (only
     pairs that share a neighbor ever materialize — same sum(deg²)
     bound and hub hazard as `neighbor_jaccard`; cap hubs upstream via
     `k_core` or a degree filter), one hash-agg to ``cn``, a LEFT ANTI
@@ -913,13 +897,12 @@ def link_prediction(
     adj = _undirected_adjacency(edges, src_col, dst_col)
     deg = adj.groupBy("node").agg(F.count("*").cast("long").alias("deg"))
     cn = (
-        adj.alias("a")
-        .join(adj.alias("b"), F.col("a.nbr") == F.col("b.nbr"))
-        .filter(F.col("a.node") < F.col("b.node"))
-        .groupBy(
-            F.col("a.node").alias("node_a"), F.col("b.node").alias("node_b")
+        _shared_key_pairs(adj, "nbr", id_col="node")
+        .select(
+            F.col("id_a").alias("node_a"),
+            F.col("id_b").alias("node_b"),
+            F.col("n").alias("cn"),
         )
-        .agg(F.count("*").cast("long").alias("cn"))
         .filter(F.col("cn") >= min_common)
     )
     und = adj.filter(F.col("node") < F.col("nbr")).select(
@@ -1045,30 +1028,20 @@ def association_rules(
 
     Plan shape: one distinct (basket, item) hash-agg shared by ALL
     downstream counts → per-item support (hash-agg) + one-row basket
-    count (broadcast back via crossJoin) + the basket-keyed pair
-    self-join from `cooccurrence_pairs`' shape (``item_a < item_b``
-    then unioned both ways — each unordered pair joined once, emitted
-    twice) → two broadcast-friendly support joins.  Same Σ|b|² pair
-    fan-out bound and the same ``max_basket_size`` degenerate-basket
-    escape hatch.
+    count (broadcast back via crossJoin) + the basket-keyed pair join
+    of `cooccurrence_pairs` (unioned both ways — each unordered pair
+    joined once, emitted twice) → two broadcast-friendly support joins.
+    Same Σ|b|² pair fan-out bound and the same ``max_basket_size``
+    degenerate-basket escape hatch.
     """
     if min_pair_count < 1:
         raise ValueError("min_pair_count must be >= 1")
-    items = (
-        df.select(
-            F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    items = _basket_items(df, basket_col, item_col)
     if max_basket_size is not None:
-        sizes = items.groupBy("basket").agg(F.count("*").alias("__bs"))
-        items = (
-            items.join(
-                sizes.filter(F.col("__bs") <= max_basket_size), "basket"
-            )
-            .select("basket", "item")
-            .localCheckpoint(eager=True)
+        # purged before, not inside, the pair join: support and
+        # n_baskets must not count the dropped baskets either
+        items = _purge_keys(items, "basket", max_basket_size).localCheckpoint(
+            eager=True
         )
     support = items.groupBy("item").agg(
         F.count("*").cast("long").alias("n_item")
@@ -1076,25 +1049,18 @@ def association_rules(
     n_baskets = items.select("basket").distinct().agg(
         F.count("*").cast("long").alias("n_baskets")
     )
-    pairs = (
-        items.alias("a")
-        .join(items.alias("b"), F.col("a.basket") == F.col("b.basket"))
-        .filter(F.col("a.item") < F.col("b.item"))
-        .groupBy(
-            F.col("a.item").alias("item_a"), F.col("b.item").alias("item_b")
-        )
-        .agg(F.count("*").cast("long").alias("n_both"))
-        .filter(F.col("n_both") >= min_pair_count)
+    pairs = _shared_key_pairs(items, "basket", id_col="item").filter(
+        F.col("n") >= min_pair_count
     )
     directed = pairs.select(
-        F.col("item_a").alias("antecedent"),
-        F.col("item_b").alias("consequent"),
-        "n_both",
+        F.col("id_a").alias("antecedent"),
+        F.col("id_b").alias("consequent"),
+        F.col("n").alias("n_both"),
     ).unionByName(
         pairs.select(
-            F.col("item_b").alias("antecedent"),
-            F.col("item_a").alias("consequent"),
-            "n_both",
+            F.col("id_b").alias("antecedent"),
+            F.col("id_a").alias("consequent"),
+            F.col("n").alias("n_both"),
         )
     )
     sa = support.select(
