@@ -905,11 +905,11 @@ def _dd_minhash_verified(spark, sf_dir):
         word_shingles,
     )
 
-    from omop2owl_vocab_spark.operators.dedup import _materialize
+    from omop2owl_vocab_spark.operators.fixpoint import materialize
 
     docs = _docs64(spark, sf_dir)
     # shared by the signature chain AND the verification (guide §5)
-    sh = _materialize(word_shingles(docs))
+    sh = materialize(word_shingles(docs))
     cand = lsh_candidate_pairs(
         minhash_signatures(sh, 32, hash_family="md5"),
         bands=8,

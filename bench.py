@@ -3,7 +3,8 @@
 Runs every ``__spark_entry__.queries()`` entry at ``$SPARK_GRAFT_SF_DIR``
 (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``, plus the
 full KG pipeline end-to-end (synthetic code_files → triples) reporting
-triples/sec — the BASELINE.json headline metric.
+triples/sec — the BASELINE.json headline metric.  ``$SPARK_GRAFT_CPUS``
+defaults to the number of CPUs this process may run on.
 
 Noise discipline (r3 verdict #2): the whole suite is swept
 ``$SPARK_GRAFT_BENCH_REPS`` times (default 3) in INTERLEAVED rounds —
@@ -58,7 +59,9 @@ def _force(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     try:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:

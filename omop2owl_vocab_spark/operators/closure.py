@@ -44,7 +44,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from omop2owl_vocab_spark.operators.fixpoint import iterate, truncation
+from omop2owl_vocab_spark.operators.fixpoint import (
+    checkpointing,
+    iterate,
+    materialize,
+)
 
 
 def ancestor_closure(
@@ -69,67 +73,68 @@ def ancestor_closure(
     fixpoint — which, for any acyclic input, means ``max_iter`` <
     ⌈log2(depth)⌉ + 1; for cyclic input it is the cycle detector.
     """
-    ckpt = truncation(edges.sparkSession, checkpoint_dir, "tc")
-    pairs = ckpt(
-        edges.select(
-            F.col(parent_col).alias("ancestor"),
-            F.col(child_col).alias("descendant"),
-        )
-        .filter(F.col("ancestor") != F.col("descendant"))
-        .distinct()
-        .select(
-            "ancestor",
-            "descendant",
-            F.lit(1).cast("long").alias("min_levels"),
-            F.lit(1).cast("long").alias("max_levels"),
-        )
-    )
-
-    def _sig(df: DataFrame) -> tuple:
-        """(n, Σmin, Σmax): strictly monotone until the fixpoint."""
-        return tuple(
-            df.agg(
-                F.count("*"), F.sum("min_levels"), F.sum("max_levels")
-            ).collect()[0]
-        )
-
-    def step(pairs: DataFrame, _r: int) -> DataFrame:
-        mid = (
-            pairs.alias("l")
-            .join(
-                pairs.alias("r"),
-                F.col("l.descendant") == F.col("r.ancestor"),
-            )
-            .select(
-                F.col("l.ancestor").alias("ancestor"),
-                F.col("r.descendant").alias("descendant"),
-                (F.col("l.min_levels") + F.col("r.min_levels")).alias(
-                    "min_levels"
-                ),
-                (F.col("l.max_levels") + F.col("r.max_levels")).alias(
-                    "max_levels"
-                ),
+    with checkpointing(edges.sparkSession, checkpoint_dir, "tc") as sub:
+        pairs = materialize(
+            edges.select(
+                F.col(parent_col).alias("ancestor"),
+                F.col(child_col).alias("descendant"),
             )
             .filter(F.col("ancestor") != F.col("descendant"))
-        )
-        return (
-            pairs.unionByName(mid)
-            .groupBy("ancestor", "descendant")
-            .agg(
-                F.min("min_levels").alias("min_levels"),
-                F.max("max_levels").alias("max_levels"),
+            .distinct()
+            .select(
+                "ancestor",
+                "descendant",
+                F.lit(1).cast("long").alias("min_levels"),
+                F.lit(1).cast("long").alias("max_levels"),
             )
         )
 
-    sig0 = _sig(pairs)
-    pairs, stats = iterate(
-        pairs,
-        step,
-        max_rounds=max_iter,
-        signature=_sig,
-        initial=sig0,
-        truncate=ckpt,
-    )
+        def _sig(df: DataFrame) -> tuple:
+            """(n, Σmin, Σmax): strictly monotone until the fixpoint."""
+            return tuple(
+                df.agg(
+                    F.count("*"), F.sum("min_levels"), F.sum("max_levels")
+                ).collect()[0]
+            )
+
+        def step(pairs: DataFrame, _r: int) -> DataFrame:
+            mid = (
+                pairs.alias("l")
+                .join(
+                    pairs.alias("r"),
+                    F.col("l.descendant") == F.col("r.ancestor"),
+                )
+                .select(
+                    F.col("l.ancestor").alias("ancestor"),
+                    F.col("r.descendant").alias("descendant"),
+                    (F.col("l.min_levels") + F.col("r.min_levels")).alias(
+                        "min_levels"
+                    ),
+                    (F.col("l.max_levels") + F.col("r.max_levels")).alias(
+                        "max_levels"
+                    ),
+                )
+                .filter(F.col("ancestor") != F.col("descendant"))
+            )
+            return (
+                pairs.unionByName(mid)
+                .groupBy("ancestor", "descendant")
+                .agg(
+                    F.min("min_levels").alias("min_levels"),
+                    F.max("max_levels").alias("max_levels"),
+                )
+            )
+
+        sig0 = _sig(pairs)
+        pairs, stats = iterate(
+            pairs,
+            step,
+            max_rounds=max_iter,
+            signature=_sig,
+            initial=sig0,
+        )
+    if sub is not None:
+        stats["checkpoint_subdir"] = sub
     stats["pairs_per_round"] = [sig0[0]] + [
         sig[0] for sig in stats.pop("signatures")
     ]

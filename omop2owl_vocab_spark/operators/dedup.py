@@ -27,39 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from omop2owl_vocab_spark.operators.fixpoint import materialize
 from omop2owl_vocab_spark.operators.text import RE2_WS, _e4
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Materialize a multiply-consumed intermediate once per invocation.
-
-    The set-similarity composites consume the shingled corpus from 3-6
-    distinct shuffle subtrees (sizes, frequency, both self-join sides,
-    candidate semi-prune); without materialization Catalyst re-derives
-    the whole tokenize/shingle lineage under every exchange — the r6
-    plan audit measured 48 parquet scans / 140 exchanges / 0 reused
-    exchanges in ``dd_prefix_join`` alone, with the shingle projection
-    the dominant cost (guide §5: cache exactly when an intermediate is
-    reused and recomputing beats memory pressure; §3.3: materializing an
-    intermediate truncates oversized plans).
-
-    ``localCheckpoint(eager=True)`` rather than ``persist()``: blocks
-    are written once per *invocation* and freed by the ContextCleaner
-    when the query's RDD is dropped — a fresh call rebuilds from the
-    parquet inputs, so repeated bench sweeps never reuse an earlier
-    run's bytes (no cross-run result caching), and no cache entry
-    outlives the returned plan.  The cluster-reliability caveat is the
-    one `fixpoint.Truncation` documents for its localCheckpoint default.
-
-    A frame whose analyzed plan is already a bare ``LogicalRDD`` (an
-    earlier checkpoint's output, or a frame built from an RDD or local
-    rows) is returned unchanged, so a composite that passes a
-    materialized frame down (``near_duplicate_groups`` →
-    ``jaccard_pairs``) checkpoints it once, not twice.
-    """
-    if df._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD":
-        return df
-    return df.localCheckpoint(eager=True)
 
 
 def _purge_keys(rows: DataFrame, key: str | list[str], cap: int) -> DataFrame:
@@ -103,11 +72,11 @@ def _shared_key_pairs(
     each unordered pair is emitted once per shared key.
     """
     keys = [key] if isinstance(key, str) else list(key)
-    rows = _materialize(rows)
+    rows = materialize(rows)
     if max_postings is not None:
         rows = _purge_keys(rows, keys, max_postings)
     if within is not None:
-        within = _materialize(within)
+        within = materialize(within)
         ids = (
             within.select(F.col("id_a").alias(id_col))
             .unionByName(within.select(F.col("id_b").alias(id_col)))
@@ -141,7 +110,7 @@ def _overlap(
     count plus each side's full row count (set size, taken before any
     ``within`` pruning) — the shared input of the Jaccard, containment
     and neighbor-Jaccard verifiers."""
-    rows = _materialize(rows)
+    rows = materialize(rows)
     sizes = rows.groupBy(id_col).agg(F.count("*").alias("sz"))
     sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
     sz_b = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
@@ -524,7 +493,7 @@ def near_duplicate_groups(
 
     # the shingled corpus feeds BOTH the minhash signature chain and the
     # exact-Jaccard verification subtrees — materialize it once
-    sh = _materialize(word_shingles(df, n, text_col=text_col, id_col=id_col))
+    sh = materialize(word_shingles(df, n, text_col=text_col, id_col=id_col))
     cand = lsh_candidate_pairs(
         minhash_signatures(sh, num_hashes, hash_family=hash_family),
         bands=bands,
@@ -784,7 +753,7 @@ def prefix_filter_pairs(
     """
     from pyspark.sql import Window
 
-    shingled = _materialize(shingled)
+    shingled = materialize(shingled)
     freq = shingled.groupBy("shingle").agg(F.count("*").alias("__freq"))
     # Dictionary-encode each distinct shingle to a long code (bijective
     # within the run — monotonically_increasing_id over the materialized
@@ -795,10 +764,10 @@ def prefix_filter_pairs(
     # narrower types, shuffle keys not payloads).  The prefix order
     # becomes (__freq, __code) — still one total order shared by every
     # document, which is the only property prefix filtering needs.
-    lex = _materialize(
+    lex = materialize(
         freq.withColumn("__code", F.monotonically_increasing_id())
     )
-    coded = _materialize(
+    coded = materialize(
         shingled.join(lex, "shingle").select("id", "__freq", "__code")
     )
     w = Window.partitionBy("id").orderBy("__freq", "__code")
@@ -810,7 +779,7 @@ def prefix_filter_pairs(
         F.count("*").over(szw).alias("__sz"),
     )
     p_len = F.col("__sz") - F.ceil(F.col("__sz") * F.lit(threshold)) + 1
-    prefix = _materialize(
+    prefix = materialize(
         ranked.filter(F.col("__rnk") <= p_len).select(
             "id", "__code", "__rnk", "__sz"
         )
@@ -858,7 +827,7 @@ def prefix_filter_pairs(
     # at sf0.1) with two key joins that attach each side's code array to
     # the candidate row (guide §2.3: shuffle candidate keys, not the
     # pair-occurrence stream).
-    doc_sets = _materialize(
+    doc_sets = materialize(
         coded.groupBy("id").agg(
             F.collect_list("__code").alias("toks"),
             F.count("*").cast("long").alias("sz"),

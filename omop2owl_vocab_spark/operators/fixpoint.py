@@ -1,61 +1,92 @@
-"""One round driver for every iterative graph operator.
+"""One round driver for every iterative graph operator, and the one
+materialization policy for every lineage cut in the operators.
 
 Connected components, the ancestor closure and the nine iterative
 operators in `operators/graph.py` supply only a step expression and,
-optionally, a per-round signature (one aggregate over the truncated
+optionally, a per-round signature (one aggregate over the materialized
 state) with a fixpoint test; `iterate` owns the loop, the round count,
-the early exit and the lineage truncation.  Without truncation the plan
-doubles per round and the driver runs out of memory planning round ~15.
-The driver adds no Spark job: a round costs the step's own jobs, the
-truncation, and at most the one signature aggregate.
+the early exit and the lineage cut.  Without the cut the plan doubles
+per round and the driver runs out of memory planning round ~15.  The
+driver adds no Spark job: a round costs the step's own jobs, the
+materialization, and at most the one signature aggregate.
 
-`Truncation` is ``localCheckpoint(eager=True)`` by default (fastest, but
-executor-local blocks are lost under executor failure or dynamic
-deallocation on a real cluster), or reliable ``checkpoint(eager=True)``
-into a fresh ``<dir>/<name>-<uuid>`` subdirectory.  Spark never deletes
-reliable checkpoint files itself and the result still reads from them,
-so the caller deletes ``stats['checkpoint_subdir']`` once the result is
-materialized elsewhere.  ``setCheckpointDir`` is SparkContext-global:
-the unique subdir keeps concurrent operators from interleaving files.
+`materialize` is the only place the package cuts lineage.  Iterative
+states, the static frames an operator re-joins every round, and the
+set-similarity composites' multiply-consumed intermediates all go
+through it (without it Catalyst re-derives the whole tokenize/shingle
+lineage under every exchange — the r6 plan audit measured 48 parquet
+scans / 140 exchanges / 0 reused exchanges in ``dd_prefix_join`` alone).
+
+- **Local by default**: ``localCheckpoint(eager=True)`` rather than
+  ``persist()``.  Blocks are written once per *invocation* and freed by
+  the ContextCleaner when the query's RDD is dropped — a fresh call
+  rebuilds from its inputs, so repeated bench sweeps never reuse an
+  earlier run's bytes and no cache entry outlives the returned plan.
+  Executor-local blocks are lost under executor failure or dynamic
+  deallocation on a real cluster.
+- **Reliable inside `checkpointing`**: ``checkpoint(eager=True)`` into a
+  fresh ``<dir>/<name>-<uuid>`` subdirectory.  Spark never deletes
+  reliable checkpoint files itself and the result still reads from
+  them, so whoever opened the scope deletes the subdir once the result
+  is materialized elsewhere.  ``setCheckpointDir`` is
+  SparkContext-global: the unique subdir keeps successive operators
+  from interleaving files, but two scopes open at once in different
+  threads share the one setting.  The scope is a context variable, so
+  it covers every operator called inside it, nested ones included.
+- **Skip**: a frame whose analyzed plan is already a bare ``LogicalRDD``
+  (an earlier checkpoint's output on either path, or a frame built from
+  an RDD or local rows) is returned unchanged, so a composite that
+  passes a materialized frame down (``near_duplicate_groups`` →
+  ``jaccard_pairs``) cuts it once, not twice.
 """
 
 from __future__ import annotations
 
 import operator
 import uuid
-from dataclasses import dataclass
-from typing import Any, Callable
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-@dataclass(frozen=True)
-class Truncation:
-    """Cut a frame from its lineage: local checkpoint when ``subdir`` is
-    None, reliable checkpoint (into ``subdir``) otherwise."""
-
-    subdir: str | None = None
-
-    def __call__(self, df: DataFrame) -> DataFrame:
-        if self.subdir is None:
-            return df.localCheckpoint(eager=True)
-        return df.checkpoint(eager=True)
+# the reliable checkpoint subdir in force, None = local checkpoints
+_RELIABLE: ContextVar[str | None] = ContextVar("_RELIABLE", default=None)
 
 
-LOCAL = Truncation()
+def materialize(df: DataFrame) -> DataFrame:
+    """Cut ``df`` from its lineage under the policy in force (see the
+    module docstring); a bare ``LogicalRDD`` comes back unchanged."""
+    if df._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD":
+        return df
+    if _RELIABLE.get() is None:
+        return df.localCheckpoint(eager=True)
+    return df.checkpoint(eager=True)
 
 
-def truncation(
+@contextmanager
+def checkpointing(
     spark: SparkSession, checkpoint_dir: str | None, name: str
-) -> Truncation:
-    """`LOCAL` when ``checkpoint_dir`` is None; otherwise point the
-    SparkContext at a fresh ``<checkpoint_dir>/<name>-<uuid>`` subdir and
-    return the reliable truncation writing there."""
+) -> Iterator[str | None]:
+    """Make `materialize` reliable for the body: point the SparkContext
+    at a fresh ``<checkpoint_dir>/<name>-<uuid>`` subdir and yield it.
+    With ``checkpoint_dir`` None, yield None and leave the enclosing
+    policy in force.  On exit the enclosing scope, if any, gets its
+    subdir back (``getCheckpointDir`` would not do: Spark appends its
+    own uuid to the path it was given)."""
     if checkpoint_dir is None:
-        return LOCAL
+        yield None
+        return
     subdir = f"{checkpoint_dir.rstrip('/')}/{name}-{uuid.uuid4().hex}"
     spark.sparkContext.setCheckpointDir(subdir)
-    return Truncation(subdir)
+    token = _RELIABLE.set(subdir)
+    try:
+        yield subdir
+    finally:
+        _RELIABLE.reset(token)
+        outer = _RELIABLE.get()
+        if outer is not None:
+            spark.sparkContext.setCheckpointDir(outer)
 
 
 def iterate(
@@ -66,33 +97,32 @@ def iterate(
     signature: Callable[[Any], Any] | None = None,
     converged: Callable[[Any, Any], bool] = operator.eq,
     initial: Any = None,
-    truncate: Truncation = LOCAL,
 ) -> tuple[Any, dict]:
-    """Run ``state = truncate(step(state, r))`` for rounds r = 1, 2, …
+    """Run ``state = materialize(step(state, r))`` for rounds r = 1, 2, …
     and return ``(state, stats)``.
 
     ``state`` is a frame, or a tuple whose first element is the frame
-    the driver truncates and whose other elements pass through (a step
-    that needs a second frame materialized mid-round calls ``truncate``
-    on it itself).  The initial state is taken as already materialized.
+    the driver materializes and whose other elements pass through (a
+    step that needs a second frame materialized mid-round calls
+    `materialize` on it itself).  The initial state is materialized the
+    same way before round 1 (a no-op for a frame that already is).
 
     Without ``signature`` exactly ``max_rounds`` rounds run.  With it,
     each round ends with ``sig = signature(state)`` and the loop stops
     once ``converged(previous_sig, sig)`` holds; the first round compares
     against ``initial``.  ``stats`` holds ``rounds``, ``converged`` (True
-    only when the test fired), ``signatures`` (one per round) and, on the
-    reliable path, ``checkpoint_subdir``.
+    only when the test fired) and ``signatures`` (one per round).
     """
+
+    def cut(s: Any) -> Any:
+        if isinstance(s, tuple):
+            return (materialize(s[0]), *s[1:])
+        return materialize(s)
+
     stats: dict = {"rounds": 0, "converged": False, "signatures": []}
-    if truncate.subdir is not None:
-        stats["checkpoint_subdir"] = truncate.subdir
-    prev = initial
+    state, prev = cut(state), initial
     for r in range(1, max_rounds + 1):
-        new = step(state, r)
-        if isinstance(new, tuple):
-            state = (truncate(new[0]), *new[1:])
-        else:
-            state = truncate(new)
+        state = cut(step(state, r))
         stats["rounds"] = r
         if signature is None:
             continue

@@ -10,9 +10,10 @@ are bit-identical in any engine (each DuckDB oracle unrolls the same
 recurrence) and independent of partitioning and summation order.
 
 Every iterative operator runs its rounds on the `operators/fixpoint.py`
-driver, which truncates lineage per round.  Fixed round counts (not
-convergence tests) where the oracle must unroll the recurrence: cost is
-known up front.  Each round is a few node-keyed hash joins and
+driver, which truncates lineage per round; every other lineage cut here
+goes through the same `fixpoint.materialize` policy.  Fixed round counts
+(not convergence tests) where the oracle must unroll the recurrence:
+cost is known up front.  Each round is a few node-keyed hash joins and
 map-side-combined hash aggregates, so in-degree skew is absorbed by
 Spark's two-phase aggregation.  Reference analog: none (mandated
 kg/graph surface).
@@ -30,7 +31,7 @@ from omop2owl_vocab_spark.operators.dedup import (
     _purge_keys,
     _shared_key_pairs,
 )
-from omop2owl_vocab_spark.operators.fixpoint import iterate
+from omop2owl_vocab_spark.operators.fixpoint import iterate, materialize
 from omop2owl_vocab_spark.operators.text import _e4
 
 _SCALE = 10**9
@@ -46,12 +47,10 @@ def _undirected_simple(
     e = edges.select(
         F.col(src_col).alias("a"), F.col(dst_col).alias("b")
     ).filter(F.col("a") != F.col("b"))
-    return (
+    return materialize(
         e.select(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+        ).distinct()
     )
 
 
@@ -80,7 +79,7 @@ def _orient_by_degree(und: DataFrame, deg: DataFrame) -> DataFrame:
         F.col("node").alias("b"),
         F.struct("deg", F.col("node").alias("nn")).alias("kb"),
     )
-    return (
+    return materialize(
         und.join(da, "a")
         .join(db, "b")
         .select(
@@ -91,7 +90,6 @@ def _orient_by_degree(und: DataFrame, deg: DataFrame) -> DataFrame:
             .otherwise(F.col("a"))
             .alias("v"),
         )
-        .localCheckpoint(eager=True)
     )
 
 
@@ -120,12 +118,10 @@ def _nodes(e: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
 def _basket_items(df: DataFrame, basket_col: str, item_col: str) -> DataFrame:
     """Distinct ``(basket, item)`` rows, checkpointed: the input of the
     basket pair join and of every support count."""
-    return (
+    return materialize(
         df.select(
             F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+        ).distinct()
     )
 
 
@@ -134,10 +130,10 @@ def _undirected_adjacency(
 ) -> DataFrame:
     """Long-form undirected adjacency ``(node, nbr)`` over `_symmetric`,
     checkpointed; the shared input of the neighbor-set operators."""
-    return (
-        _symmetric(edges, src_col, dst_col)
-        .select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
-        .localCheckpoint(eager=True)
+    return materialize(
+        _symmetric(edges, src_col, dst_col).select(
+            F.col("src").alias("node"), F.col("dst").alias("nbr")
+        )
     )
 
 
@@ -179,10 +175,9 @@ def _integer_pagerank(
         raise ValueError("damping_pct must be in 0..100")
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    e = (
+    e = materialize(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     nodes = _nodes(e)
     seed = F.lit(1)
@@ -193,13 +188,13 @@ def _integer_pagerank(
             "left",
         ).na.fill({"__seed": 0})
         seed = F.col("__seed")
-    nodes = nodes.localCheckpoint(eager=True)
+    nodes = materialize(nodes)
     deg = e.groupBy("src").agg(F.count("*").cast("long").alias("deg"))
-    ed = e.join(deg, "src").localCheckpoint(eager=True)
+    ed = materialize(e.join(deg, "src"))
     base = (100 - damping_pct) * _SCALE // 100
     ranks = nodes.select(
         "node", (seed * _SCALE).cast("long").alias("rank_e9")
-    ).localCheckpoint(eager=True)
+    )
 
     def step(ranks: DataFrame, _r: int) -> DataFrame:
         contrib = (
@@ -385,22 +380,19 @@ def bfs_distances(
         e = e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    e = e.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint(
-        eager=True
+    e = materialize(e.filter(F.col("src") != F.col("dst")).distinct())
+    dist = materialize(
+        sources.select("node", F.lit(0).cast("long").alias("dist")).distinct()
     )
-    dist = sources.select(
-        F.col("node"), F.lit(0).cast("long").alias("dist")
-    ).distinct().localCheckpoint(eager=True)
-    frontier = dist.select("node").localCheckpoint(eager=True)
+    frontier = materialize(dist.select("node"))
 
     def step(state: tuple, h: int) -> tuple:
         dist, frontier = state
-        nxt = (
+        nxt = materialize(
             frontier.join(e, frontier["node"] == e["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(dist.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
         )
         return (
             dist.unionByName(
@@ -441,11 +433,9 @@ def label_propagation(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e = _symmetric(edges, src_col, dst_col).localCheckpoint(eager=True)
-    labels = (
-        _nodes(e)
-        .select("node", F.col("node").cast("long").alias("label"))
-        .localCheckpoint(eager=True)
+    e = materialize(_symmetric(edges, src_col, dst_col))
+    labels = _nodes(e).select(
+        "node", F.col("node").cast("long").alias("label")
     )
 
     def step(labels: DataFrame, _r: int) -> DataFrame:
@@ -494,12 +484,10 @@ def bellman_ford(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
         F.col(weight_col).cast("long").alias("w"),
-    ).localCheckpoint(eager=True)
-    dist = (
-        sources.select("node", F.lit(0).cast("long").alias("dist"))
-        .distinct()
-        .localCheckpoint(eager=True)
     )
+    dist = sources.select(
+        "node", F.lit(0).cast("long").alias("dist")
+    ).distinct()
     return _min_relaxation(
         dist,
         e,
@@ -522,6 +510,7 @@ def _min_relaxation(
     rows to candidate ``(node, value)`` rows, and each node keeps the
     minimum of its old value and its candidates."""
     col = state.columns[1]
+    e = materialize(e)
 
     def step(state: DataFrame, _r: int) -> DataFrame:
         cand = relax(state.join(e, state["node"] == e["src"]))
@@ -605,7 +594,7 @@ def dag_longest_levels(
     ).filter(F.col("child") != F.col("parent"))
     levels = _nodes(e, "child", "parent").select(
         "node", F.lit(0).cast("long").alias("level")
-    ).localCheckpoint(eager=True)
+    )
 
     def step(levels: DataFrame, _r: int) -> DataFrame:
         cand = e.join(levels, e.parent == levels.node).select(
@@ -952,13 +941,12 @@ def hits_fixed(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    e = (
+    e = materialize(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    nodes = _nodes(e).localCheckpoint(eager=True)
+    nodes = materialize(_nodes(e))
 
     def half(
         scores: DataFrame, score: str, frm: str, to: str, col: str
@@ -993,13 +981,10 @@ def hits_fixed(
         )
 
     def step(state: tuple, _r: int) -> tuple:
-        auth = half(state[0], "hub_e9", "src", "dst", "auth_e9")
-        auth = auth.localCheckpoint(eager=True)
+        auth = materialize(half(state[0], "hub_e9", "src", "dst", "auth_e9"))
         return half(auth, "auth_e9", "dst", "src", "hub_e9"), auth
 
-    hub = nodes.select(
-        "node", F.lit(_SCALE).cast("long").alias("hub_e9")
-    ).localCheckpoint(eager=True)
+    hub = nodes.select("node", F.lit(_SCALE).cast("long").alias("hub_e9"))
     (hub, auth), _ = iterate((hub, None), step, max_rounds=iterations)
     return hub.join(auth, "node").select("node", "hub_e9", "auth_e9")
 
@@ -1040,9 +1025,7 @@ def association_rules(
     if max_basket_size is not None:
         # purged before, not inside, the pair join: support and
         # n_baskets must not count the dropped baskets either
-        items = _purge_keys(items, "basket", max_basket_size).localCheckpoint(
-            eager=True
-        )
+        items = materialize(_purge_keys(items, "basket", max_basket_size))
     support = items.groupBy("item").agg(
         F.count("*").cast("long").alias("n_item")
     )
@@ -1195,14 +1178,13 @@ def temporal_reachability(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
         F.col(time_col).alias("t"),
-    ).localCheckpoint(eager=True)
+    )
     arr = (
         sources.select(
             F.col(node_col).alias("node"), F.col(start_col).alias("arrival")
         )
         .groupBy("node")
         .agg(F.min("arrival").alias("arrival"))
-        .localCheckpoint(eager=True)
     )
     return _min_relaxation(
         arr,

@@ -158,7 +158,3 @@ def to_ntriples(triples: DataFrame) -> DataFrame:
     return triples.select(
         F.concat_ws(" ", iri("subj"), iri("pred"), obj, F.lit(".")).alias("line")
     )
-
-
-def write_ntriples(triples: DataFrame, path: str) -> None:
-    to_ntriples(triples).write.mode("overwrite").text(path)

@@ -45,9 +45,10 @@ _DEFAULTS = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "100000",
     # Optimizer-inference toggle, OFF for this engine's workload: the
     # iterative operators (connected components, DAG layering, PageRank,
-    # BFS/LPA/k-core rounds) re-join a localCheckpoint()ed state frame
-    # against a static edge list every round, and LogicalRDD PRESERVES
-    # the origin plan's constraints across the checkpoint, so
+    # BFS/LPA/k-core rounds) re-join a state frame materialized by
+    # `fixpoint.materialize` (a local or reliable checkpoint) against a
+    # static edge list every round, and LogicalRDD PRESERVES the origin
+    # plan's constraints across the checkpoint, so
     # InferFiltersFromConstraints compounds the join-inferred predicate
     # round over round — measured: the kg_dag_levels scan filter reached
     # 112 KB of nested (div/mod) conjuncts by round 4 and per-round time

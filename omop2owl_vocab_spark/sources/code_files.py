@@ -38,17 +38,3 @@ def read_code_files(spark: SparkSession, location: str) -> DataFrame:
     if "/" not in location and iceberg_available(spark):
         return spark.read.format("iceberg").load(location)
     return spark.read.schema(CODE_FILES_SCHEMA).parquet(location)
-
-
-def write_triples(df: DataFrame, location: str, mode: str = "overwrite") -> None:
-    """K3-equivalent sink: partitioned triple table (SemanticSQL `statements`
-    analog, omop2owl_vocab.py:115-153). Iceberg ``writeTo.partitionedBy`` when
-    available, parquet ``partitionBy`` fallback — same layout contract."""
-    if "/" not in location and iceberg_available(df.sparkSession):
-        writer = df.writeTo(location).partitionedBy("vocabulary_id")
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
-    else:
-        df.write.mode(mode).partitionBy("vocabulary_id").parquet(location)

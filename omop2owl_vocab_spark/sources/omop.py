@@ -66,12 +66,3 @@ def read_concept_relationship(spark: SparkSession, path) -> DataFrame:
     (reference: omop2owl_vocab.py:390-391) so Catalyst pushes it down."""
     df = _read_csv(spark, path, CONCEPT_RELATIONSHIP_SCHEMA)
     return df.filter(df.invalid_reason == "")
-
-
-def read_concept_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(CONCEPT_SCHEMA).parquet(path).na.fill("")
-
-
-def read_concept_relationship_parquet(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.schema(CONCEPT_RELATIONSHIP_SCHEMA).parquet(path).na.fill("")
-    return df.filter(df.invalid_reason == "")

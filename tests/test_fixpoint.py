@@ -1,15 +1,17 @@
 """The shared round driver (`operators/fixpoint.py`) and the iterative
-operators built on it: truncation paths, round cap, fixed-round mode,
-and empty inputs."""
+operators built on it: local and reliable materialization, round cap,
+fixed-round mode, empty inputs, and one materialization policy for the
+whole package."""
 
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-from omop2owl_vocab_spark.operators import graph
+from omop2owl_vocab_spark.operators import dedup, graph
 from omop2owl_vocab_spark.operators.closure import ancestor_closure
-from omop2owl_vocab_spark.operators.fixpoint import LOCAL, iterate, truncation
+from omop2owl_vocab_spark.operators.fixpoint import checkpointing, iterate
 from omop2owl_vocab_spark.operators.link import connected_components
 
 
@@ -35,11 +37,10 @@ def test_local_and_reliable_truncation_agree(spark, tmp_path):
     local, s_local = iterate(
         _countdown(spark), _down, max_rounds=10, signature=_total
     )
-    ckpt = truncation(spark, str(tmp_path / "ck"), "t")
-    reliable, s_rel = iterate(
-        _countdown(spark), _down, max_rounds=10, signature=_total,
-        truncate=ckpt,
-    )
+    with checkpointing(spark, str(tmp_path / "ck"), "t"):
+        reliable, s_rel = iterate(
+            _countdown(spark), _down, max_rounds=10, signature=_total
+        )
     assert _rows(local) == _rows(reliable) == [(k, 0) for k in range(6)]
     # converged when round 6 repeats round 5's sum of 0
     assert s_local["rounds"] == s_rel["rounds"] == 6
@@ -52,17 +53,15 @@ def test_reliable_truncation_writes_a_fresh_subdir(spark, tmp_path):
     root = str(tmp_path / "ck")
     subdirs = []
     for _ in range(2):
-        _, stats = iterate(
-            _countdown(spark), _down, max_rounds=2,
-            truncate=truncation(spark, root + "/", "t"),
-        )
-        sub = stats["checkpoint_subdir"]
+        with checkpointing(spark, root + "/", "t") as sub:
+            iterate(_countdown(spark), _down, max_rounds=2)
         assert os.path.dirname(sub) == root
         assert os.path.basename(sub).startswith("t-")
         assert any(os.scandir(sub))  # the round checkpoints landed there
         subdirs.append(sub)
     assert subdirs[0] != subdirs[1]
-    assert truncation(spark, None, "t") is LOCAL
+    with checkpointing(spark, None, "t") as sub:
+        assert sub is None
 
 
 def test_cap_returns_unconverged_after_max_rounds(spark):
@@ -124,44 +123,135 @@ def test_closure_reliable_checkpoint_matches_local(spark, tmp_path):
     assert "checkpoint_subdir" not in s_local
 
 
-def _empty(spark, schema):
-    return spark.createDataFrame([], schema)
-
-
-EMPTY_CASES = {
-    "connected_components": lambda s: connected_components(
-        _empty(s, "src string, dst string")
+# operator name -> run(frame), where frame(schema) builds one input
+# frame; shared by the empty-input and the reliable-policy tests
+ITERATIVE = {
+    "connected_components": lambda f: connected_components(
+        f("src string, dst string")
     )[0],
-    "ancestor_closure": lambda s: ancestor_closure(
-        _empty(s, "child long, parent long")
+    "ancestor_closure": lambda f: ancestor_closure(
+        f("child long, parent long")
     )[0],
-    "pagerank_fixed": lambda s: graph.pagerank_fixed(
-        _empty(s, "src long, dst long")
+    "pagerank_fixed": lambda f: graph.pagerank_fixed(f("src long, dst long")),
+    "personalized_pagerank": lambda f: graph.personalized_pagerank(
+        f("src long, dst long"), f("node long")
     ),
-    "personalized_pagerank": lambda s: graph.personalized_pagerank(
-        _empty(s, "src long, dst long"), _empty(s, "node long")
+    "hits_fixed": lambda f: graph.hits_fixed(f("src long, dst long")),
+    "k_core": lambda f: graph.k_core(f("src long, dst long"), k=2),
+    "bfs_distances": lambda f: graph.bfs_distances(
+        f("src long, dst long"), f("node long")
     ),
-    "hits_fixed": lambda s: graph.hits_fixed(_empty(s, "src long, dst long")),
-    "k_core": lambda s: graph.k_core(_empty(s, "src long, dst long"), k=2),
-    "bfs_distances": lambda s: graph.bfs_distances(
-        _empty(s, "src long, dst long"), _empty(s, "node long")
+    "label_propagation": lambda f: graph.label_propagation(
+        f("src long, dst long")
     ),
-    "label_propagation": lambda s: graph.label_propagation(
-        _empty(s, "src long, dst long")
+    "bellman_ford": lambda f: graph.bellman_ford(
+        f("src long, dst long, w long"), f("node long")
     ),
-    "bellman_ford": lambda s: graph.bellman_ford(
-        _empty(s, "src long, dst long, w long"), _empty(s, "node long")
+    "dag_longest_levels": lambda f: graph.dag_longest_levels(
+        f("child long, parent long")
     ),
-    "dag_longest_levels": lambda s: graph.dag_longest_levels(
-        _empty(s, "child long, parent long")
-    ),
-    "temporal_reachability": lambda s: graph.temporal_reachability(
-        _empty(s, "src long, dst long, t long"),
-        _empty(s, "node long, t0 long"),
+    "temporal_reachability": lambda f: graph.temporal_reachability(
+        f("src long, dst long, t long"), f("node long, t0 long")
     ),
 }
 
 
-@pytest.mark.parametrize("name", sorted(EMPTY_CASES))
+def _empty(spark):
+    return lambda schema: spark.createDataFrame([], schema)
+
+
+@pytest.mark.parametrize("name", sorted(ITERATIVE))
 def test_iterative_operator_on_empty_input(spark, name):
-    assert EMPTY_CASES[name](spark).collect() == []
+    assert ITERATIVE[name](_empty(spark)).collect() == []
+
+
+_DOCS = "doc_id long, text string"
+MATERIALIZING = {
+    **ITERATIVE,
+    "jaccard_pairs": lambda f: dedup.jaccard_pairs(
+        dedup.word_shingles(f(_DOCS))
+    ),
+    "prefix_filter_pairs": lambda f: dedup.prefix_filter_pairs(
+        dedup.word_shingles(f(_DOCS))
+    ),
+    "near_duplicate_groups": lambda f: dedup.near_duplicate_groups(f(_DOCS)),
+}
+
+# a triangle, a cycle through it, a pendant node 7; the child < parent
+# edges of the same graph form a DAG
+_EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (2, 6), (6, 7)]
+_SMALL = {
+    "src string, dst string": [(str(a), str(b)) for a, b in _EDGES],
+    "src long, dst long": _EDGES,
+    "child long, parent long": [(a, b) for a, b in _EDGES if a < b],
+    "node long": [(1,)],
+    "src long, dst long, w long": [(a, b, a + b) for a, b in _EDGES],
+    "src long, dst long, t long": [(a, b, a % 4) for a, b in _EDGES],
+    "node long, t0 long": [(1, 0)],
+    _DOCS: [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumps over the lazy cat"),
+        (3, "a completely different sentence about spark jobs"),
+        (4, "a completely different sentence about spark stages"),
+        (5, "nothing in common with anything else here"),
+    ],
+}
+
+
+def _small(spark):
+    return lambda schema: spark.createDataFrame(_SMALL[schema], schema)
+
+
+def _no_local_checkpoint(spark, monkeypatch):
+    def boom(*_a, **_k):
+        raise AssertionError("localCheckpoint under a reliable scope")
+
+    monkeypatch.setattr(type(spark.range(1)), "localCheckpoint", boom)
+
+
+def _holds_files(root):
+    return any(files for _, _, files in os.walk(root))
+
+
+@pytest.mark.parametrize("name", sorted(MATERIALIZING))
+def test_operator_under_reliable_policy_matches_local(
+    spark, tmp_path, monkeypatch, name
+):
+    local = _rows(MATERIALIZING[name](_small(spark)))
+    assert local  # the small inputs give every operator some output
+    _no_local_checkpoint(spark, monkeypatch)
+    with checkpointing(spark, str(tmp_path), "t") as sub:
+        reliable = _rows(MATERIALIZING[name](_small(spark)))
+    assert reliable == local
+    assert _holds_files(sub)
+
+
+def test_nested_scope_keeps_the_enclosing_policy(spark, tmp_path, monkeypatch):
+    edges = _small(spark)("src string, dst string")
+    local = _rows(connected_components(edges)[0])
+    _no_local_checkpoint(spark, monkeypatch)
+    with checkpointing(spark, str(tmp_path / "outer"), "t") as outer:
+        labels, stats = connected_components(edges, checkpoint_dir=None)
+        assert _rows(labels) == local
+        assert "checkpoint_subdir" not in stats
+        # an inner reliable scope hands the outer subdir back on exit
+        _, inner = connected_components(
+            edges, checkpoint_dir=str(tmp_path / "inner")
+        )
+        assert inner["checkpoint_subdir"].startswith(str(tmp_path / "inner"))
+        assert outer + "/" in spark.sparkContext.getCheckpointDir()
+    assert _holds_files(outer)
+
+
+def test_only_fixpoint_cuts_lineage():
+    """`fixpoint.materialize` is the one lineage cut in the package."""
+    pkg = Path(graph.__file__).parents[1]
+    policy = Path(graph.__file__).with_name("fixpoint.py")
+    hits = [
+        f"{p.relative_to(pkg)}:{n}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != policy
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "localCheckpoint(" in line or ".checkpoint(" in line
+    ]
+    assert hits == []

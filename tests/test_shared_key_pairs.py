@@ -1,11 +1,12 @@
 """The shared-key pair join behind the dedup and graph pair finders:
-`_materialize` skips frames that are already checkpointed, and the
+`fixpoint.materialize` skips frames that are already checkpointed, and the
 block-purging cap keeps a key with exactly ``cap`` rows and drops one
 with ``cap + 1``, for every operator that exposes the cap."""
 
 import pytest
 
 from omop2owl_vocab_spark.operators import dedup as D
+from omop2owl_vocab_spark.operators.fixpoint import materialize
 from omop2owl_vocab_spark.operators.graph import cooccurrence_pairs
 
 CAP = 3
@@ -15,13 +16,13 @@ DROPPED = [11, 12, 13, 14]  # CAP + 1 rows on another key
 
 def test_materialize_skips_checkpointed_frame(spark):
     fresh = spark.range(5)
-    m = D._materialize(fresh)
+    m = materialize(fresh)
     assert m is not fresh
     assert m._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
-    assert D._materialize(m) is m
+    assert materialize(m) is m
     # anything applied on top is a new plan and is checkpointed again
     derived = m.filter("id > 1")
-    assert D._materialize(derived) is not derived
+    assert materialize(derived) is not derived
 
 
 def _lsh(spark):
