@@ -15,9 +15,12 @@ rounds; ``noise_pct`` carries the per-query (max−min)/median spread so
 round-over-round deltas can be read against measured variance instead of
 guessed (this VM has shown ±30–40 % single-shot swings).
 
-Prints ONE compact JSON line (kept < ~1.9 kB so the driver's stdout tail
-window always contains it whole — the r4 line with inline noise_pct
-outgrew the window and was archived unparsed):
+Prints two JSON lines.  The first holds every query's median,
+``{"queries": {name: median sec, ...}}``, so no query drops out of
+stdout.  The LAST is one compact line (kept < ~1.9 kB so a reader that
+keeps only the tail of stdout gets it whole — the r4 line with inline
+noise_pct outgrew the window and was archived unparsed; past that size
+its query list keeps the 40 slowest):
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: median sec, ...}, "sf": ..., "pipeline": {...}}
 The full record (per-query noise_pct, reps) is written to
@@ -168,7 +171,8 @@ def main() -> None:
         with open(sidecar, "w") as f:
             json.dump(full, f, indent=1)
     except OSError:
-        pass  # read-only checkout: the stdout line still carries the result
+        pass  # read-only checkout: the stdout lines still carry the result
+    print(json.dumps({"queries": per_query}, separators=(",", ":")))
     compact = {
         "metric": "bench_total_sec", "value": total, "unit": "sec",
         "queries": {n: round(s, 2) for n, s in per_query.items()},

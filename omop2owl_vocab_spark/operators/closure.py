@@ -27,9 +27,10 @@ min/max compositions are exact, not bounds.
 Fixpoint detection: the pair set only grows, ``min_levels`` only
 decreases, ``max_levels`` only increases — so the triple
 ``(count, sum(min), sum(max))`` is strictly monotone until convergence
-and one aggregate per round decides termination.  A CYCLE in the input
-makes ``max_levels`` diverge; the round cap then raises (same contract
-as ``connected_components``) — the closure doubles as cycle detection.
+and one aggregate per round, observed on the round's materialization,
+decides termination.  A CYCLE in the input makes ``max_levels``
+diverge; the round cap then raises (same contract as
+``connected_components``) — the closure doubles as cycle detection.
 
 100 TB posture: each round is one self-equi-join on the midpoint plus a
 hash-aggregate — both shuffle on pair keys, both AQE-skew-splittable.
@@ -44,11 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from omop2owl_vocab_spark.operators.fixpoint import (
-    checkpointing,
-    iterate,
-    materialize,
-)
+from omop2owl_vocab_spark.operators.fixpoint import checkpointing, iterate
 
 
 def ancestor_closure(
@@ -74,7 +71,7 @@ def ancestor_closure(
     ⌈log2(depth)⌉ + 1; for cyclic input it is the cycle detector.
     """
     with checkpointing(edges.sparkSession, checkpoint_dir, "tc") as sub:
-        pairs = materialize(
+        pairs = (
             edges.select(
                 F.col(parent_col).alias("ancestor"),
                 F.col(child_col).alias("descendant"),
@@ -88,14 +85,6 @@ def ancestor_closure(
                 F.lit(1).cast("long").alias("max_levels"),
             )
         )
-
-        def _sig(df: DataFrame) -> tuple:
-            """(n, Σmin, Σmax): strictly monotone until the fixpoint."""
-            return tuple(
-                df.agg(
-                    F.count("*"), F.sum("min_levels"), F.sum("max_levels")
-                ).collect()[0]
-            )
 
         def step(pairs: DataFrame, _r: int) -> DataFrame:
             mid = (
@@ -125,19 +114,19 @@ def ancestor_closure(
                 )
             )
 
-        sig0 = _sig(pairs)
         pairs, stats = iterate(
             pairs,
             step,
             max_rounds=max_iter,
-            signature=_sig,
-            initial=sig0,
+            # (n, Σmin, Σmax): strictly monotone until the fixpoint
+            signature=F.struct(
+                F.count("*"), F.sum("min_levels"), F.sum("max_levels")
+            ),
         )
     if sub is not None:
         stats["checkpoint_subdir"] = sub
-    stats["pairs_per_round"] = [sig0[0]] + [
-        sig[0] for sig in stats.pop("signatures")
-    ]
+    sigs = [stats["initial_signature"], *stats.pop("signatures")]
+    stats["pairs_per_round"] = [n for n, _, _ in sigs]
     if not stats["converged"]:
         raise RuntimeError(
             f"ancestor_closure did not reach a fixpoint in {max_iter} "

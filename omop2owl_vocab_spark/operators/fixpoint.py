@@ -3,12 +3,14 @@ materialization policy for every lineage cut in the operators.
 
 Connected components, the ancestor closure and the nine iterative
 operators in `operators/graph.py` supply only a step expression and,
-optionally, a per-round signature (one aggregate over the materialized
-state) with a fixpoint test; `iterate` owns the loop, the round count,
-the early exit and the lineage cut.  Without the cut the plan doubles
-per round and the driver runs out of memory planning round ~15.  The
-driver adds no Spark job: a round costs the step's own jobs, the
-materialization, and at most the one signature aggregate.
+optionally, a signature (one aggregate Column over the state) with a
+fixpoint test; `iterate` owns the loop, the round count, the early exit
+and the lineage cut.  Without the cut the plan doubles per round and
+the driver runs out of memory planning round ~15.  The driver adds no
+Spark job: the signature is observed (``DataFrame.observe``) on the
+frame the cut materializes, so its value arrives with the
+materialization job and a round costs the step's own jobs plus that
+one job.
 
 `materialize` is the only place the package cuts lineage.  Iterative
 states, the static frames an operator re-joins every round, and the
@@ -37,7 +39,9 @@ scans / 140 exchanges / 0 reused exchanges in ``dd_prefix_join`` alone).
   (an earlier checkpoint's output on either path, or a frame built from
   an RDD or local rows) is returned unchanged, so a composite that
   passes a materialized frame down (``near_duplicate_groups`` →
-  ``jaccard_pairs``) cuts it once, not twice.
+  ``jaccard_pairs``) cuts it once, not twice.  An observed frame
+  analyzes to ``CollectMetrics``, never a bare ``LogicalRDD``, so the
+  skip never swallows the job that fills an observation.
 """
 
 from __future__ import annotations
@@ -48,7 +52,7 @@ from contextlib import contextmanager
 from contextvars import ContextVar
 from typing import Any, Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 # the reliable checkpoint subdir in force, None = local checkpoints
 _RELIABLE: ContextVar[str | None] = ContextVar("_RELIABLE", default=None)
@@ -94,9 +98,8 @@ def iterate(
     step: Callable[[Any, int], Any],
     *,
     max_rounds: int,
-    signature: Callable[[Any], Any] | None = None,
+    signature: Column | None = None,
     converged: Callable[[Any, Any], bool] = operator.eq,
-    initial: Any = None,
 ) -> tuple[Any, dict]:
     """Run ``state = materialize(step(state, r))`` for rounds r = 1, 2, …
     and return ``(state, stats)``.
@@ -105,31 +108,39 @@ def iterate(
     the driver materializes and whose other elements pass through (a
     step that needs a second frame materialized mid-round calls
     `materialize` on it itself).  The initial state is materialized the
-    same way before round 1 (a no-op for a frame that already is).
+    same way before round 1 (a no-op for a frame that already is, unless
+    a signature is observed on it).
 
     Without ``signature`` exactly ``max_rounds`` rounds run.  With it,
-    each round ends with ``sig = signature(state)`` and the loop stops
-    once ``converged(previous_sig, sig)`` holds; the first round compares
-    against ``initial``.  ``stats`` holds ``rounds``, ``converged`` (True
-    only when the test fired) and ``signatures`` (one per round).
+    every cut, the initial one included, observes ``signature`` (an
+    aggregate Column) on the frame it materializes, at no extra job, and
+    the loop stops once ``converged(previous_sig, sig)`` holds.
+    ``stats`` holds ``rounds``, ``converged`` (True only when the test
+    fired) and ``signatures`` (one per round), plus the initial state's
+    ``initial_signature`` when a signature is given.
     """
+    stats: dict = {"rounds": 0, "converged": False, "signatures": []}
+    sigs: list = []  # one per cut, the initial state's first
 
     def cut(s: Any) -> Any:
-        if isinstance(s, tuple):
-            return (materialize(s[0]), *s[1:])
-        return materialize(s)
+        frame = s[0] if isinstance(s, tuple) else s
+        if signature is None:
+            frame = materialize(frame)
+        else:
+            # unnamed, so a fresh uuid name per cut keeps concurrent
+            # loops (the s3 ∥ s4 threads) apart
+            obs = Observation()
+            frame = materialize(frame.observe(obs, signature.alias("sig")))
+            sigs.append(obs.get["sig"])
+        return (frame, *s[1:]) if isinstance(s, tuple) else frame
 
-    stats: dict = {"rounds": 0, "converged": False, "signatures": []}
-    state, prev = cut(state), initial
+    state = cut(state)
     for r in range(1, max_rounds + 1):
         state = cut(step(state, r))
         stats["rounds"] = r
-        if signature is None:
-            continue
-        sig = signature(state)
-        stats["signatures"].append(sig)
-        if converged(prev, sig):
+        if signature is not None and converged(sigs[-2], sigs[-1]):
             stats["converged"] = True
             break
-        prev = sig
+    if signature is not None:
+        stats["initial_signature"], *stats["signatures"] = sigs
     return state, stats

@@ -323,10 +323,11 @@ def k_core(
     k-core (the membership question, not core NUMBERS).
 
     The DuckDB oracle unrolls the same ``rounds``; the Spark loop exits
-    early once the edge count is stable, which is observationally
+    early once the edge count is stable or zero, which is observationally
     identical (peel only removes, so an unchanged COUNT is an unchanged
     SET, and a stable round is stable forever).  Per round: one degree
-    hash-agg + two ``left_semi`` joins reinstating the induced subgraph.
+    hash-agg + two ``left_semi`` joins reinstating the induced subgraph,
+    and the edge count observed on the round's materialization.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -341,14 +342,12 @@ def k_core(
         ).join(alive.withColumnRenamed("node", "b"), "b", "left_semi")
 
     # stop on a stable edge count, or once every edge is peeled
-    n_edges = e.count()
     e, _ = iterate(
         e,
         step,
-        max_rounds=rounds if n_edges else 0,
-        signature=lambda df: df.count(),
+        max_rounds=rounds,
+        signature=F.count("*"),
         converged=lambda prev, n: n in (prev, 0),
-        initial=n_edges,
     )
     return _degrees(e).withColumnRenamed("deg", "degree")
 
@@ -369,9 +368,11 @@ def bfs_distances(
     Frontier form: per hop, join the CURRENT frontier to the edge list,
     anti-join away visited nodes, dedup the new frontier (each edge is
     expanded at most once per incident frontier visit); the loop exits
-    when the frontier empties.  The DuckDB oracle unrolls reachability
-    sets r_0 ⊆ … ⊆ r_H and takes ``min(i)`` per node — a different but
-    equivalent formulation, so the hash-exact match checks SEMANTICS.
+    when the frontier empties, i.e. when a hop adds no ``dist`` rows (a
+    count observed on the round's materialization).  The DuckDB oracle
+    unrolls reachability sets r_0 ⊆ … ⊆ r_H and takes ``min(i)`` per
+    node — a different but equivalent formulation, so the hash-exact
+    match checks SEMANTICS.
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
@@ -381,9 +382,9 @@ def bfs_distances(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
     e = materialize(e.filter(F.col("src") != F.col("dst")).distinct())
-    dist = materialize(
-        sources.select("node", F.lit(0).cast("long").alias("dist")).distinct()
-    )
+    dist = sources.select(
+        "node", F.lit(0).cast("long").alias("dist")
+    ).distinct()
     frontier = materialize(dist.select("node"))
 
     def step(state: tuple, h: int) -> tuple:
@@ -401,13 +402,12 @@ def bfs_distances(
             nxt,
         )
 
-    # early exit once the frontier empties
+    # early exit once the frontier empties: the hop added no dist rows
     (dist, _), _ = iterate(
         (dist, frontier),
         step,
         max_rounds=max_hops,
-        signature=lambda state: state[1].isEmpty(),
-        converged=lambda _, empty: empty,
+        signature=F.count("*"),
     )
     return dist
 
@@ -586,8 +586,9 @@ def dag_longest_levels(
 
     Convergence by MONOTONICITY, not a diff join: levels only increase,
     so ``sum(level)`` is unchanged exactly when no level changed — one
-    single-row aggregate over the truncated state per round.  The sum
-    is exact: level ≤ depth ≤ ``max_iter`` and nodes ≤ 2^63/max_iter.
+    aggregate observed on each round's materialization, at no extra job.
+    The sum is exact: level ≤ depth ≤ ``max_iter`` and nodes ≤
+    2^63/max_iter.
     """
     e = edges.select(
         F.col(child_col).alias("child"), F.col(parent_col).alias("parent")
@@ -607,13 +608,8 @@ def dag_longest_levels(
             .agg(F.max("level").alias("level"))
         )
 
-    def total(levels: DataFrame) -> int:
-        return levels.agg(
-            F.coalesce(F.sum("level"), F.lit(0)).cast("long")
-        ).collect()[0][0]
-
     levels, stats = iterate(
-        levels, step, max_rounds=max_iter, signature=total, initial=0
+        levels, step, max_rounds=max_iter, signature=F.sum("level")
     )
     if stats["converged"]:
         return levels

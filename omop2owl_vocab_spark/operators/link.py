@@ -8,8 +8,10 @@ Algorithm: iterative min-label propagation — each round every node takes
 the minimum label among itself and its neighbors, plus pointer doubling;
 converges in O(log diameter) rounds.  The rounds run on the shared
 `operators/fixpoint.py` driver (per-round lineage truncation, round cap);
-labels only ever decrease, so convergence = zero changed rows, and the
-per-round changed-count is recorded for the stage metrics.
+labels only ever decrease, so convergence = zero changed rows.  The
+changed count is the round's signature: the driver observes it on the
+materialized labels, so it costs no job of its own, and the per-round
+counts are recorded for the stage metrics.
 """
 
 from __future__ import annotations
@@ -57,7 +59,11 @@ def connected_components(
         labels = (
             sym.select(F.col("a").alias("node"))
             .distinct()
-            .select("node", F.col("node").alias("label"))
+            .select(
+                "node",
+                F.col("node").alias("label"),
+                F.lit(0).cast("long").alias("__chg"),
+            )
         )
 
         def step(state: DataFrame, r: int) -> DataFrame:
@@ -87,10 +93,10 @@ def connected_components(
             # change detection FUSED into the label aggregate: the old label
             # rides the union tagged __old=1, so the same hash-agg that takes
             # the new min also recovers the previous label, and the round's
-            # signature is one tiny aggregate over the truncated state
-            # instead of a new⋈old join+count job — valid for ARBITRARY string
-            # node ids.  Every node has exactly one __old=1 row, so __o is
-            # never NULL.
+            # signature is a sum observed on the materialization instead of
+            # a new⋈old join+count job — valid for ARBITRARY string node
+            # ids.  Every node has exactly one __old=1 row, so __o is never
+            # NULL.
             return acc.groupBy("node").agg(
                 F.min("label").alias("label"),
                 F.min(F.when(F.col("__old") == 1, F.col("label"))).alias("__o"),
@@ -100,16 +106,11 @@ def connected_components(
                 (F.col("label") != F.col("__o")).cast("long").alias("__chg"),
             )
 
-        def changed(state: DataFrame) -> int:
-            return state.agg(
-                F.coalesce(F.sum("__chg"), F.lit(0)).cast("long")
-            ).collect()[0][0]
-
         state, stats = iterate(
             labels,
             step,
             max_rounds=max_iter,
-            signature=changed,
+            signature=F.coalesce(F.sum("__chg"), F.lit(0)),
             converged=lambda _, n: n == 0,
         )
     if sub is not None:

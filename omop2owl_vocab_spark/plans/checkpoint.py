@@ -19,13 +19,20 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
 def config_hash(config: dict) -> str:
     payload = json.dumps(config, sort_keys=True, default=str)
     return hashlib.md5(payload.encode("utf-8")).hexdigest()[:16]
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count observed: writing it fills
+    ``obs.get["rows"]`` in the write job itself, so no re-read count."""
+    obs = Observation()
+    return df.observe(obs, F.count("*").alias("rows")), obs
 
 
 class CheckpointManager:
@@ -69,10 +76,13 @@ class CheckpointManager:
         """
         t0 = time.monotonic()
         d = self.stage_dir(stage)
-        df.write.mode("overwrite").parquet(d)
+        counted, obs = _counted(df)
+        counted.write.mode("overwrite").parquet(d)
         wall = time.monotonic() - t0
         out = df.sparkSession.read.parquet(d)
-        self._write_metrics(stage, out, wall, lineage_col, extra)
+        self._write_metrics(
+            stage, out, wall, obs.get["rows"], lineage_col, extra
+        )
         return out
 
     def _write_metrics(
@@ -80,25 +90,24 @@ class CheckpointManager:
         stage: str,
         out: DataFrame,
         wall: float,
+        rows: int,
         lineage_col: str | None,
         extra: dict | None = None,
     ) -> None:
         """Shared metrics contract for dir- and table-mode checkpoints:
-        rows + per-value lineage in ONE job (the groupBy sums to the row
-        count), written atomically."""
+        ``rows`` as observed on the write, plus per-value lineage in one
+        groupBy over the written frame, written atomically."""
         m: dict = {
             "stage": stage,
             "config_hash": self.hash,
             "wall_sec": round(wall, 3),
+            "rows": rows,
         }
         if lineage_col and lineage_col in out.columns:
             counts = (
                 out.groupBy(lineage_col).agg(F.count("*").alias("n")).collect()
             )
             m["partition_lineage"] = {r[0] or "": r[1] for r in counts}
-            m["rows"] = sum(r[1] for r in counts)
-        else:
-            m["rows"] = out.count()
         if extra:
             m.update(extra)
         p = self._metrics_path(stage)
@@ -156,8 +165,9 @@ class CheckpointManager:
         d = self.stage_dir(stage)
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         t0 = time.monotonic()
+        counted, obs = _counted(df)
         (
-            df.write.mode("overwrite")
+            counted.write.mode("overwrite")
             .format("parquet")
             .bucketBy(bucket_count, bucket_col)
             .sortBy(bucket_col)
@@ -167,7 +177,7 @@ class CheckpointManager:
         wall = time.monotonic() - t0
         out = spark.table(name)
         self._write_metrics(
-            stage, out, wall, lineage_col,
+            stage, out, wall, obs.get["rows"], lineage_col,
             extra={
                 "bucket_col": bucket_col,
                 "bucket_count": bucket_count,

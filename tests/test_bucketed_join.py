@@ -1,6 +1,8 @@
 """Bucketed-checkpoint mode: the emission membership join must be
-co-located (zero hash exchanges) and produce identical triples."""
+co-located (zero hash exchanges) and produce identical triples.  In
+both checkpoint modes the recorded row count rides the write."""
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from omop2owl_vocab_spark.operators.emit import resolve_edges
@@ -86,3 +88,24 @@ def test_bucketed_resume_fresh_catalog(spark, tmp_path):
     report2 = run_pipeline(spark, cfg)
     assert report2["stages"]["s3_triples_raw"] == {"cached": True}
     assert report2["stages"]["s6_write"] == {"cached": False}
+
+
+def test_checkpoint_rows_ride_the_write(spark, tmp_path, monkeypatch):
+    """A stage's ``rows`` is observed on its write: no count() job over
+    the re-read frame, in dir or table mode, with or without lineage."""
+    ckpt = CheckpointManager(str(tmp_path / "ckpt"), {"t": 1})
+    df = spark.range(37).select(
+        F.col("id").alias("k"), (F.col("id") % 3).cast("string").alias("v")
+    )
+
+    def boom(*_a, **_k):
+        raise AssertionError("count() in a checkpoint write")
+
+    monkeypatch.setattr(DataFrame, "count", boom)
+    ckpt.write("plain", df)
+    ckpt.write_table("bucketed", df, "k", 4)
+    ckpt.write("lineage", df, lineage_col="v")
+    stages = ("plain", "bucketed", "lineage")
+    assert [ckpt.metrics(s)["rows"] for s in stages] == [37, 37, 37]
+    lineage = ckpt.metrics("lineage")["partition_lineage"]
+    assert lineage == {"0": 13, "1": 12, "2": 12}

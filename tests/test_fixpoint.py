@@ -4,6 +4,7 @@ fixed-round mode, empty inputs, and one materialization policy for the
 whole package."""
 
 import os
+import uuid
 from pathlib import Path
 
 import pytest
@@ -25,21 +26,17 @@ def _down(state, _r):
     return state.select("k", F.greatest(F.col("v") - 1, F.lit(0)).alias("v"))
 
 
-def _total(state):
-    return state.agg(F.sum("v")).collect()[0][0]
-
-
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
 def test_local_and_reliable_truncation_agree(spark, tmp_path):
     local, s_local = iterate(
-        _countdown(spark), _down, max_rounds=10, signature=_total
+        _countdown(spark), _down, max_rounds=10, signature=F.sum("v")
     )
     with checkpointing(spark, str(tmp_path / "ck"), "t"):
         reliable, s_rel = iterate(
-            _countdown(spark), _down, max_rounds=10, signature=_total
+            _countdown(spark), _down, max_rounds=10, signature=F.sum("v")
         )
     assert _rows(local) == _rows(reliable) == [(k, 0) for k in range(6)]
     # converged when round 6 repeats round 5's sum of 0
@@ -69,11 +66,41 @@ def test_cap_returns_unconverged_after_max_rounds(spark):
         return state.select("k", (F.col("v") + 1).alias("v"))
 
     state, stats = iterate(
-        _countdown(spark), up, max_rounds=3, signature=_total
+        _countdown(spark), up, max_rounds=3, signature=F.sum("v")
     )
     assert stats["rounds"] == 3 and not stats["converged"]
     assert stats["signatures"] == [21, 27, 33]
     assert _rows(state) == [(k, k + 3) for k in range(6)]
+
+
+def _jobs(spark, run):
+    """(Spark jobs ``run()`` launched, its result), counted in a job
+    group of its own."""
+    sc = spark.sparkContext
+    group = f"fixpoint-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_signature_costs_no_job(spark):
+    """The signature rides each cut's materialization job."""
+    plain, _ = _jobs(
+        spark, lambda: iterate(_countdown(spark), _down, max_rounds=3)
+    )
+    observed, (_, stats) = _jobs(
+        spark,
+        lambda: iterate(
+            _countdown(spark), _down, max_rounds=3, signature=F.sum("v")
+        ),
+    )
+    assert observed == plain
+    assert stats["signatures"] == [10, 6, 3]
+    assert stats["initial_signature"] == 15 and not stats["converged"]
 
 
 def test_fixed_round_mode_runs_exactly_n_rounds(spark):

@@ -1,16 +1,21 @@
 """Local stand-in for the driver's correctness gate: run every
 ``__spark_entry__.queries()`` entry and its ``oracle_sql()`` twin on the
 same sf dir, compare row count, column names, and an order-insensitive
-value hash (rows stringified, column-name-sorted, then sorted + md5)."""
+value hash (rows stringified, column-name-sorted, then sorted + md5).
+
+Each query (build plus collect) runs in a Spark job group of its own,
+and the number of Spark jobs it launched is printed in its line and
+recorded as ``jobs`` in the ``--json`` record."""
 
 from __future__ import annotations
 
 import hashlib
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from omop2owl_vocab_spark.session import get_spark  # noqa: E402
@@ -41,6 +46,21 @@ def value_hash(cols, rows) -> str:
     return hashlib.md5("\n".join(lines).encode()).hexdigest()
 
 
+def _run_counted(spark, name: str, run):
+    """(result of ``run()``, Spark jobs it launched), counted in a job
+    group named after the query."""
+    sc = spark.sparkContext
+    group = f"oracle-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store is fed by the listener bus asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def main(
     sf_dir: str = "/root/testdata/sf0.01",
     only: list[str] | None = None,
@@ -62,10 +82,13 @@ def main(
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        try:
+
+        def run():
             df = fn(spark, sf_dir)
-            cols = df.columns
-            rows = [tuple(r) for r in df.collect()]
+            return df.columns, [tuple(r) for r in df.collect()]
+
+        try:
+            (cols, rows), jobs = _run_counted(spark, name, run)
         except Exception as e:
             failures.append(name)
             results[name] = {
@@ -78,10 +101,10 @@ def main(
         if name not in oracles:
             results[name] = {
                 "rows_match": None, "schema_match": None, "hash_match": None,
-                "spark_rows": len(rows), "oracle_rows": None,
+                "spark_rows": len(rows), "oracle_rows": None, "jobs": jobs,
                 "err": "rows-only (no oracle)",
             }
-            print(f"rows-only  {name}: {len(rows)} rows, cols={cols}")
+            print(f"rows-only  {name}: {len(rows)} rows, jobs {jobs}, cols={cols}")
             continue
         try:
             rel = con.sql(oracles[name])
@@ -108,7 +131,7 @@ def main(
             results[name] = {
                 "rows_match": False, "schema_match": False,
                 "hash_match": False, "spark_rows": len(rows),
-                "oracle_rows": None, "err": f"duckdb error {e}",
+                "oracle_rows": None, "jobs": jobs, "err": f"duckdb error {e}",
             }
             print(f"FAIL  {name}: duckdb error {e}")
             continue
@@ -117,13 +140,14 @@ def main(
         ok_h = ok_c and value_hash(cols, rows) == value_hash(ocols, orows)
         results[name] = {
             "rows_match": ok_n, "schema_match": ok_c, "hash_match": ok_h,
-            "spark_rows": len(rows), "oracle_rows": len(orows), "err": None,
+            "spark_rows": len(rows), "oracle_rows": len(orows), "jobs": jobs,
+            "err": None,
         }
         status = "OK   " if (ok_n and ok_c and ok_h) else "FAIL "
         if status.startswith("FAIL"):
             failures.append(name)
         print(
-            f"{status} {name}: rows {len(rows)}/{len(orows)} "
+            f"{status} {name}: rows {len(rows)}/{len(orows)} jobs {jobs} "
             f"cols={'=' if ok_c else f'{sorted(cols)} vs {sorted(ocols)}'} "
             f"hash={'=' if ok_h else 'MISMATCH'}"
         )
