@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from omop2owl_vocab_spark.operators.fixpoint import checkpointing, iterate
+from omop2owl_vocab_spark.operators.fixpoint import iterate
 
 
 def ancestor_closure(
@@ -54,77 +54,71 @@ def ancestor_closure(
     parent_col: str = "parent",
     max_iter: int = 12,
     include_self: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, dict]:
     """Return ``(closure, stats)``: closure = (ancestor, descendant,
     min_levels, max_levels) over the transitive closure of the edge set
     (edge direction: child → parent, one level of separation each).
 
     ``include_self`` adds the OMOP-style identity rows (every node as
-    its own ancestor at 0/0 levels).  ``checkpoint_dir`` selects
-    reliable checkpoints (cluster posture) over ``localCheckpoint``
-    (single-box default) — same contract and caveats as
-    `connected_components`.
+    its own ancestor at 0/0 levels).  Lineage is cut under the policy in
+    force — same contract as `connected_components`.
 
     Raises ``RuntimeError`` when ``max_iter`` rounds don't reach the
     fixpoint — which, for any acyclic input, means ``max_iter`` <
     ⌈log2(depth)⌉ + 1; for cyclic input it is the cycle detector.
     """
-    with checkpointing(edges.sparkSession, checkpoint_dir, "tc") as sub:
-        pairs = (
-            edges.select(
-                F.col(parent_col).alias("ancestor"),
-                F.col(child_col).alias("descendant"),
+    pairs = (
+        edges.select(
+            F.col(parent_col).alias("ancestor"),
+            F.col(child_col).alias("descendant"),
+        )
+        .filter(F.col("ancestor") != F.col("descendant"))
+        .distinct()
+        .select(
+            "ancestor",
+            "descendant",
+            F.lit(1).cast("long").alias("min_levels"),
+            F.lit(1).cast("long").alias("max_levels"),
+        )
+    )
+
+    def step(pairs: DataFrame, _r: int) -> DataFrame:
+        mid = (
+            pairs.alias("l")
+            .join(
+                pairs.alias("r"),
+                F.col("l.descendant") == F.col("r.ancestor"),
+            )
+            .select(
+                F.col("l.ancestor").alias("ancestor"),
+                F.col("r.descendant").alias("descendant"),
+                (F.col("l.min_levels") + F.col("r.min_levels")).alias(
+                    "min_levels"
+                ),
+                (F.col("l.max_levels") + F.col("r.max_levels")).alias(
+                    "max_levels"
+                ),
             )
             .filter(F.col("ancestor") != F.col("descendant"))
-            .distinct()
-            .select(
-                "ancestor",
-                "descendant",
-                F.lit(1).cast("long").alias("min_levels"),
-                F.lit(1).cast("long").alias("max_levels"),
+        )
+        return (
+            pairs.unionByName(mid)
+            .groupBy("ancestor", "descendant")
+            .agg(
+                F.min("min_levels").alias("min_levels"),
+                F.max("max_levels").alias("max_levels"),
             )
         )
 
-        def step(pairs: DataFrame, _r: int) -> DataFrame:
-            mid = (
-                pairs.alias("l")
-                .join(
-                    pairs.alias("r"),
-                    F.col("l.descendant") == F.col("r.ancestor"),
-                )
-                .select(
-                    F.col("l.ancestor").alias("ancestor"),
-                    F.col("r.descendant").alias("descendant"),
-                    (F.col("l.min_levels") + F.col("r.min_levels")).alias(
-                        "min_levels"
-                    ),
-                    (F.col("l.max_levels") + F.col("r.max_levels")).alias(
-                        "max_levels"
-                    ),
-                )
-                .filter(F.col("ancestor") != F.col("descendant"))
-            )
-            return (
-                pairs.unionByName(mid)
-                .groupBy("ancestor", "descendant")
-                .agg(
-                    F.min("min_levels").alias("min_levels"),
-                    F.max("max_levels").alias("max_levels"),
-                )
-            )
-
-        pairs, stats = iterate(
-            pairs,
-            step,
-            max_rounds=max_iter,
-            # (n, Σmin, Σmax): strictly monotone until the fixpoint
-            signature=F.struct(
-                F.count("*"), F.sum("min_levels"), F.sum("max_levels")
-            ),
-        )
-    if sub is not None:
-        stats["checkpoint_subdir"] = sub
+    pairs, stats = iterate(
+        pairs,
+        step,
+        max_rounds=max_iter,
+        # (n, Σmin, Σmax): strictly monotone until the fixpoint
+        signature=F.struct(
+            F.count("*"), F.sum("min_levels"), F.sum("max_levels")
+        ),
+    )
     sigs = [stats["initial_signature"], *stats.pop("signatures")]
     stats["pairs_per_round"] = [n for n, _, _ in sigs]
     if not stats["converged"]:

@@ -25,6 +25,7 @@ from omop2owl_vocab_spark.operators.dedup import (
     exact_duplicates,
     near_duplicate_groups,
 )
+from omop2owl_vocab_spark.operators.fixpoint import materialize
 from omop2owl_vocab_spark.operators.text import gopher_flags, repetition_flags
 
 
@@ -35,8 +36,6 @@ def curation_decision(
     max_bucket_size: int | None = 10_000,
     text_col: str = "text",
     id_col: str = "doc_id",
-    cc_checkpoint_dir: str | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """(doc_id, quality_ok, repetition_ok, exact_canonical, near_dup_rep,
     keep) — the keep-list with per-stage reasons.
@@ -50,20 +49,15 @@ def curation_decision(
     evaluated them); ``keep`` is still deterministically False for them
     (Kleene AND with a False conjunct).
 
-    SINGLE-SCAN discipline (r2 verdict #4): with ``cache=True`` (default)
-    ``verdicts`` and ``survivors`` are persisted (memory-and-disk, spills
-    cleanly) — without this, every downstream consumer (exact dedup,
-    near-dup groups, the final verdict join) re-derives the whole quality
-    lineage, re-scanning the text column 4-5× per run.  With it,
-    gopher/repetition each read the text once, the survivor semi-join
-    reads it once, and both dedup stages read the cached survivors.
-
-    Cache lifetime: the two frames must stay registered while the
-    returned plan is alive, so this function cannot unpersist them —
-    in-memory blocks are LRU-evicted, but spilled disk blocks live until
-    ``spark.catalog.clearCache()`` or session end.  A long-lived service
-    calling this per-shard should either clear the cache between shards
-    or pass ``cache=False`` (correct, just re-scans the text per stage).
+    SINGLE-SCAN discipline (r2 verdict #4): ``verdicts`` and
+    ``survivors`` are cut once through `fixpoint.materialize` — without
+    this, every downstream consumer (exact dedup, near-dup groups, the
+    final verdict join) re-derives the whole quality lineage, re-scanning
+    the text column 4-5× per run.  With it, gopher/repetition each read
+    the text once, the survivor semi-join reads it once, and both dedup
+    stages read the materialized survivors.  Inside a
+    `fixpoint.checkpointing` scope these cuts, and the near-dup stage's,
+    are reliable checkpoints.
     """
     quality = gopher_flags(df, text_col, id_col).select(
         F.col(id_col), F.col("keep").alias("quality_ok")
@@ -72,16 +66,11 @@ def curation_decision(
         F.col(id_col),
         (F.col("dup_line_ok") & F.col("top_bigram_ok")).alias("repetition_ok"),
     )
-    verdicts = quality.join(rep, id_col)
-    if cache:
-        verdicts = verdicts.persist()
-    survivors = df.join(
-        verdicts.filter(F.col("quality_ok") & F.col("repetition_ok")).select(id_col),
-        id_col,
-        "left_semi",
+    passed = F.col("quality_ok") & F.col("repetition_ok")
+    verdicts = materialize(quality.join(rep, id_col))
+    survivors = materialize(
+        df.join(verdicts.filter(passed).select(id_col), id_col, "left_semi")
     )
-    if cache:
-        survivors = survivors.persist()
     exact_dups = exact_duplicates(survivors, text_col, id_col).select(
         F.col("dup_id").alias(id_col), F.lit(False).alias("_exact")
     )
@@ -92,12 +81,10 @@ def curation_decision(
         max_bucket_size=max_bucket_size,
         text_col=text_col,
         id_col=id_col,
-        cc_checkpoint_dir=cc_checkpoint_dir,
     ).select(
         F.col("doc_id").alias(id_col),
         (F.col("doc_id") == F.col("group_id")).alias("near_dup_rep"),
     )
-    passed = F.col("quality_ok") & F.col("repetition_ok")
     out = (
         verdicts.join(exact_dups, id_col, "left")
         .join(groups, id_col, "left")
@@ -115,10 +102,5 @@ def curation_decision(
         "repetition_ok",
         "exact_canonical",
         "near_dup_rep",
-        (
-            F.col("quality_ok")
-            & F.col("repetition_ok")
-            & F.col("exact_canonical")
-            & F.col("near_dup_rep")
-        ).alias("keep"),
+        (passed & F.col("exact_canonical") & F.col("near_dup_rep")).alias("keep"),
     )

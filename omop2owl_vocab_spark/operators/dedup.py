@@ -466,7 +466,6 @@ def near_duplicate_groups(
     max_bucket_size: int | None = 10_000,
     text_col: str = "text",
     id_col: str = "doc_id",
-    cc_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The complete dedup decision, composed end-to-end: shingle → minhash
     → LSH candidates (bucket-capped) → exact-Jaccard verify → connected
@@ -483,8 +482,9 @@ def near_duplicate_groups(
     to 19 digits (full non-negative int64 range) so the string min equals
     the numeric min — doc ids must be NON-NEGATIVE, enforced JVM-side via
     ``assert_true`` (a negative id would pad unsortably and cast back to
-    NULL).  ``cc_checkpoint_dir`` forwards to ``connected_components`` for
-    cluster-safe reliable checkpoints (see operators/link.py).
+    NULL).  The shingles and CC's rounds are cut under the policy in
+    force: open `fixpoint.checkpointing` around the call and the collect
+    for cluster-safe reliable checkpoints.
     """
     from omop2owl_vocab_spark.operators.link import connected_components
 
@@ -505,8 +505,7 @@ def near_duplicate_groups(
     labels, _ = connected_components(
         verified.select(
             _pad(F.col("id_a")).alias("src"), _pad(F.col("id_b")).alias("dst")
-        ),
-        checkpoint_dir=cc_checkpoint_dir,
+        )
     )
     ids = df.select(
         F.col(id_col).alias("doc_id"),

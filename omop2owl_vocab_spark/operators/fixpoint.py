@@ -34,7 +34,10 @@ scans / 140 exchanges / 0 reused exchanges in ``dd_prefix_join`` alone).
   SparkContext-global: the unique subdir keeps successive operators
   from interleaving files, but two scopes open at once in different
   threads share the one setting.  The scope is a context variable, so
-  it covers every operator called inside it, nested ones included.
+  it covers every operator called inside it, nested ones included; a
+  thread sees it only when its target runs in a copy of the opener's
+  context (``run_pipeline`` runs its s3 ∥ s4 threads that way).
+  The scope is the only switch: no operator takes a checkpoint option.
 - **Skip**: a frame whose analyzed plan is already a bare ``LogicalRDD``
   (an earlier checkpoint's output on either path, or a frame built from
   an RDD or local rows) is returned unchanged, so a composite that

@@ -19,11 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from omop2owl_vocab_spark.operators.fixpoint import (
-    checkpointing,
-    iterate,
-    materialize,
-)
+from omop2owl_vocab_spark.operators.fixpoint import iterate, materialize
 
 
 def connected_components(
@@ -31,7 +27,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, dict]:
     """Return ``(labels, stats)`` with labels = (node, component) and
     component = min node id (lexicographic — ids are strings end-to-end,
@@ -39,82 +34,76 @@ def connected_components(
 
     Input edges need not be symmetric or deduplicated.
 
-    ``checkpoint_dir``: when set, lineage truncation uses RELIABLE
-    checkpoints into a unique ``cc-<uuid>`` subdirectory of
-    ``checkpoint_dir`` (HDFS/S3/shared fs), surfaced as
-    ``stats['checkpoint_subdir']`` for the CALLER to delete once labels
-    are materialized elsewhere (the pipeline does this right after the
-    canon-map checkpoint lands).  Default (None) keeps the policy in
-    force — ``localCheckpoint``, or an enclosing reliable scope; see
-    `fixpoint.checkpointing` for the cluster caveats.
+    Lineage is cut under the policy in force: ``localCheckpoint`` by
+    default, reliable checkpoints inside a `fixpoint.checkpointing`
+    scope, whose opener deletes the subdir once the labels are
+    materialized elsewhere (the pipeline opens one around this call
+    when ``PipelineConfig.cc_checkpoint_dir`` is set).
     """
-    with checkpointing(edges.sparkSession, checkpoint_dir, "cc") as sub:
-        e = (
-            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .filter(F.col("a") != F.col("b"))
-        )
-        rev = e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        sym = materialize(e.unionByName(rev).distinct())
+    e = (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+    )
+    rev = e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    sym = materialize(e.unionByName(rev).distinct())
 
-        labels = (
-            sym.select(F.col("a").alias("node"))
-            .distinct()
-            .select(
-                "node",
-                F.col("node").alias("label"),
-                F.lit(0).cast("long").alias("__chg"),
-            )
+    labels = (
+        sym.select(F.col("a").alias("node"))
+        .distinct()
+        .select(
+            "node",
+            F.col("node").alias("label"),
+            F.lit(0).cast("long").alias("__chg"),
         )
+    )
 
-        def step(state: DataFrame, r: int) -> DataFrame:
-            labels = state.select("node", "label")
-            # neighbor labels: edge (a,b) sends b's label to a
-            msgs = sym.join(labels, sym["b"] == labels["node"]).select(
-                F.col("a").alias("node"), "label", F.lit(0).alias("__old")
-            )
-            acc = labels.select("node", "label", F.lit(1).alias("__old")).unionByName(
-                msgs
-            )
-            if r > 1:
-                # pointer doubling: adopt the label of one's current label
-                # (labels are monotone non-increasing, so label-of-label ≤
-                # label); turns O(diameter) convergence into O(log diameter).
-                # A no-op in round 1 (labels are identity) — skipped there.
-                lol = (
-                    labels.alias("x")
-                    .join(labels.alias("y"), F.col("x.label") == F.col("y.node"))
-                    .select(
-                        F.col("x.node").alias("node"),
-                        F.col("y.label").alias("label"),
-                        F.lit(0).alias("__old"),
-                    )
+    def step(state: DataFrame, r: int) -> DataFrame:
+        labels = state.select("node", "label")
+        # neighbor labels: edge (a,b) sends b's label to a
+        msgs = sym.join(labels, sym["b"] == labels["node"]).select(
+            F.col("a").alias("node"), "label", F.lit(0).alias("__old")
+        )
+        acc = labels.select("node", "label", F.lit(1).alias("__old")).unionByName(
+            msgs
+        )
+        if r > 1:
+            # pointer doubling: adopt the label of one's current label
+            # (labels are monotone non-increasing, so label-of-label ≤
+            # label); turns O(diameter) convergence into O(log diameter).
+            # A no-op in round 1 (labels are identity) — skipped there.
+            lol = (
+                labels.alias("x")
+                .join(labels.alias("y"), F.col("x.label") == F.col("y.node"))
+                .select(
+                    F.col("x.node").alias("node"),
+                    F.col("y.label").alias("label"),
+                    F.lit(0).alias("__old"),
                 )
-                acc = acc.unionByName(lol)
-            # change detection FUSED into the label aggregate: the old label
-            # rides the union tagged __old=1, so the same hash-agg that takes
-            # the new min also recovers the previous label, and the round's
-            # signature is a sum observed on the materialization instead of
-            # a new⋈old join+count job — valid for ARBITRARY string node
-            # ids.  Every node has exactly one __old=1 row, so __o is never
-            # NULL.
-            return acc.groupBy("node").agg(
-                F.min("label").alias("label"),
-                F.min(F.when(F.col("__old") == 1, F.col("label"))).alias("__o"),
-            ).select(
-                "node",
-                "label",
-                (F.col("label") != F.col("__o")).cast("long").alias("__chg"),
             )
-
-        state, stats = iterate(
-            labels,
-            step,
-            max_rounds=max_iter,
-            signature=F.coalesce(F.sum("__chg"), F.lit(0)),
-            converged=lambda _, n: n == 0,
+            acc = acc.unionByName(lol)
+        # change detection FUSED into the label aggregate: the old label
+        # rides the union tagged __old=1, so the same hash-agg that takes
+        # the new min also recovers the previous label, and the round's
+        # signature is a sum observed on the materialization instead of
+        # a new⋈old join+count job — valid for ARBITRARY string node
+        # ids.  Every node has exactly one __old=1 row, so __o is never
+        # NULL.
+        return acc.groupBy("node").agg(
+            F.min("label").alias("label"),
+            F.min(F.when(F.col("__old") == 1, F.col("label"))).alias("__o"),
+        ).select(
+            "node",
+            "label",
+            (F.col("label") != F.col("__o")).cast("long").alias("__chg"),
         )
-    if sub is not None:
-        stats["checkpoint_subdir"] = sub
+
+    state, stats = iterate(
+        labels,
+        step,
+        max_rounds=max_iter,
+        signature=F.coalesce(F.sum("__chg"), F.lit(0)),
+        converged=lambda _, n: n == 0,
+    )
     stats["changed_per_round"] = stats.pop("signatures")
     if not stats["converged"]:
         # returning unconverged labels would silently split components

@@ -19,6 +19,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from omop2owl_vocab_spark.operators.fixpoint import materialize
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -451,24 +453,16 @@ def ann_recall(
     Scale posture: this is an EVALUATION operator — run it on a sampled
     query set (10²-10⁴ queries), never the full corpus, because ground
     truth is brute force by construction.  The truth pair set
-    (n_queries x k rows) is persisted once and broadcast into each
-    method's semi-join; all heavy lifting stays in the underlying
-    operators' bucketed plans.
-
-    Cache lifetime (same contract as ``curation_decision``): the
-    persisted truth frame must stay registered while the returned plan
-    is alive, so this function cannot unpersist it.  A sweep calling
-    ``ann_recall`` repeatedly (recall curves) should
-    ``spark.catalog.clearCache()`` between calls — each call otherwise
-    leaves one small (n_queries x k) cached frame behind for the
-    session.
+    (n_queries x k rows) is cut once through `fixpoint.materialize` (a
+    reliable checkpoint inside a `fixpoint.checkpointing` scope) and
+    broadcast into each method's semi-join; all heavy lifting stays in
+    the underlying operators' bucketed plans.
     """
     if k <= 0:
         raise ValueError("k must be positive")
-    truth = (
+    truth = materialize(
         cosine_topk(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
         .select("query_id", "neighbor_id")
-        .persist()
     )
     approx: dict[str, DataFrame] = {
         "hyperplane": ann_topk_bucketed(

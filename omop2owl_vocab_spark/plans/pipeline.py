@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from omop2owl_vocab_spark.operators.canon import canonicalize_triples
 from omop2owl_vocab_spark.operators.emit import emit_triples
+from omop2owl_vocab_spark.operators.fixpoint import checkpointing
 from omop2owl_vocab_spark.operators.link import canonical_map, connected_components
 from omop2owl_vocab_spark.plans.checkpoint import CheckpointManager
 from omop2owl_vocab_spark.plans.derive import derive_concepts, derive_edges
@@ -79,9 +80,11 @@ class PipelineConfig:
     # storage-partitioned joins for the 10^12-row case where neither side
     # broadcasts.  0 = plain parquet directories.
     bucket_count: int = 0
-    # reliable-checkpoint dir for the CC driver loop (HDFS/S3/shared fs) —
-    # None = localCheckpoint (local-mode default; lossy under executor
-    # loss on a real cluster, see operators/link.py)
+    # reliable-checkpoint dir for the CC driver loop (HDFS/S3/shared fs):
+    # run_pipeline opens a `fixpoint.checkpointing` scope on it around
+    # the CC call and deletes the scope's subdir once the canon map
+    # lands.  None = the policy in force (localCheckpoint, lossy under
+    # executor loss on a real cluster, unless the caller opened a scope)
     cc_checkpoint_dir: str | None = None
 
     def key(self) -> dict:
@@ -263,9 +266,10 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
                 eq = eq.join(ids, "src", "left_semi").join(
                     ids.withColumnRenamed("src", "dst"), "dst", "left_semi"
                 )
-            labels, stats = connected_components(
-                eq, checkpoint_dir=cfg.cc_checkpoint_dir
-            )
+            with checkpointing(spark, cfg.cc_checkpoint_dir, "cc") as sub:
+                labels, stats = connected_components(eq)
+            if sub is not None:
+                stats["checkpoint_subdir"] = sub
             report["stages"]["s4_link"] = stats
             return canonical_map(labels)
 
@@ -276,19 +280,26 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
         # (the CC driver loop is collect-bound, leaving most cores free).
         # Each stage keeps its own CheckpointManager/directory, so
         # resume/kill semantics are unchanged; job descriptions are
-        # thread-local so the UI attribution stays correct.
+        # thread-local so the UI attribution stays correct.  Each target
+        # runs in a copy of the caller's context, so an enclosing
+        # `fixpoint.checkpointing` scope reaches the CC rounds too (pool
+        # threads do not inherit context variables).
+        import contextvars
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import inheritable_thread_target
 
+        def _run_s4():
+            return ckpt_s4.get_or_compute(
+                spark, "s4_canon_map", _canon_map, resume=cfg.resume
+            )
+
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f3 = pool.submit(inheritable_thread_target(_run_s3))
-            f4 = pool.submit(
-                inheritable_thread_target(
-                    lambda: ckpt_s4.get_or_compute(
-                        spark, "s4_canon_map", _canon_map, resume=cfg.resume
-                    )
+            f3, f4 = (
+                pool.submit(
+                    contextvars.copy_context().run, inheritable_thread_target(fn)
                 )
+                for fn in (_run_s3, _run_s4)
             )
             triples_raw, cached3 = f3.result()
             canon, cached = f4.result()

@@ -1,7 +1,7 @@
 """The shared round driver (`operators/fixpoint.py`) and the iterative
 operators built on it: local and reliable materialization, round cap,
 fixed-round mode, empty inputs, and one materialization policy for the
-whole package."""
+whole package, the pipeline's CC thread included."""
 
 import os
 import uuid
@@ -10,10 +10,12 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from omop2owl_vocab_spark.operators import dedup, graph
+from omop2owl_vocab_spark.operators import curate, dedup, graph, similarity
 from omop2owl_vocab_spark.operators.closure import ancestor_closure
 from omop2owl_vocab_spark.operators.fixpoint import checkpointing, iterate
 from omop2owl_vocab_spark.operators.link import connected_components
+from omop2owl_vocab_spark.plans.pipeline import PipelineConfig, run_pipeline
+from omop2owl_vocab_spark.sources.synth import synth_code_files
 
 
 def _countdown(spark):
@@ -139,13 +141,11 @@ def test_closure_reliable_checkpoint_matches_local(spark, tmp_path):
     )
     local, s_local = ancestor_closure(edges, include_self=True)
     ckpt_dir = str(tmp_path / "tc_ckpt")
-    reliable, s_rel = ancestor_closure(
-        edges, include_self=True, checkpoint_dir=ckpt_dir
-    )
+    with checkpointing(spark, ckpt_dir, "tc") as sub:
+        reliable, s_rel = ancestor_closure(edges, include_self=True)
     assert _rows(local) == _rows(reliable)
     assert s_local["pairs_per_round"] == s_rel["pairs_per_round"]
     assert s_local["rounds"] == s_rel["rounds"] and s_rel["converged"]
-    sub = s_rel["checkpoint_subdir"]
     assert sub.startswith(ckpt_dir + "/tc-") and any(os.scandir(sub))
     assert "checkpoint_subdir" not in s_local
 
@@ -193,6 +193,7 @@ def test_iterative_operator_on_empty_input(spark, name):
 
 
 _DOCS = "doc_id long, text string"
+_VECS = "vec_id long, embedding array<double>"
 MATERIALIZING = {
     **ITERATIVE,
     "jaccard_pairs": lambda f: dedup.jaccard_pairs(
@@ -202,6 +203,10 @@ MATERIALIZING = {
         dedup.word_shingles(f(_DOCS))
     ),
     "near_duplicate_groups": lambda f: dedup.near_duplicate_groups(f(_DOCS)),
+    "curation_decision": lambda f: curate.curation_decision(f(_DOCS)),
+    "ann_recall": lambda f: similarity.ann_recall(
+        f(_VECS), f(_VECS), k=2, dim=3, n_bits=4, centroids=f(_VECS)
+    ),
 }
 
 # a triangle, a cycle through it, a pendant node 7; the child < parent
@@ -221,6 +226,12 @@ _SMALL = {
         (3, "a completely different sentence about spark jobs"),
         (4, "a completely different sentence about spark stages"),
         (5, "nothing in common with anything else here"),
+    ],
+    _VECS: [
+        (1, [1.0, 0.0, 0.0]),
+        (2, [0.9, 0.1, 0.0]),
+        (3, [0.0, 1.0, 0.0]),
+        (4, [1.0, 0.01, 0.0]),
     ],
 }
 
@@ -258,27 +269,50 @@ def test_nested_scope_keeps_the_enclosing_policy(spark, tmp_path, monkeypatch):
     local = _rows(connected_components(edges)[0])
     _no_local_checkpoint(spark, monkeypatch)
     with checkpointing(spark, str(tmp_path / "outer"), "t") as outer:
-        labels, stats = connected_components(edges, checkpoint_dir=None)
+        labels, stats = connected_components(edges)
         assert _rows(labels) == local
         assert "checkpoint_subdir" not in stats
         # an inner reliable scope hands the outer subdir back on exit
-        _, inner = connected_components(
-            edges, checkpoint_dir=str(tmp_path / "inner")
-        )
-        assert inner["checkpoint_subdir"].startswith(str(tmp_path / "inner"))
+        with checkpointing(spark, str(tmp_path / "inner"), "cc") as inner:
+            connected_components(edges)
+        assert inner.startswith(str(tmp_path / "inner")) and _holds_files(inner)
         assert outer + "/" in spark.sparkContext.getCheckpointDir()
     assert _holds_files(outer)
 
 
+def test_enclosing_scope_reaches_the_pipeline_cc_thread(
+    spark, tmp_path, monkeypatch
+):
+    """`run_pipeline` runs CC in a pool thread; a scope the caller opened
+    still makes its rounds reliable, with the same triples."""
+    src = str(tmp_path / "cf")
+    synth_code_files(spark, 2000).write.parquet(src)
+
+    def triples(name):
+        out = str(tmp_path / name)
+        run_pipeline(spark, PipelineConfig(source=src, output_dir=out))
+        rows = spark.read.parquet(f"{out}/triples").collect()
+        return sorted(map(tuple, rows), key=repr)
+
+    local = triples("local")
+    _no_local_checkpoint(spark, monkeypatch)
+    with checkpointing(spark, str(tmp_path / "ck"), "run") as sub:
+        reliable = triples("reliable")
+    assert _holds_files(sub)
+    assert reliable == local
+
+
 def test_only_fixpoint_cuts_lineage():
-    """`fixpoint.materialize` is the one lineage cut in the package."""
+    """`fixpoint.materialize` is the one lineage cut in the package, and
+    nothing outside it caches a frame instead."""
     pkg = Path(graph.__file__).parents[1]
     policy = Path(graph.__file__).with_name("fixpoint.py")
+    cuts = ("localCheckpoint(", ".checkpoint(", ".persist(", ".cache(")
     hits = [
         f"{p.relative_to(pkg)}:{n}"
         for p in sorted(pkg.rglob("*.py"))
         if p != policy
         for n, line in enumerate(p.read_text().splitlines(), 1)
-        if "localCheckpoint(" in line or ".checkpoint(" in line
+        if any(c in line for c in cuts)
     ]
     assert hits == []

@@ -1,6 +1,7 @@
 """SURVEY §5.5: kill the pipeline mid-run (after the s3 checkpoint lands),
 rerun, and assert the completed stages are skipped and the final triples
-are identical to an uninterrupted run."""
+are identical to an uninterrupted run; the same with the kill landing
+in the reliable CC rounds."""
 
 import os
 import signal
@@ -71,3 +72,74 @@ def test_kill_after_s3_then_resume(spark, tmp_path):
     out2 = str(tmp_path / "out2")
     run_pipeline(spark, PipelineConfig(source=src, output_dir=out2))
     assert n == spark.read.parquet(f"{out2}/triples").count()
+
+
+_CC_CHILD = _CHILD.replace(
+    "output_dir={out!r})", "output_dir={out!r}, cc_checkpoint_dir={cc!r})"
+)
+
+
+def _sorted_triples(spark, out):
+    rows = spark.read.parquet(f"{out}/triples").collect()
+    return sorted(map(tuple, rows), key=repr)
+
+
+def test_kill_during_reliable_cc_then_resume(spark, tmp_path, monkeypatch):
+    """Kill the pipeline once its CC rounds write reliable checkpoint
+    files; the rerun skips s1, matches an uninterrupted run row for row,
+    and deletes the CC subdir it opened itself."""
+    import omop2owl_vocab_spark.plans.pipeline as pipeline_mod
+
+    src = str(tmp_path / "cf")
+    out = str(tmp_path / "out")
+    cc = str(tmp_path / "cc")
+    synth_code_files(spark, 2000).write.parquet(src)
+    os.makedirs(cc)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def cc_files():
+        return any(files for _, _, files in os.walk(cc))
+
+    proc = subprocess.Popen(
+        [sys.executable, "-c",
+         _CC_CHILD.format(repo=repo, src=src, out=out, cc=cc)],
+        stdout=subprocess.DEVNULL,
+        stderr=subprocess.DEVNULL,
+    )
+    killed = False
+    deadline = time.monotonic() + 240
+    try:
+        while time.monotonic() < deadline and proc.poll() is None:
+            if cc_files():
+                proc.send_signal(signal.SIGKILL)
+                proc.wait()
+                killed = True
+                break
+            time.sleep(0.1)
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+            proc.wait()
+    assert killed or proc.returncode == 0
+    orphans = set(os.listdir(cc))
+
+    # s1 is checkpointed before the CC thread starts: the rerun must not
+    # derive it again
+    def no_derive(*_a, **_k):
+        raise AssertionError("s1 recomputed on resume")
+
+    monkeypatch.setattr(pipeline_mod, "derive_concepts", no_derive)
+    monkeypatch.setattr(pipeline_mod, "derive_edges", no_derive)
+    report = run_pipeline(
+        spark, PipelineConfig(source=src, output_dir=out, cc_checkpoint_dir=cc)
+    )
+    sub = report["stages"].get("s4_link", {}).get("checkpoint_subdir")
+    if sub is not None:
+        assert sub.startswith(cc) and not os.path.exists(sub)
+    # only the killed child's subdirs are left behind
+    assert set(os.listdir(cc)) <= orphans
+    monkeypatch.undo()
+
+    out2 = str(tmp_path / "out2")
+    run_pipeline(spark, PipelineConfig(source=src, output_dir=out2))
+    assert _sorted_triples(spark, out) == _sorted_triples(spark, out2)

@@ -3,6 +3,7 @@
 from pyspark.sql import Row
 
 from omop2owl_vocab_spark.operators.canon import canonicalize_triples
+from omop2owl_vocab_spark.operators.fixpoint import checkpointing
 from omop2owl_vocab_spark.operators.link import canonical_map, connected_components
 
 
@@ -83,10 +84,11 @@ def test_cc_adversarial_topologies_round_bound(spark, tmp_path):
     bound = math.ceil(math.log2(299)) + 2  # = 11
 
     for ckpt in (None, str(tmp_path / "cc_ckpt")):
-        labels, stats = connected_components(
-            _edges(spark, pairs), max_iter=bound, checkpoint_dir=ckpt
-        )
-        got = {r["node"]: r["label"] for r in labels.collect()}
+        with checkpointing(spark, ckpt, "cc"):
+            labels, stats = connected_components(
+                _edges(spark, pairs), max_iter=bound
+            )
+            got = {r["node"]: r["label"] for r in labels.collect()}
         assert stats["converged"] and stats["rounds"] <= bound, stats
         assert stats["changed_per_round"][-1] == 0
         assert all(got[f"n{i:04d}"] == "n0000" for i in range(300))
@@ -127,16 +129,16 @@ def test_triples_diff_and_distributed_pr(spark):
 
 
 def test_cc_reliable_checkpoint_dir(spark, tmp_path):
-    """checkpoint_dir switches per-round lineage truncation to reliable
-    checkpoints (cluster-safe); results identical to localCheckpoint."""
+    """A checkpointing scope switches per-round lineage truncation to
+    reliable checkpoints (cluster-safe); results identical to
+    localCheckpoint."""
     import os
 
     ckpt_dir = str(tmp_path / "cc_ckpt")
     pairs = [(str(i), str(i + 1)) for i in range(1, 6)]
-    labels, stats = connected_components(
-        _edges(spark, pairs), checkpoint_dir=ckpt_dir
-    )
-    got = {r["node"]: r["label"] for r in labels.collect()}
+    with checkpointing(spark, ckpt_dir, "cc"):
+        labels, stats = connected_components(_edges(spark, pairs))
+        got = {r["node"]: r["label"] for r in labels.collect()}
     assert set(got.values()) == {"1"}
     assert stats["converged"]
     # reliable checkpoint blocks actually landed in the directory

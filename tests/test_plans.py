@@ -195,10 +195,10 @@ def test_emission_prunes_import_toks(spark, tmp_path):
 
 
 def test_curation_survivors_cached_once(spark):
-    """curation_decision persists the quality-verdict and survivor frames
-    (r2 verdict #4): every downstream consumer (exact dedup, near-dup
-    groups, final join) must read the cache, not re-derive the
-    gopher/repetition lineage with fresh text scans."""
+    """curation_decision materializes the quality-verdict and survivor
+    frames (r2 verdict #4): every downstream consumer (exact dedup,
+    near-dup groups, final join) must read the materialized rows, not
+    re-derive the gopher/repetition lineage with fresh text scans."""
     from omop2owl_vocab_spark.operators.curate import curation_decision
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -206,8 +206,10 @@ def test_curation_survivors_cached_once(spark):
     plan = _plan(out)
     # verdicts feed the final join + the survivor filter; survivors feed
     # both dedup stages (each of which consumes them multiple times) —
-    # all of those arrivals must be InMemoryTableScan nodes
-    assert plan.count("InMemoryTableScan") >= 4, plan[:2000]
+    # all of those arrivals must be ExistingRDD scans, and no consumer
+    # goes back to the parquet text
+    assert plan.count("ExistingRDD") >= 4, plan[:2000]
+    assert "FileScan parquet" not in plan, plan[:2000]
 
 
 def test_pii_scrub_single_pass(spark):
