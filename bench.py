@@ -69,11 +69,7 @@ def main() -> None:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:
         sf = -1.0
-    spark = get_spark(
-        "bench",
-        master=f"local[{cpus}]",
-        extra_conf={"spark.sql.shuffle.partitions": str(max(int(cpus), 8))},
-    )
+    spark = get_spark("bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
     # JVM/codegen/Arrow warmup so the first timed query isn't charged for it

@@ -11,8 +11,8 @@ from a repeatable command:
     python bench_extra.py --plan q1            # print explain(formatted)
     python bench_extra.py --plan-dir plans/r06 --suffix before q1
 
-Session config matches bench.py (same master/shuffle partitions) so the
-numbers are comparable with BENCH_FULL_LOCAL.json medians.
+Session config matches bench.py (same master, package session defaults)
+so the numbers are comparable with BENCH_FULL_LOCAL.json medians.
 """
 
 from __future__ import annotations
@@ -55,12 +55,10 @@ def main() -> None:
             names.append(a)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        "bench-extra",
-        master=f"local[{cpus}]",
-        extra_conf={"spark.sql.shuffle.partitions": str(max(int(cpus), 8))},
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
     )
+    spark = get_spark("bench-extra", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry_mod.queries()
     unknown = [n for n in names if n not in qs]

@@ -815,6 +815,15 @@ def prefix_filter_pairs(
         .select(
             F.col("pa.id").alias("id_a"), F.col("pb.id").alias("id_b")
         )
+        # the verify below is compute-dense on few candidate bytes, which
+        # AQE would coalesce into one task; an explicit-count hash
+        # partitioning on the dedup keys is not coalesced and leaves the
+        # distinct nothing to re-shuffle
+        .repartition(
+            shingled.sparkSession.sparkContext.defaultParallelism,
+            "id_a",
+            "id_b",
+        )
         .distinct()
     )
     # PPJoin verification: intersect the two records' (distinct) shingle

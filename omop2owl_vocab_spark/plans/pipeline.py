@@ -68,11 +68,6 @@ class PipelineConfig:
     salt_threshold_rows: int = 5_000_000
     salt_buckets: int = 16
     max_records_per_file: int = 5_000_000
-    # canonical map rows below this broadcast explicitly (the ckpt metrics
-    # give the exact count for free); above it, AQE picks the strategy —
-    # at 10^12-file scale a merge-heavy corpus can have a canon map too
-    # big for any driver
-    broadcast_canon_max_rows: int = 5_000_000
     # bucket_count > 0 materializes the s1 checkpoints as bucketed tables
     # hash-clustered on their join keys (concepts on concept_id, edges on
     # concept_id_1), making the emission membership join co-located —
@@ -275,9 +270,10 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
 
         # s3 (emission) and s4 (equivalence CC → canon map) are
         # INDEPENDENT given the s1 frames — overlap them from two driver
-        # threads (guide §2.6): the FIFO scheduler gives s3's stages
-        # resources first and s4's CC rounds back-fill the idle tail
-        # (the CC driver loop is collect-bound, leaving most cores free).
+        # threads (guide §2.6).  The FIFO scheduler gives s3's stages the
+        # cores first, so CC jobs queue behind them and s4 ends after s3:
+        # s4 is the critical path (traced, 4 cores: a CC job waited 1.41 s
+        # for a core behind an 8-task s3 stage).
         # Each stage keeps its own CheckpointManager/directory, so
         # resume/kill semantics are unchanged; job descriptions are
         # thread-local so the UI attribution stays correct.  Each target
@@ -315,12 +311,6 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
             import shutil
 
             shutil.rmtree(cc_subdir, ignore_errors=True)
-        try:
-            canon_rows = ckpt_s4.metrics("s4_canon_map").get("rows", 0)
-        except OSError:
-            canon_rows = 0
-        if canon_rows < cfg.broadcast_canon_max_rows:
-            canon = F.broadcast(canon)
         # s5+s6 fused: canonical rewrite → dedup → salted write, one pass;
         # the partitioned output directory IS the s5 artifact (resume-wise
         # the _SUCCESS marker plays the checkpoint role)

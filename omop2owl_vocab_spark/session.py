@@ -1,47 +1,39 @@
 """SparkSession factory.
 
-Arrow on (vectorized pandas-UDF transfer), AQE on (runtime partition
-coalescing + skew-join splitting), explicit shuffle-partition count.
-Designed so the same builder works on a real multi-executor cluster
-(``spark-submit --py-files``) and on local[N] in the sandbox.
+One session policy, highest first: the caller's ``extra_conf``, then the
+launcher's conf (``spark-submit --conf``, ``spark-defaults.conf``), then
+``_DEFAULTS``.  The same builder works on a cluster
+(``spark-submit --py-files``) and on ``local[N]`` under plain ``python``.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
-# Tuned for the sandbox (local[32], 128 GiB). On a 1000-executor cluster
-# these are overridden by spark-submit conf; AQE re-coalesces at runtime
-# so an over-provisioned shuffle.partitions is safe at any scale.
+# Each entry applies only where neither the caller nor the launcher sets
+# the key.  Apart from the two semantic pins, every entry differs from
+# Spark 4.1.2's own default (tests/test_session.py) and cites why;
+# timings are from a 4-core host at local[4].
 _DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
     # pin ANSI explicitly: Spark 4 flipped the default, and silent
     # version-dependent null-vs-throw semantics are worse than either choice
     "spark.sql.ansi.enabled": "true",
+    # pandas <-> Spark conversion through Arrow: the property test
+    # tests/test_property_emission.py ran 27 vs 58 s without it (3 of 3
+    # alternating runs)
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # AQE's post-shuffle coalescing target.  The upstream default (64m)
-    # is sized for shuffle-bound byte streams; the engine's verify/join
-    # stages are COMPUTE-dense per byte (candidate pairs are ~16 B/row
-    # but expand into array intersections / Levenshtein / hash work
-    # downstream), and at 64m AQE collapses them to 1-2 partitions,
-    # serializing the stage (measured: the dd_prefix_join verify ran on
-    # 2 of 32 cores).  8m keeps small-byte/heavy-CPU stages parallel
-    # while large shuffles are untouched (they already exceed the
-    # advisory per initial partition, so nothing coalesces).  Bytes-
-    # based, so the setting is scale-adaptive rather than tuned to one
-    # host; override for pure-ETL byte-bound clusters via env (guide
-    # §2.2 recommends 100 MB-1 GB partitions there).
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
-        "SPARK_GRAFT_ADVISORY_PARTITION", "8m"
-    ),
+    # A/B vs 200 (5 interleaved kgbench pairs, seed 3, wall_s medians):
+    # operators 32.2 vs 43.2 s, faster in 5 of 5 pairs (its graph queries
+    # run ~100 small stages); pipeline_cold 23.3 vs 24.0 s
     "spark.sql.shuffle.partitions": "32",
-    "spark.sql.files.maxPartitionBytes": "128m",
-    # triple tables are tall+narrow; bigger record batches amortize Arrow overhead
+    # A/B vs 10000 on the pandas-UDF queries (bench_extra.py, sf0.1, 5
+    # alternating pairs of per-query medians): q_lis 3.53 vs 3.83 s,
+    # dd_simhash 7.20 vs 7.43 s, mm_features 0.48 vs 0.55 s, mm_frames
+    # 2.35 vs 2.37 s; the four summed were faster in 4 of 5 pairs
     "spark.sql.execution.arrow.maxRecordsPerBatch": "100000",
     # Optimizer-inference toggle, OFF for this engine's workload: the
     # iterative operators (connected components, DAG layering, PageRank,
@@ -57,19 +49,26 @@ _DEFAULTS = {
     # filters/plan pruning); explicit isnotnull/range predicates in the
     # operators are unaffected.
     "spark.sql.constraintPropagation.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-    "spark.ui.enabled": "false",
-    "spark.ui.showConsoleProgress": "false",
+    # deployment setting: the driver JVM holds every local[N] executor
+    "spark.driver.memory": "8g",
+    # vs 10m: tools/check_oracle.py runs kg_connected_components in 19 vs
+    # 21 jobs at sf0.01, and five more graph queries 1-2 jobs shorter at
+    # sf0.001 (joins the planner broadcasts up front instead of AQE
+    # converting them after their shuffle stages ran); kgbench (5 pairs,
+    # seed 3) pipeline_cold 23.3 vs 25.3 s, operators 32.2 vs 36.8 s
     "spark.sql.autoBroadcastJoinThreshold": "64m",
-    # Throughput collector for the batch workload: on the sandbox microVM,
-    # G1's background GC threads burn ~30% kernel time in
-    # virtualized-timer VMEXITs (BENCH.md round-3 fleet forensics) —
-    # interleaved A/B at local[32]/4M rows averages ParallelGC ~20%
-    # faster (best 62.8 s vs G1's 88.6 s).  Driver-only: on a real
-    # cluster executor JVMs are unaffected and spark-submit conf
-    # overrides this as usual.
-    "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
 }
+
+
+def _launcher_conf() -> dict[str, str] | None:
+    """The conf spark-submit started this driver's JVM with, or None under
+    plain ``python``, which launches its own JVM from the builder."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    # the gateway already exists; SparkConf() then reads the JVM's spark.*
+    # system properties, which spark-submit set from --conf and defaults
+    SparkContext._ensure_initialized()
+    return dict(SparkConf().getAll())
 
 
 def get_spark(
@@ -79,32 +78,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the session.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox; on a
-    cluster leave it unset and let spark-submit supply it.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` under plain
+    ``python``; under spark-submit leave it unset and the launcher's
+    master stands.
     """
     builder = SparkSession.builder.appName(app_name)
-    if master is None and "spark.master" not in os.environ.get(
-        "SPARK_SUBMIT_OPTS", ""
-    ) and not os.environ.get("SPARK_MASTER_SET"):
-        # sandbox default; under spark-submit the master comes from the
-        # launcher conf, so only force local[] when clearly not submitted
-        if os.environ.get("SPARK_ENV_LOADED") or os.environ.get("SPARK_CONF_DIR"):
-            master = None
-        else:
-            cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-            master = f"local[{cpus}]"
+    launcher = _launcher_conf()
+    if master is None and launcher is None:
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     if master is not None:
         builder = builder.master(master)
-    conf = dict(_DEFAULTS)
-    # env override for GC/JVM experiments (e.g. -XX:+UseSerialGC) — merged
-    # AFTER the defaults so it actually wins (builder.config is
-    # last-write-wins; setting it before the defaults loop would be a
-    # silent no-op), but BELOW extra_conf (explicit code beats env)
-    java_opts = os.environ.get("SPARK_GRAFT_JAVA_OPTS")
-    if java_opts:
-        conf["spark.driver.extraJavaOptions"] = java_opts
-    if extra_conf:
-        conf.update(extra_conf)
+    conf = {k: v for k, v in _DEFAULTS.items() if k not in (launcher or {})}
+    conf.update(extra_conf or {})
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -36,7 +36,7 @@ from omop2owl_vocab_spark.sources.synth import synth_code_files  # noqa: E402
 N_ROWS = int(os.environ.get("SKEW_N", 2_000_000))
 ROUNDS = int(os.environ.get("SKEW_ROUNDS", 3))
 ROOT = os.environ.get("SKEW_ROOT", "/dev/shm/skew_s3")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 UI = "http://localhost:4040/api/v1"
 
 
@@ -89,10 +89,7 @@ if __name__ == "__main__":
     spark = get_spark(
         "skew-s3",
         master=f"local[{CPUS}]",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.sql.shuffle.partitions": CPUS,
-        },
+        extra_conf={"spark.ui.enabled": "true"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     APP = _rest("/applications")[0]["id"]

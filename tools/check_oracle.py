@@ -66,10 +66,7 @@ def main(
     only: list[str] | None = None,
     json_out: str | None = None,
 ):
-    spark = get_spark(
-        "oracle-check", master="local[8]",
-        extra_conf={"spark.sql.shuffle.partitions": "8"},
-    )
+    spark = get_spark("oracle-check", master="local[8]")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
