@@ -1891,13 +1891,12 @@ FROM c
 
 
 def _sim_norms(spark, sf_dir):
+    from omop2owl_vocab_spark.operators.similarity import _norm
+    from omop2owl_vocab_spark.operators.text import _e4
+
     emb = _t(spark, sf_dir, "embeddings")
-    v = F.col("embedding").cast("array<double>")
-    norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-    return emb.select(
-        "vec_id",
-        F.floor(norm * 10000 + F.lit(0.5)).cast("long").alias("norm_e4"),
-    )
+    norm = _norm(F.col("embedding").cast("array<double>"))
+    return emb.select("vec_id", _e4(norm).alias("norm_e4"))
 
 
 _SIM_NORMS_SQL = """
@@ -1990,24 +1989,16 @@ def _sim_near_dup_exact(spark, sf_dir):
     (same rationale/measurement as ``_docs64`` — the nested-loop stage
     otherwise runs on one core).  Identical expression tree per value →
     bit-identical cos."""
+    from omop2owl_vocab_spark.operators.similarity import _cosine, _vectors
+    from omop2owl_vocab_spark.operators.text import _e4
+
     emb = _t(spark, sf_dir, "embeddings")
-
-    def _nrm(v):
-        return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
-
-    a = emb.filter(F.col("vec_id") < 200).select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").cast("array<double>").alias("va"),
-    ).withColumn("na", _nrm(F.col("va")))
-    b = emb.repartition(64).select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").cast("array<double>").alias("vb"),
-    ).withColumn("nb", _nrm(F.col("vb")))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+    a = _vectors(
+        emb.filter(F.col("vec_id") < 200), "vec_id", "embedding", "id_a", "a"
     )
+    b = _vectors(emb.repartition(64), "vec_id", "embedding", "id_b", "b")
     # zero-norm guard mirrored in the SQL oracle (ANSI-safe, NULL-excluded)
-    cos = F.when(F.col("na") * F.col("nb") > 0, dot / (F.col("na") * F.col("nb")))
+    cos = _cosine(F.col("av"), F.col("bv"), F.col("an"), F.col("bn"))
     # broadcast the BOUNDED query side explicitly: left to its size
     # estimates the planner broadcasts the 10×-larger corpus and streams
     # the 200-row side on its single scan partition (serial nested loop);
@@ -2016,11 +2007,7 @@ def _sim_near_dup_exact(spark, sf_dir):
         F.broadcast(a).join(b, F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", cos.alias("cos"))
         .filter(F.col("cos").isNotNull() & (F.col("cos") >= 0.3))
-        .select(
-            "id_a",
-            "id_b",
-            F.floor(F.col("cos") * 10000 + F.lit(0.5)).cast("long").alias("cos_e4"),
-        )
+        .select("id_a", "id_b", _e4(F.col("cos")).alias("cos_e4"))
     )
 
 

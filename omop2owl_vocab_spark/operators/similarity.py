@@ -1,11 +1,18 @@
 """Similarity search over embedding columns (``array<float>``).
 
-- Brute-force cosine top-k: the exactness baseline. Broadcast the (small)
-  query set against the corpus — one narrow pass over the corpus, no
-  shuffle except the final per-query top-k aggregate.
-- LSH-bucketed ANN (random hyperplanes, seeded/deterministic): the scale
-  path — hash every vector to a b-bit sign bucket, compare only within
-  bucket (± optionally neighboring buckets). Recall tested vs brute force.
+One scoring path: every cosine goes through ``_vectors`` (the id, the
+vector as ``array<double>``, its norm computed once per vector) and
+``_cosine``, and every top-k through ``_ranked_cosine`` (join, score,
+rank, ``cos_e4`` export).  The top-k operators differ only in candidate
+generation:
+
+- ``cosine_topk``: the cross product against the broadcast (small) query
+  set — the exactness baseline.
+- ``ann_topk_bucketed``: seeded random-hyperplane LSH — compare only
+  within a b-bit sign bucket (± Hamming-1 multi-probe).  Recall tested
+  vs brute force.
+- ``ivf_topk``: IVF — each query scans its ``nprobe`` nearest centroids'
+  inverted lists.
 
 Dot products use ``F.zip_with`` + ``F.aggregate`` (JVM, codegen) — no
 Python in the scoring loop.  Scores exported as *_e4 fixed-point for
@@ -20,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from omop2owl_vocab_spark.operators.fixpoint import materialize
+from omop2owl_vocab_spark.operators.text import _e4
 
 
 def _dot(a, b):
@@ -36,51 +44,51 @@ def _norm(v):
     )
 
 
-def _cosine(a, b):
-    """Null-safe cosine: zero-norm vectors (padding rows, empty docs) yield
-    NULL instead of an ANSI DIVIDE_BY_ZERO — callers filter nulls out."""
-    denom = _norm(a) * _norm(b)
-    return F.when(denom > 0, _dot(a, b) / denom)
-
-
-def _cosine_pre(a, b, na, nb):
-    """`_cosine` with the two norms already materialized as columns.
+def _vectors(
+    df: DataFrame, id_col: str, vec_col: str, id_as: str, tag: str, *keep: str
+) -> DataFrame:
+    """``(id_as, {tag}v, {tag}n, *keep)``: the id, the vector cast to
+    ``array<double>``, and its ``_norm``.
 
     Norms are per-VECTOR quantities; evaluating them inside the pair
     expression recomputes each side's norm once per PAIR (q·n times for
-    a q×n join) because HOF lambdas sit outside Catalyst CSE.  Callers
-    attach ``_norm(v)`` to each side before the join so every vector's
-    norm is computed exactly once (guide §1.2 step 1: don't compute
-    things you throw away).  The arithmetic is the identical expression
-    tree (`sqrt(fold)` per side, then the same product/division), so
-    results are bit-identical to `_cosine`."""
+    a q×n join) because HOF lambdas sit outside Catalyst CSE.  Attaching
+    the norm to each side before the join computes every vector's norm
+    exactly once (guide §1.2 step 1: don't compute things you throw
+    away)."""
+    return df.select(
+        F.col(id_col).alias(id_as),
+        F.col(vec_col).cast("array<double>").alias(f"{tag}v"),
+        *keep,
+    ).withColumn(f"{tag}n", _norm(F.col(f"{tag}v")))
+
+
+def _cosine(a, b, na, nb):
+    """Null-safe cosine of vectors ``a``, ``b`` whose norms ``na``, ``nb``
+    come from ``_vectors``: zero-norm vectors (padding rows, empty docs)
+    yield NULL instead of an ANSI DIVIDE_BY_ZERO — callers filter nulls
+    out."""
     denom = na * nb
     return F.when(denom > 0, _dot(a, b) / denom)
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def _ranked_cosine(
+    c: DataFrame, q: DataFrame, k: int, on=None, broadcast_queries=True
 ) -> DataFrame:
-    """Exact top-k neighbors per query (excluding self-matches by id).
+    """Top-``k`` neighbors per query by cosine, self-matches excluded.
 
-    ``queries`` is expected small → broadcast; corpus side never shuffles
-    until the rank-k aggregate on (query_id) keys.
+    ``c`` is ``_vectors(corpus, …, "neighbor_id", "c", …)`` and ``q`` is
+    ``_vectors(queries, …, "query_id", "q", …)``; they meet on the
+    candidate key ``on`` (``None``: the cross product).  Ties rank by
+    ``neighbor_id``.  Output ``(query_id, neighbor_id, rank, cos_e4)``.
+    ``broadcast_queries`` force-broadcasts the query side (the retrieval
+    regime, queries ≪ corpus); False leaves the join to the planner/AQE.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    ).withColumn("qn", _norm(F.col("qv")))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("cn", _norm(F.col("cv")))
-    cos = _cosine_pre(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
+    if k < 1:
+        raise ValueError(f"k must be positive, got {k}")
+    cos = _cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
     scored = (
-        c.join(F.broadcast(q))
+        c.join(F.broadcast(q) if broadcast_queries else q, on)
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", cos.alias("cos"))
         .filter(F.col("cos").isNotNull())
@@ -95,8 +103,27 @@ def cosine_topk(
             "query_id",
             "neighbor_id",
             F.col("rank").cast("long").alias("rank"),
-            F.floor(F.col("cos") * 10000 + F.lit(0.5)).cast("long").alias("cos_e4"),
+            _e4(F.col("cos")).alias("cos_e4"),
         )
+    )
+
+
+def cosine_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact top-k neighbors per query (excluding self-matches by id).
+
+    ``queries`` is expected small → broadcast; corpus side never shuffles
+    until the rank-k aggregate on (query_id) keys.
+    """
+    return _ranked_cosine(
+        _vectors(corpus, id_col, vec_col, "neighbor_id", "c"),
+        _vectors(queries, id_col, vec_col, "query_id", "q"),
+        k,
     )
 
 
@@ -161,12 +188,7 @@ def hyperplane_buckets(
     bits = []
     for b in range(n_bits):
         w = F.array(*[F.lit(x) for x in weights[b]])
-        proj = F.aggregate(
-            F.zip_with(v, w, lambda x, wi: x * wi),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
+        bits.append(F.when(_dot(v, w) >= 0, F.lit("1")).otherwise(F.lit("0")))
     return df.select(
         F.col(id_col), F.col(vec_col), F.concat(*bits).alias("bucket")
     )
@@ -227,33 +249,12 @@ def ann_topk_bucketed(
         qb = qb.withColumn(
             "bucket", F.explode(_probe_buckets(F.col("bucket"), n_bits, probes))
         )
-    q = qb.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
+    return _ranked_cosine(
+        _vectors(cb, id_col, vec_col, "neighbor_id", "c", "bucket"),
+        _vectors(qb, id_col, vec_col, "query_id", "q", "bucket"),
+        k,
         "bucket",
-    ).withColumn("qn", _norm(F.col("qv")))
-    c = cb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-        "bucket",
-    ).withColumn("cn", _norm(F.col("cv")))
-    cos = _cosine_pre(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
-    scored = (
-        c.join(F.broadcast(q) if broadcast_queries else q, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-        .filter(F.col("cos").isNotNull())
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.floor(F.col("cos") * 10000 + F.lit(0.5)).cast("long").alias("cos_e4"),
-        )
+        broadcast_queries,
     )
 
 
@@ -337,33 +338,15 @@ def ivf_topk(
     k-means fit, a fixed sample, ...); determinism of the ASSIGNMENT given
     the centroids is what the exactness tests/oracle pin down.
     """
-    cl = ivf_assign(corpus, centroids, id_col, vec_col, rank_limit=1).select(
-        F.col("id").alias("neighbor_id"),
-        F.col("vec").alias("cv"),
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be positive, got {nprobe}")
+    cl = ivf_assign(corpus, centroids, id_col, vec_col, rank_limit=1)
+    ql = ivf_assign(queries, centroids, id_col, vec_col, rank_limit=nprobe)
+    return _ranked_cosine(
+        _vectors(cl, "id", "vec", "neighbor_id", "c", "centroid_id"),
+        _vectors(ql, "id", "vec", "query_id", "q", "centroid_id"),
+        k,
         "centroid_id",
-    ).withColumn("cn", _norm(F.col("cv")))
-    ql = ivf_assign(queries, centroids, id_col, vec_col, rank_limit=nprobe).select(
-        F.col("id").alias("query_id"),
-        F.col("vec").alias("qv"),
-        "centroid_id",
-    ).withColumn("qn", _norm(F.col("qv")))
-    cos = _cosine_pre(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
-    scored = (
-        cl.join(F.broadcast(ql), "centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-        .filter(F.col("cos").isNotNull())
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.floor(F.col("cos") * 10000 + F.lit(0.5)).cast("long").alias("cos_e4"),
-        )
     )
 
 
@@ -404,25 +387,15 @@ def embedding_near_duplicates(
     )
     if n_tables > 1:
         pairs = pairs.dropDuplicates(["id_a", "id_b"])
-    va = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).cast("array<double>").alias("va"),
-    ).withColumn("na", _norm(F.col("va")))
-    vb = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).cast("array<double>").alias("vb"),
-    ).withColumn("nb", _norm(F.col("vb")))
-    cos = _cosine_pre(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
+    va = _vectors(df, id_col, vec_col, "id_a", "a")
+    vb = _vectors(df, id_col, vec_col, "id_b", "b")
+    cos = _cosine(F.col("av"), F.col("bv"), F.col("an"), F.col("bn"))
     return (
         pairs.join(va, "id_a")
         .join(vb, "id_b")
         .select("id_a", "id_b", cos.alias("cos"))
         .filter(F.col("cos").isNotNull() & (F.col("cos") >= threshold))
-        .select(
-            "id_a",
-            "id_b",
-            F.floor(F.col("cos") * 10000 + F.lit(0.5)).cast("long").alias("cos_e4"),
-        )
+        .select("id_a", "id_b", _e4(F.col("cos")).alias("cos_e4"))
     )
 
 
@@ -458,8 +431,6 @@ def ann_recall(
     broadcast into each method's semi-join; all heavy lifting stays in
     the underlying operators' bucketed plans.
     """
-    if k <= 0:
-        raise ValueError("k must be positive")
     truth = materialize(
         cosine_topk(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
         .select("query_id", "neighbor_id")
@@ -508,13 +479,11 @@ def ann_recall(
             ),
             F.when(
                 F.col("total_truth") > 0,
-                F.floor(
+                _e4(
                     F.coalesce(F.col("total_hits"), F.lit(0))
                     / F.col("total_truth")
-                    * 10000
-                    + F.lit(0.5)
                 ),
-            ).cast("long").alias("recall_e4"),
+            ).alias("recall_e4"),
         )
     )
 

@@ -488,6 +488,22 @@ def test_embedding_near_dup_rejects_zero_tables(spark, vectors):
         S.embedding_near_duplicates(vectors, dim=3, n_tables=0)
 
 
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda v: S.cosine_topk(v, v, k=0),
+        lambda v: S.ann_topk_bucketed(v, v, k=0, dim=3),
+        lambda v: S.ivf_topk(v, v, v, k=-1),
+        lambda v: S.ivf_topk(v, v, v, nprobe=0),
+    ],
+    ids=["cosine_topk-k", "ann_topk_bucketed-k", "ivf_topk-k", "ivf_topk-nprobe"],
+)
+def test_vector_topk_rejects_out_of_range(spark, vectors, call):
+    """k < 1 or nprobe < 1 once returned an empty frame without an error."""
+    with pytest.raises(ValueError, match="must be positive"):
+        call(vectors)
+
+
 def test_sample_frames_validation_and_negative_duration(spark, docs):
     media = M.synth_media(docs.filter(F.col("doc_id") == 1)).withColumn(
         "meta_duration_ms", F.lit(-500).cast("long")

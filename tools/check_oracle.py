@@ -3,14 +3,26 @@
 same sf dir, compare row count, column names, and an order-insensitive
 value hash (rows stringified, column-name-sorted, then sorted + md5).
 
+The sf dir is ``main``'s ``sf_dir``, else ``$SPARK_GRAFT_SF_DIR``, else
+the sf0.01 test data; the session is ``get_spark``'s
+``local[$SPARK_GRAFT_CPUS]``::
+
+    SPARK_GRAFT_SF_DIR=<testdata>/sf0.001 python tools/check_oracle.py
+
 Each query (build plus collect) runs in a Spark job group of its own,
 and the number of Spark jobs it launched is printed in its line and
-recorded as ``jobs`` in the ``--json`` record."""
+recorded as ``jobs`` in the ``--json`` record.  That count is not fixed
+for every query: ``dd_groups`` at sf0.001 reads 37 or 38 jobs from one
+run of the same code to the next, alone or inside the full run.  To
+compare a touched query's jobs between two commits, run it alone at
+both, more than once."""
 
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
+import uuid
 from pathlib import Path
 
 import duckdb
@@ -48,9 +60,11 @@ def value_hash(cols, rows) -> str:
 
 def _run_counted(spark, name: str, run):
     """(result of ``run()``, Spark jobs it launched), counted in a job
-    group named after the query."""
+    group named after the query and unique to this call: the status
+    tracker keeps every retained job of a group, so a reused group would
+    count earlier calls' jobs too."""
     sc = spark.sparkContext
-    group = f"oracle-{name}"
+    group = f"oracle-{name}-{uuid.uuid4().hex}"
     sc.setJobGroup(group, name)
     try:
         out = run()
@@ -62,11 +76,14 @@ def _run_counted(spark, name: str, run):
 
 
 def main(
-    sf_dir: str = "/root/testdata/sf0.01",
+    sf_dir: str | None = None,
     only: list[str] | None = None,
     json_out: str | None = None,
 ):
-    spark = get_spark("oracle-check", master="local[8]")
+    sf_dir = sf_dir or os.environ.get(
+        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"
+    )
+    spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
