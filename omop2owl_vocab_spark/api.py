@@ -77,6 +77,7 @@ def omop2owl(
     reference's per-concept emission) and True in code mode (the
     Maps-to equivalence merge is part of the KG pipeline there).
     """
+    from omop2owl_vocab_spark.cli import _canonicalize_default
     from omop2owl_vocab_spark.plans.pipeline import PipelineConfig, run_pipeline
     from omop2owl_vocab_spark.session import get_spark
 
@@ -92,8 +93,6 @@ def omop2owl(
         )
     outdir = outdir or os.getcwd()
     outdir = outdir if os.path.isabs(outdir) else os.path.join(os.getcwd(), outdir)
-    if canonicalize is None:
-        canonicalize = mode == "code"
 
     cfg = PipelineConfig(
         source=source or concept_csv_path,
@@ -103,7 +102,7 @@ def omop2owl(
         ontology_id=ontology_id,
         relationships=list(relationships or ["Is a"]),
         vocabs=list(vocabs or []),
-        canonicalize=canonicalize,
+        canonicalize=_canonicalize_default({"canonicalize": canonicalize}, mode),
         exclude_singletons=exclude_singletons,
         resume=use_cache,
     )

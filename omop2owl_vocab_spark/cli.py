@@ -108,8 +108,9 @@ def cli_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--compact-output", action="store_true",
-        help="salted repartition before the final write for few, bounded "
-        "files per vocabulary (adds one full-width shuffle)",
+        help="salted repartition before the final write for few files per "
+        "vocabulary, a large vocabulary spread over its share of the "
+        "default parallelism (adds one full-width shuffle)",
     )
     p.add_argument(
         "-M", "--memory", type=int, default=100, help="ignored (no robot.jar here)"
@@ -119,7 +120,8 @@ def cli_parser() -> argparse.ArgumentParser:
 
 
 def _canonicalize_default(d: dict, mode: str) -> bool:
-    """Reference parity (api.py omop2owl adapter, same rationale): omop mode
+    """The mode default for ``canonicalize`` (this CLI and ``api.omop2owl``
+    both resolve it here).  Reference parity: omop mode
     does NOT merge 'Maps to' equivalences — the reference keeps mapped
     concepts distinct, and every fixture contains 'Maps to' rows, so a
     True default silently diverges on the plain

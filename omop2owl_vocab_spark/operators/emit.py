@@ -198,7 +198,6 @@ def emit_triples(
     rel_df: DataFrame,
     relationships: list[str] | None = None,
     exclude_singletons: bool = False,
-    singleton_bug_compat: bool = False,
     dedupe: bool = True,
 ) -> DataFrame:
     """Full emission: R1-R3 ∪ R4-R6, deduplicated.
@@ -209,9 +208,7 @@ def emit_triples(
     anyway, and skipping here saves one full-width shuffle of the triple set.
     """
     if exclude_singletons:
-        concepts = exclude_singleton_concepts(
-            concepts, rel_df, bug_compat=singleton_bug_compat
-        )
+        concepts = exclude_singleton_concepts(concepts, rel_df)
     concept_triples = emit_concept_triples(concepts)
     edge_triples = emit_edge_triples(
         resolve_edges(rel_df, concepts, relationships)

@@ -15,12 +15,15 @@ Concept mapping (SURVEY §1.5):
   concept_code      = path
   standard_concept  = 'S'
   src_sha256        = sha2(content, 256)   (the per-row invariant)
+  import_toks       = the file's ``import pkgN.modM`` tokens (edge input)
 
 Directory concepts are synthesized for every path prefix (vocabulary_id=''
 → 'Metadata' partition, reference X8 semantics) so containment 'Is a'
 edges resolve to real subjects.
 
-Edge derivation (same schema as concept_relationship, so S2+ apply as-is):
+``content`` is read once, by the concept projection.  Edges derive from
+the concepts frame alone, in concept_relationship's schema so S2+ apply
+as-is:
   - containment: file →('Is a')→ parent dir →('Is a')→ grandparent …
   - same-content: rows sharing sha256(content) → star 'Maps to' edges to
     the group's min concept_id (CC input; avoids O(k²) pair blowup)
@@ -47,17 +50,16 @@ def _dir_concept_id(repo: F.Column, dirpath: F.Column) -> F.Column:
     return F.abs(F.xxhash64(repo, dirpath, F.lit("dir"))).cast("string")
 
 
-def derive_file_concepts(
-    code_files: DataFrame, with_import_toks: bool = False
-) -> DataFrame:
+def derive_file_concepts(code_files: DataFrame) -> DataFrame:
     """File-row concepts only — stateless (streaming-safe).
 
-    ``with_import_toks=True`` adds an ``import_toks`` array column (the
-    per-file import tokens) extracted in the SAME projection as the
-    sha256 — so ``content``, the dominant column at 100 TB, is scanned
-    exactly once for the whole pipeline (edges then derive from the
-    concepts checkpoint with zero further content reads)."""
-    cols = [
+    The ``import_toks`` array column (the per-file import tokens) is
+    extracted in the SAME projection as the sha256, so ``content``, the
+    dominant column at 100 TB, is scanned exactly once for the whole
+    pipeline.  Column pruning drops the regex from any plan that never
+    reads ``import_toks`` (the streaming ingest, the s3 emission)."""
+    content = F.coalesce(F.col("content"), F.lit(""))
+    return code_files.select(
         _file_concept_id().alias("concept_id"),
         F.element_at(F.split(F.col("path"), "/"), -1).alias("concept_name"),
         F.col("repo").alias("domain_id"),
@@ -68,25 +70,18 @@ def derive_file_concepts(
         F.lit("").alias("valid_start_date"),
         F.lit("").alias("valid_end_date"),
         F.lit("").alias("invalid_reason"),
-        F.sha2(F.coalesce(F.col("content"), F.lit("")), 256).alias("src_sha256"),
-    ]
-    if with_import_toks:
-        cols.append(
-            F.regexp_extract_all(
-                F.coalesce(F.col("content"), F.lit("")), F.lit(_IMPORT_RE), 1
-            ).alias("import_toks")
-        )
-    return code_files.select(*cols)
+        F.sha2(content, 256).alias("src_sha256"),
+        # NB: a Column pattern, NOT F.expr with an interpolated regex —
+        # SQL string literals eat the backslashes
+        F.regexp_extract_all(content, F.lit(_IMPORT_RE), 1).alias("import_toks"),
+    )
 
 
-def derive_concepts(
-    code_files: DataFrame, with_import_toks: bool = False
-) -> DataFrame:
+def derive_concepts(code_files: DataFrame) -> DataFrame:
     """File concepts ∪ synthesized directory concepts (batch path).
 
     Directory concepts need a global ``distinct`` (stateful), so the
     streaming path uses :func:`derive_file_concepts` only."""
-    files = derive_file_concepts(code_files, with_import_toks=with_import_toks)
     dirs = _dir_paths(code_files).select(
         _dir_concept_id(F.col("repo"), F.col("dirpath")).alias("concept_id"),
         F.element_at(F.split(F.col("dirpath"), "/"), -1).alias("concept_name"),
@@ -99,12 +94,9 @@ def derive_concepts(
         F.lit("").alias("valid_end_date"),
         F.lit("").alias("invalid_reason"),
         F.lit("").alias("src_sha256"),
+        F.array().cast("array<string>").alias("import_toks"),
     )
-    if with_import_toks:
-        dirs = dirs.withColumn(
-            "import_toks", F.array().cast("array<string>")
-        )
-    return files.unionByName(dirs)
+    return derive_file_concepts(code_files).unionByName(dirs)
 
 
 def _dir_paths(code_files: DataFrame) -> DataFrame:
@@ -136,17 +128,16 @@ def _edge(c1: F.Column, c2: F.Column, rel: str) -> list[F.Column]:
     ]
 
 
-def derive_edges_from_concepts(concepts: DataFrame) -> DataFrame:
+def derive_edges(concepts: DataFrame) -> DataFrame:
     """Containment ∪ same-sha 'Maps to' ∪ import edges, derived ENTIRELY
-    from a concepts frame that carries ``import_toks`` — zero reads of the
-    source ``content`` column.
+    from a :func:`derive_concepts` frame — zero reads of the source
+    ``content`` column.
 
-    This is the scale path: with ``derive_concepts(code,
-    with_import_toks=True)`` checkpointed as s1, the 100 TB ``content``
-    column is scanned exactly once per pipeline run; every edge family
-    below works off the (narrow) checkpoint.  File rows are the ones with
-    a non-empty ``src_sha256``; directory rows (synthesized, sha='')
-    re-derive their ids from (domain_id, concept_code) with the same
+    With the concepts checkpointed as s1, the 100 TB ``content`` column is
+    scanned exactly once per pipeline run; every edge family below works
+    off the (narrow) checkpoint.  File rows are the ones with a non-empty
+    ``src_sha256``; directory rows (synthesized, sha='') re-derive their
+    parents' ids from (domain_id, concept_code) with the same
     ``_dir_concept_id`` hash.
     """
     files = concepts.filter(F.col("src_sha256") != "").select(
@@ -197,102 +188,12 @@ def derive_edges_from_concepts(concepts: DataFrame) -> DataFrame:
         repo.alias("r"),
         F.explode("import_toks").alias("tok"),
     )
+    # single-segment paths (root-level files) have no package dir — guard
+    # the -2 access (element_at throws under ANSI) and drop them from the
+    # import-target side rather than crash the stage
     parts_t = F.split(F.col("path"), "/")
     targets = files.filter(F.size(parts_t) >= 2).select(
         F.col("cid").alias("dst_cid"),
-        repo.alias("r"),
-        F.concat(
-            F.element_at(parts_t, -2),
-            F.lit("."),
-            F.regexp_replace(F.element_at(parts_t, -1), r"\.[^.]+$", ""),
-        ).alias("tok"),
-    )
-    import_edges = (
-        imports.join(targets, ["r", "tok"])
-        .filter(F.col("src_cid") != F.col("dst_cid"))
-        .select(*_edge(F.col("src_cid"), F.col("dst_cid"), "imports"))
-    )
-
-    return file_contain.unionByName(dir_contain).unionByName(maps_to).unionByName(
-        import_edges
-    )
-
-
-def derive_edges(
-    code_files: DataFrame, concepts: DataFrame | None = None
-) -> DataFrame:
-    """Containment ∪ same-sha 'Maps to' ∪ import edges.
-
-    When ``concepts`` carries ``import_toks`` (derive_concepts with
-    ``with_import_toks=True``) the whole derivation runs off the concepts
-    frame via :func:`derive_edges_from_concepts` — no content re-read at
-    all.  Otherwise, pass ``concepts`` to at least reuse its ``src_sha256``
-    for the Maps-to groups — skips one full re-read + re-hash of the
-    ``content`` column.
-    """
-    if concepts is not None and "import_toks" in concepts.columns:
-        return derive_edges_from_concepts(concepts)
-    repo = F.col("repo")
-
-    # file → immediate parent directory
-    parent_dir = F.expr(
-        "array_join(slice(split(path, '/'), 1, size(split(path, '/')) - 1), '/')"
-    )
-    file_contain = code_files.filter(F.size(F.split(F.col("path"), "/")) > 1).select(
-        *_edge(_file_concept_id(), _dir_concept_id(repo, parent_dir), "Is a")
-    )
-
-    # dir → parent dir
-    dirs = _dir_paths(code_files).filter(F.size(F.split(F.col("dirpath"), "/")) > 1)
-    dir_parent = F.expr(
-        "array_join(slice(split(dirpath, '/'), 1, size(split(dirpath, '/')) - 1), '/')"
-    )
-    dir_contain = dirs.select(
-        *_edge(
-            _dir_concept_id(repo, F.col("dirpath")),
-            _dir_concept_id(repo, dir_parent),
-            "Is a",
-        )
-    )
-
-    # same-content equivalence: star to the group min (CC-friendly, no k²)
-    if concepts is not None:
-        by_sha = concepts.filter(F.col("src_sha256") != "").select(
-            F.col("concept_id").alias("cid"), F.col("src_sha256").alias("sha")
-        )
-    else:
-        # NB: coalesce matches derive_file_concepts — NULL content is
-        # normalized to '' per the F1 null-normalize rule, so both the
-        # legacy and the single-scan path group it with empty files
-        by_sha = code_files.select(
-            _file_concept_id().alias("cid"),
-            F.sha2(F.coalesce(F.col("content"), F.lit("")), 256).alias("sha"),
-        )
-    hubs = by_sha.groupBy("sha").agg(
-        F.min("cid").alias("hub"), F.count("*").alias("n")
-    ).filter(F.col("n") > 1)
-    maps_to = (
-        by_sha.join(hubs, "sha")
-        .filter(F.col("cid") != F.col("hub"))
-        .select(*_edge(F.col("cid"), F.col("hub"), "Maps to"))
-    )
-
-    # imports: token → (repo, pkg.stem) equi-join against module stems
-    imports = code_files.select(
-        _file_concept_id().alias("src_cid"),
-        repo.alias("r"),
-        # NB: F.regexp_extract_all with a Column pattern, NOT F.expr with an
-        # interpolated regex — SQL string literals eat the backslashes.
-        F.explode(
-            F.regexp_extract_all("content", F.lit(_IMPORT_RE), 1)
-        ).alias("tok"),
-    )
-    # single-segment paths (root-level files) have no package dir —
-    # guard the -2 access (element_at throws under ANSI) and drop them
-    # from the import-target side rather than crash the stage
-    parts_t = F.split(F.col("path"), "/")
-    targets = code_files.filter(F.size(parts_t) >= 2).select(
-        _file_concept_id().alias("dst_cid"),
         repo.alias("r"),
         F.concat(
             F.element_at(parts_t, -2),

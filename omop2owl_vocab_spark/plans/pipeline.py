@@ -13,15 +13,16 @@ One lazy DAG per stage, checkpointed between stages:
 Where the reference bounds memory by *sequential per-vocab subruns*
 (``split_by_vocab``, omop2owl_vocab.py:462-540, "Use this option if running
 out of memory"), we get the same isolation from partition parallelism, and
-handle the SNOMED-analog skew (one giant ``lang``) by salting the final
-repartition: files per output partition stay bounded regardless of vocab
-size, and no text-stitching merge stage exists because ``union`` is a
-logical-plan node.
+``compact_output`` handles the SNOMED-analog skew (one giant ``lang``) by
+salting the final repartition, sized from the s3 per-vocab lineage: files
+per output partition stay bounded regardless of vocab size, and no
+text-stitching merge stage exists because ``union`` is a logical-plan node.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 from dataclasses import dataclass, field, asdict
 
@@ -41,6 +42,7 @@ from omop2owl_vocab_spark.sources.omop import (
 )
 
 ONTOLOGY_IRI_FMT = "http://purl.obolibrary.org/obo/{}/ontology"  # R9 (:445-446)
+MAX_RECORDS_PER_FILE = 5_000_000
 
 
 @dataclass
@@ -57,17 +59,13 @@ class PipelineConfig:
     exclude_singletons: bool = False
     resume: bool = True
     # compact_output=True adds a salted repartition before the write so each
-    # vocab lands in few, bounded files (skew-salted).  False (default)
-    # writes straight out of the dedup aggregate's partitioning — one fewer
-    # full-width shuffle; skew is already neutralized because the dedup
-    # hash keys (subj, pred, obj) distribute uniformly, and partitionBy
-    # splits files per vocab within each task.
+    # vocab lands in few files, a giant vocab salted over its share of the
+    # task slots (_salted_repartition).  False (default) writes straight
+    # out of the dedup aggregate's partitioning — one fewer full-width
+    # shuffle; skew is already neutralized because the dedup hash keys
+    # (subj, pred, obj) distribute uniformly, and partitionBy splits files
+    # per vocab within each task.
     compact_output: bool = False
-    # salting: vocabs whose triple count exceeds this get hash-salted into
-    # this many sub-buckets at the compact-output repartition
-    salt_threshold_rows: int = 5_000_000
-    salt_buckets: int = 16
-    max_records_per_file: int = 5_000_000
     # bucket_count > 0 materializes the s1 checkpoints as bucketed tables
     # hash-clustered on their join keys (concepts on concept_id, edges on
     # concept_id_1), making the emission membership join co-located —
@@ -93,8 +91,8 @@ class PipelineConfig:
         return d
 
     # per-stage cache keys: each stage's checkpoint is invalidated only by
-    # the config fields that feed it — re-layout knobs (compact_output,
-    # salt_*, max_records_per_file) must NOT force upstream recomputes
+    # the config fields that feed it — the re-layout knob (compact_output)
+    # must NOT force upstream recomputes
     def key_s1(self) -> dict:
         return {
             "stage": "s1",
@@ -134,16 +132,15 @@ def _load_inputs(
         code = read_code_files(spark, cfg.source)
         # single content scan for the whole run: concepts carry the
         # per-file import tokens, and the edge stage derives everything
-        # from this checkpoint (derive_edges_from_concepts) — the 100 TB
-        # content column is never read a second time
+        # from this checkpoint — the 100 TB content column is never read
+        # a second time
         concepts, _ = ckpt.get_or_compute(
-            spark, "s1_concepts",
-            lambda: derive_concepts(code, with_import_toks=True),
+            spark, "s1_concepts", lambda: derive_concepts(code),
             lineage_col="vocabulary_id", resume=cfg.resume,
             bucket_col="concept_id", bucket_count=cfg.bucket_count,
         )
         edges, _ = ckpt.get_or_compute(
-            spark, "s1_edges", lambda: derive_edges(code, concepts=concepts),
+            spark, "s1_edges", lambda: derive_edges(concepts),
             lineage_col="relationship_id", resume=cfg.resume,
             bucket_col="concept_id_1", bucket_count=cfg.bucket_count,
         )
@@ -166,27 +163,24 @@ def _load_inputs(
 
 
 def _salted_repartition(
-    triples: DataFrame, cfg: PipelineConfig, counts: dict | None = None
+    triples: DataFrame, counts: dict[str, int], parallelism: int
 ) -> DataFrame:
-    """Skew-aware final layout: vocabs above threshold spread over
-    ``salt_buckets`` hash buckets; small vocabs land in one task each.
-
-    ``counts`` (vocab → rows) is reused from the upstream stage's lineage
-    metrics when available — no extra count job."""
-    if counts is None:
-        counts = {
-            r[0]: r[1]
-            for r in triples.groupBy("vocabulary_id").count().collect()
-        }
-    big = [v for v, n in counts.items() if n >= cfg.salt_threshold_rows]
-    if big:
-        salt = F.when(
-            F.col("vocabulary_id").isin(big),
-            F.pmod(F.xxhash64("subj"), F.lit(cfg.salt_buckets)),
-        ).otherwise(F.lit(0))
-    else:
-        salt = F.lit(0)
-    n_parts = max(len(counts), 1) + len(big) * (cfg.salt_buckets - 1)
+    """Skew-aware final layout sized from ``counts`` (vocab → rows): a
+    vocab with ``n_v`` of the ``N`` rows gets ``k_v = max(1, ceil(n_v · P
+    / N))`` hash buckets for ``P = parallelism``, so a giant vocab spreads
+    over its fair share of the task slots and a small one lands in one
+    task."""
+    total = max(sum(counts.values()), 1)
+    buckets = {
+        v: max(1, math.ceil(n * parallelism / total)) for v, n in counts.items()
+    }
+    salt = F.lit(0)
+    for v, k in buckets.items():
+        if k > 1:
+            salt = F.when(
+                F.col("vocabulary_id") == v, F.pmod(F.xxhash64("subj"), F.lit(k))
+            ).otherwise(salt)
+    n_parts = max(sum(buckets.values()), 1)
     return triples.repartition(n_parts, F.col("vocabulary_id"), salt)
 
 
@@ -196,8 +190,8 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     from omop2owl_vocab_spark.plans.checkpoint import config_hash
 
     ckpt_root = os.path.join(cfg.output_dir, "ckpt")
-    # per-stage managers so a re-layout rerun (compact_output, salting,
-    # file-size knobs) reuses every upstream checkpoint
+    # per-stage managers so a re-layout rerun (compact_output) reuses
+    # every upstream checkpoint
     ckpt_s1 = CheckpointManager(ckpt_root, cfg.key_s1())
     ckpt_s3 = CheckpointManager(ckpt_root, cfg.key_s3())
     ckpt_s4 = CheckpointManager(ckpt_root, cfg.key_s4())
@@ -323,16 +317,16 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     if cfg.compact_output:
         # salt from the raw-stage lineage: canonicalization only shrinks
         # counts slightly, and salting needs magnitude, not exactness
-        try:
-            counts = ckpt_s3.metrics("s3_triples_raw").get("partition_lineage")
-        except OSError:
-            counts = None
-        final = _salted_repartition(triples, cfg, counts=counts)
+        final = _salted_repartition(
+            triples,
+            ckpt_s3.metrics("s3_triples_raw")["partition_lineage"],
+            spark.sparkContext.defaultParallelism,
+        )
     else:
         final = triples
     (
         final.write.mode("overwrite")
-        .option("maxRecordsPerFile", cfg.max_records_per_file)
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
         .partitionBy("vocabulary_id")
         .parquet(out_dir)
     )

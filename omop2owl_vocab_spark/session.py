@@ -2,8 +2,10 @@
 
 One session policy, highest first: the caller's ``extra_conf``, then the
 launcher's conf (``spark-submit --conf``, ``spark-defaults.conf``), then
-``_DEFAULTS``.  The same builder works on a cluster
-(``spark-submit --py-files``) and on ``local[N]`` under plain ``python``.
+``_DEFAULTS``.  ``_DEFAULTS`` seed a session only when ``get_spark``
+creates it: a call that reuses the live session leaves its conf as it is.
+The same builder works on a cluster (``spark-submit --py-files``) and on
+``local[N]`` under plain ``python``.
 """
 
 from __future__ import annotations
@@ -80,7 +82,7 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` under plain
     ``python``; under spark-submit leave it unset and the launcher's
-    master stands.
+    master stands.  ``extra_conf`` applies to a reused session too.
     """
     builder = SparkSession.builder.appName(app_name)
     launcher = _launcher_conf()
@@ -88,7 +90,13 @@ def get_spark(
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     if master is not None:
         builder = builder.master(master)
-    conf = {k: v for k, v in _DEFAULTS.items() if k not in (launcher or {})}
+    # getOrCreate applies every builder option to a live session's
+    # runtime conf, so the defaults would re-tune a session in use
+    live = SparkSession._instantiatedSession
+    if live is None or live._sc._jsc is None:
+        conf = {k: v for k, v in _DEFAULTS.items() if k not in (launcher or {})}
+    else:
+        conf = {}
     conf.update(extra_conf or {})
     for k, v in conf.items():
         builder = builder.config(k, v)

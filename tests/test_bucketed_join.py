@@ -20,7 +20,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         bucket_col="concept_id", bucket_count=8,
     )
     edges, _ = ckpt.get_or_compute(
-        spark, "e", lambda: derive_edges(cf, concepts=derive_concepts(cf)),
+        spark, "e", lambda: derive_edges(concepts),
         bucket_col="concept_id_1", bucket_count=8,
     )
     resolved = resolve_edges(edges, concepts, ["ALL"])

@@ -6,6 +6,8 @@ Closed-form expectations from the generator (sources/synth.py):
 """
 
 import hashlib
+import re
+from collections import Counter, defaultdict
 
 import pytest
 from pyspark.sql import functions as F
@@ -98,18 +100,60 @@ def test_resume_skips_stages(spark, pipeline_out):
     assert spark.read.parquet(f"{out}/triples").count() == n1
 
 
-def test_single_scan_edges_equal_legacy(spark):
-    """derive_edges_from_concepts (single content scan) must produce the
-    exact edge set of the legacy two-scan derivation."""
-    from omop2owl_vocab_spark.plans.derive import derive_concepts, derive_edges
-    from omop2owl_vocab_spark.sources.synth import synth_code_files
+def _reference_edges(rows, file_ids):
+    """The s1 edge bag from the raw code_files rows in plain Python, each
+    edge as (relationship_id, (repo, path), (repo, path)).  ``file_ids``
+    ((repo, path) → concept_id) only picks each same-content star's hub,
+    the group's min concept_id."""
+    parent = lambda p: p.rsplit("/", 1)[0]  # noqa: E731
+    edges = Counter()
+    dirs = set()
+    by_content = defaultdict(list)
+    targets = defaultdict(list)
+    for r in rows:
+        key = (r.repo, r.path)
+        parts = r.path.split("/")
+        if len(parts) > 1:
+            edges["Is a", key, (r.repo, parent(r.path))] += 1
+            stem = re.sub(r"\.[^.]+$", "", parts[-1])
+            targets[r.repo, f"{parts[-2]}.{stem}"].append(key)
+        dirs |= {(r.repo, "/".join(parts[:k])) for k in range(1, len(parts))}
+        by_content[r.content or ""].append(key)
+    for repo, d in dirs:
+        if "/" in d:
+            edges["Is a", (repo, d), (repo, parent(d))] += 1
+    for group in by_content.values():
+        hub = min(group, key=file_ids.__getitem__)
+        for key in group:
+            if key != hub:
+                edges["Maps to", key, hub] += 1
+    for r in rows:
+        for tok in re.findall(r"import\s+(pkg\d+\.mod\d+)", r.content or ""):
+            for dst in targets[r.repo, tok]:
+                if dst != (r.repo, r.path):
+                    edges["imports", (r.repo, r.path), dst] += 1
+    return edges
 
-    code = synth_code_files(spark, 3000)
-    legacy = derive_edges(code, concepts=derive_concepts(code))
-    fused = derive_edges(
-        code, concepts=derive_concepts(code, with_import_toks=True)
+
+def test_edges_match_python_reference(spark):
+    """derive_edges over derive_concepts equals an independent pure-Python
+    derivation of the containment, same-content star and import edges."""
+    from omop2owl_vocab_spark.plans.derive import derive_concepts, derive_edges
+
+    code = synth_code_files(spark, 1000)
+    concepts = derive_concepts(code)
+    node = {
+        c.concept_id: (c.domain_id, c.concept_code)
+        for c in concepts.select("concept_id", "domain_id", "concept_code").collect()
+    }
+    file_ids = {
+        (c.domain_id, c.concept_code): c.concept_id
+        for c in concepts.filter(F.col("src_sha256") != "").collect()
+    }
+    got = Counter(
+        (e.relationship_id, node[e.concept_id_1], node[e.concept_id_2])
+        for e in derive_edges(concepts).collect()
     )
-    assert fused.exceptAll(legacy).count() == 0
-    assert legacy.exceptAll(fused).count() == 0
-    n = fused.count()
-    assert n == legacy.count() > 0
+    want = _reference_edges(code.collect(), file_ids)
+    assert {rel for rel, _, _ in want} == {"Is a", "Maps to", "imports"}
+    assert got == want, (got - want, want - got)

@@ -1,4 +1,4 @@
-"""Output layout (salting / maxRecordsPerFile) and failure-recovery checks."""
+"""Output layout (salting) and failure-recovery checks."""
 
 import glob
 import os
@@ -11,17 +11,13 @@ def test_compact_output_salting(spark, tmp_path):
     src = str(tmp_path / "cf")
     out = str(tmp_path / "out")
     synth_code_files(spark, 2000).write.parquet(src)
-    cfg = PipelineConfig(
-        source=src,
-        output_dir=out,
-        compact_output=True,
-        salt_threshold_rows=1000,   # python vocab (~55%) exceeds this
-        salt_buckets=4,
+    run_pipeline(
+        spark, PipelineConfig(source=src, output_dir=out, compact_output=True)
     )
-    run_pipeline(spark, cfg)
     py_files = glob.glob(f"{out}/triples/vocabulary_id=python/*.parquet")
     small = glob.glob(f"{out}/triples/vocabulary_id=c/*.parquet")
-    # salted vocab spread over multiple files; small vocab stays compact
+    # at local[4] the python vocab (~55% of rows) gets ceil(0.55 * 4) salt
+    # buckets and spreads over several files; the ~5% c vocab gets one
     assert len(py_files) > 1
     assert len(small) <= 2
     n = spark.read.parquet(f"{out}/triples").count()
@@ -64,8 +60,7 @@ def test_relayout_reuses_upstream_checkpoints(spark, tmp_path):
     run_pipeline(spark, PipelineConfig(source=src, output_dir=out))
     report = run_pipeline(
         spark,
-        PipelineConfig(source=src, output_dir=out, compact_output=True,
-                       salt_threshold_rows=100, salt_buckets=2),
+        PipelineConfig(source=src, output_dir=out, compact_output=True),
     )
     assert report["stages"]["s3_triples_raw"] == {"cached": True}
     assert report["stages"]["s4_canon_map"] == {"cached": True}

@@ -121,10 +121,10 @@ def test_edge_stage_never_rereads_content(spark, tmp_path):
     ckpt = str(tmp_path / "s1_concepts")
     synth_code_files(spark, 500).write.parquet(src)
     code = spark.read.parquet(src)
-    derive_concepts(code, with_import_toks=True).write.parquet(ckpt)
+    derive_concepts(code).write.parquet(ckpt)
     concepts = spark.read.parquet(ckpt)
 
-    edges = derive_edges(code, concepts=concepts)
+    edges = derive_edges(concepts)
     plan = _plan(edges)
     assert "code_files" not in plan  # zero scans of the source table
     assert "content" not in plan  # the wide column never enters any scan
@@ -185,13 +185,28 @@ def test_emission_prunes_import_toks(spark, tmp_path):
     ckpt_e = str(tmp_path / "s1_edges")
     synth_code_files(spark, 300).write.parquet(src)
     code = spark.read.parquet(src)
-    derive_concepts(code, with_import_toks=True).write.parquet(ckpt_c)
+    derive_concepts(code).write.parquet(ckpt_c)
     concepts = spark.read.parquet(ckpt_c)
-    derive_edges(code, concepts=concepts).write.parquet(ckpt_e)
+    derive_edges(concepts).write.parquet(ckpt_e)
     edges = spark.read.parquet(ckpt_e)
 
     plan = _plan(emit_triples(concepts, edges, relationships=["ALL"]))
     assert "import_toks" not in plan, plan[:3000]
+
+
+def test_pipeline_config_fields_are_pinned():
+    """The layout sizes itself from the s3 lineage and the default
+    parallelism; a new tuning field needs a deliberate edit here."""
+    from dataclasses import fields
+
+    from omop2owl_vocab_spark.plans.pipeline import PipelineConfig
+
+    assert [f.name for f in fields(PipelineConfig)] == [
+        "source", "output_dir", "mode", "concept_relationship_path",
+        "ontology_id", "relationships", "vocabs", "equivalence_rels",
+        "canonicalize", "exclude_singletons", "resume", "compact_output",
+        "bucket_count", "cc_checkpoint_dir",
+    ]
 
 
 def test_curation_survivors_cached_once(spark):

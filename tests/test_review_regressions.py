@@ -21,7 +21,8 @@ def test_root_level_paths_do_not_crash_derive(spark):
     ]
     cf = spark.createDataFrame(rows, CODE_FILES_SCHEMA)
     assert derive_concepts(cf).count() == 4  # 2 files + src + src/pkg0
-    edges = derive_edges(cf).collect()  # must not raise under ANSI
+    # must not raise under ANSI
+    edges = derive_edges(derive_concepts(cf)).collect()
     assert any(e["relationship_id"] == "Is a" for e in edges)
 
 

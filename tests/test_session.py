@@ -83,6 +83,21 @@ def test_defaults_differ_from_spark_defaults(tmp_path):
     assert set(same) - PINS == set()
 
 
+def test_reusing_the_live_session_keeps_its_conf(spark):
+    """A get_spark call that reuses the live session leaves the conf its
+    creator chose (the test session's 4 shuffle partitions, not the
+    package default 32); an explicit ``extra_conf`` still applies."""
+    key = "spark.sql.shuffle.partitions"
+    assert spark.conf.get(key) == "4"
+    try:
+        assert session.get_spark("another-app") is spark
+        assert spark.conf.get(key) == "4"
+        session.get_spark("another-app", extra_conf={key: "5"})
+        assert spark.conf.get(key) == "5"
+    finally:
+        spark.conf.set(key, "4")
+
+
 def test_session_reads_only_the_core_count_env_var():
     """`extra_conf` and spark-submit are the override paths; the one
     `SPARK_GRAFT_*` variable left picks the local core count."""

@@ -1,5 +1,6 @@
 """Skew pin for the S3 EMISSION edge join (r5 verdict #7): on the same
-pathological ~90%-one-vocab corpus as `bench_skew_ab.py`, measure the
+pathological ~90%-one-vocab corpus as the salted-layout A/B in
+`BENCH_SKEW_AB.json` (``lang_cuts=(90, 92, 94, 96, 98)``), measure the
 emission stage's task-duration distribution with bucketed s1 checkpoints
 on, and report the straggler max/median ratio.
 
