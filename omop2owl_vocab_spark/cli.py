@@ -31,7 +31,7 @@ import json
 import os
 import sys
 
-from omop2owl_vocab_spark.api import merged_artifact_name
+from omop2owl_vocab_spark.api import canonicalize_default, merged_artifact_name
 from omop2owl_vocab_spark.plans.pipeline import PipelineConfig, run_pipeline
 from omop2owl_vocab_spark.session import get_spark
 
@@ -119,23 +119,6 @@ def cli_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _canonicalize_default(d: dict, mode: str) -> bool:
-    """The mode default for ``canonicalize`` (this CLI and ``api.omop2owl``
-    both resolve it here).  Reference parity: omop mode
-    does NOT merge 'Maps to' equivalences — the reference keeps mapped
-    concepts distinct, and every fixture contains 'Maps to' rows, so a
-    True default silently diverges on the plain
-    ``-c concept.csv -r concept_relationship.csv`` path (r2 verdict #1).
-    Code mode keeps canonicalization on (the KG-construction north star).
-    The flag is a ``BooleanOptionalAction`` tri-state — ``--canonicalize``
-    / ``--no-canonicalize`` are one argument (last one wins, contradictory
-    combinations can't silently resolve), ``None`` means mode default."""
-    flag = d.get("canonicalize")
-    if flag is not None:
-        return bool(flag)
-    return mode == "code"
-
-
 def route_and_run(d: dict) -> dict:
     mode = "code" if d.get("source") else "omop"
     vocabs = list(d.get("vocabs") or [])
@@ -173,7 +156,7 @@ def route_and_run(d: dict) -> dict:
         ontology_id=d.get("ontology_id", "OMOP"),
         relationships=relationships,
         vocabs=vocabs,
-        canonicalize=_canonicalize_default(d, mode),
+        canonicalize=canonicalize_default(d.get("canonicalize"), mode),
         exclude_singletons=d.get("exclude_singletons", False),
         resume=d.get("use_cache", False),
         bucket_count=d.get("bucket_count", 0),

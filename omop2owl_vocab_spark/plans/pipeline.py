@@ -43,6 +43,17 @@ from omop2owl_vocab_spark.sources.omop import (
 
 ONTOLOGY_IRI_FMT = "http://purl.obolibrary.org/obo/{}/ontology"  # R9 (:445-446)
 MAX_RECORDS_PER_FILE = 5_000_000
+# compact_output never cuts a salt bucket below this many rows (312,500):
+# such a bucket writes in about a second per core — the unsalted 8.1M-row
+# giant-vocab task of tools/bench_skew_ab.py took 20-25 s at local[4] — so
+# finer buckets add files, not speed
+MIN_BUCKET_ROWS = MAX_RECORDS_PER_FILE // 16
+# salt buckets per task slot of a vocab's fair share: finer than one per
+# slot, so the scheduler packs them and two buckets hashed into one
+# partition make a short task, not a straggler.  At local[4] on the
+# 1M-row skew corpus one per slot ran the write stage's longest task at
+# 7.2 s vs 4.4 s for 16 buckets (tools/bench_skew_ab.py)
+BUCKETS_PER_SLOT = 4
 
 
 @dataclass
@@ -166,13 +177,16 @@ def _salted_repartition(
     triples: DataFrame, counts: dict[str, int], parallelism: int
 ) -> DataFrame:
     """Skew-aware final layout sized from ``counts`` (vocab → rows): a
-    vocab with ``n_v`` of the ``N`` rows gets ``k_v = max(1, ceil(n_v · P
-    / N))`` hash buckets for ``P = parallelism``, so a giant vocab spreads
-    over its fair share of the task slots and a small one lands in one
-    task."""
+    vocab with ``n_v`` of the ``N`` rows gets ``k_v = max(1, min(ceil(B ·
+    n_v · P / N), n_v // MIN_BUCKET_ROWS))`` hash buckets for ``P =
+    parallelism`` and ``B = BUCKETS_PER_SLOT``, so a giant vocab spreads
+    over its fair share of the task slots, and a small vocab — or any
+    vocab of a small output, however large ``P`` — lands in one task."""
     total = max(sum(counts.values()), 1)
+    slots = BUCKETS_PER_SLOT * parallelism
     buckets = {
-        v: max(1, math.ceil(n * parallelism / total)) for v, n in counts.items()
+        v: max(1, min(math.ceil(n * slots / total), n // MIN_BUCKET_ROWS))
+        for v, n in counts.items()
     }
     salt = F.lit(0)
     for v, k in buckets.items():

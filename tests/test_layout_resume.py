@@ -3,25 +3,46 @@
 import glob
 import os
 
+from omop2owl_vocab_spark.plans import pipeline
 from omop2owl_vocab_spark.plans.pipeline import PipelineConfig, run_pipeline
 from omop2owl_vocab_spark.sources.synth import synth_code_files
 
 
-def test_compact_output_salting(spark, tmp_path):
+def test_compact_output_salting(spark, tmp_path, monkeypatch):
     src = str(tmp_path / "cf")
     out = str(tmp_path / "out")
     synth_code_files(spark, 2000).write.parquet(src)
+    # scale the bucket floor down with the corpus: 2000 rows make ~10k
+    # python triples, far below the 312,500-row floor
+    monkeypatch.setattr(pipeline, "MIN_BUCKET_ROWS", 1000)
     run_pipeline(
         spark, PipelineConfig(source=src, output_dir=out, compact_output=True)
     )
     py_files = glob.glob(f"{out}/triples/vocabulary_id=python/*.parquet")
     small = glob.glob(f"{out}/triples/vocabulary_id=c/*.parquet")
-    # at local[4] the python vocab (~55% of rows) gets ceil(0.55 * 4) salt
-    # buckets and spreads over several files; the ~5% c vocab gets one
+    # at local[4] the python vocab (~55% of rows) gets ceil(0.55 * 16) salt
+    # buckets and spreads over several files; the ~5% c vocab, under the
+    # floor, gets one
     assert len(py_files) > 1
     assert len(small) <= 2
     n = spark.read.parquet(f"{out}/triples").count()
     assert n > 0
+
+
+def test_bucket_count_bounded_by_rows_not_parallelism(spark):
+    """A small output stays one task per vocab however large the default
+    parallelism; a giant vocab gets its share of P, capped by its rows."""
+    df = spark.createDataFrame(
+        [("python", "s1"), ("c", "s2")], "vocabulary_id string, subj string"
+    )
+    small = {"python": 1_100, "c": 900}
+    assert pipeline._salted_repartition(df, small, 200).rdd.getNumPartitions() == 2
+    big = {"python": 8_100_000, "c": 900_000}
+    # P=4 (16 bucket slots): python min(ceil(14.4), 25) = 15,
+    # c min(ceil(1.6), 2) = 2
+    assert pipeline._salted_repartition(df, big, 4).rdd.getNumPartitions() == 17
+    # P=200: python min(720, 25) = 25, c min(80, 2) = 2
+    assert pipeline._salted_repartition(df, big, 200).rdd.getNumPartitions() == 27
 
 
 def test_interrupted_final_write_recovers(spark, tmp_path):

@@ -118,12 +118,13 @@ def test_cli_canonicalize_flags(spark, tmp_path):
     --no-canonicalize are ONE BooleanOptionalAction argument, so a
     contradictory pair resolves by argparse's standard last-wins rule
     instead of silently."""
-    from omop2owl_vocab_spark.cli import _canonicalize_default, cli_parser
+    from omop2owl_vocab_spark.api import canonicalize_default
+    from omop2owl_vocab_spark.cli import cli_parser
 
-    assert _canonicalize_default({}, "omop") is False
-    assert _canonicalize_default({}, "code") is True
-    assert _canonicalize_default({"canonicalize": True}, "omop") is True
-    assert _canonicalize_default({"canonicalize": False}, "code") is False
+    assert canonicalize_default(None, "omop") is False
+    assert canonicalize_default(None, "code") is True
+    assert canonicalize_default(True, "omop") is True
+    assert canonicalize_default(False, "code") is False
 
     base = ["-c", "c.csv", "-r", "r.csv", "-O", "out"]
     p = cli_parser()
