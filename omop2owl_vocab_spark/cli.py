@@ -134,13 +134,13 @@ def route_and_run(d: dict) -> dict:
     if d.get("semsql_only"):
         from omop2owl_vocab_spark.operators.semsql import write_semsql_sqlite
 
-        spark = get_spark(master=d.get("master"))
         triples_dir = os.path.join(d["outdir"], "triples")
         if not os.path.exists(os.path.join(triples_dir, "_SUCCESS")):
             raise SystemExit(
                 f"--semsql-only needs an existing triples output at "
                 f"{triples_dir} (run the pipeline first)"
             )
+        spark = get_spark(master=d.get("master"))
         rows = write_semsql_sqlite(spark.read.parquet(triples_dir), db_path)
         return {"semsql": db_path, "semsql_rows": rows, "output": triples_dir}
 

@@ -16,6 +16,6 @@ PREFIX_MAP = {
 }
 
 
-def omop_curie(col: Column | str, prefix: str = "OMOP") -> Column:
+def omop_curie(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
-    return F.concat(F.lit(f"{prefix}:"), c)
+    return F.concat(F.lit("OMOP:"), c)

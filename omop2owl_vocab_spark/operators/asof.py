@@ -44,38 +44,32 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_cols: list[str] | None = None,
     right_tiebreak: str | None = None,
     tolerance_us: int | None = None,
-    prefix: str = "matched_",
 ) -> DataFrame:
-    """All ``left`` columns plus ``prefix + c`` for each right payload
-    column ``c`` and ``prefix + "ts"`` for the matched timestamp.
+    """Both sides are timed by a ``ts`` column.  Returns all ``left``
+    columns plus ``matched_<c>`` for each right payload column ``c`` —
+    every right column but ``on`` and ``ts`` — and ``matched_ts`` for the
+    matched timestamp.
 
     ``tolerance_us``: when set, a match older than this many
     microseconds before ``left.ts`` is nulled out (the payload struct
     carries the matched ts, so the filter needs no second pass).
     """
-    rc = right_cols or [
-        c for c in right.columns if c not in (on, right_ts)
-    ]
+    rc = [c for c in right.columns if c not in (on, "ts")]
     if not rc:
         raise ValueError("right side has no payload columns")
-    payload = F.struct(
-        F.col(right_ts).alias("__ts"), *[F.col(c) for c in rc]
-    )
+    payload = F.struct(F.col("ts").alias("__ts"), *[F.col(c) for c in rc])
     tb = (
         F.col(right_tiebreak).cast("long")
         if right_tiebreak is not None
         else F.lit(0).cast("long")
     )
     r = (
-        right.filter(F.col(on).isNotNull() & F.col(right_ts).isNotNull())
+        right.filter(F.col(on).isNotNull() & F.col("ts").isNotNull())
         .select(
             F.col(on).alias("__k"),
-            F.col(right_ts).alias("__t"),
+            F.col("ts").alias("__t"),
             F.lit(0).alias("__side"),
             tb.alias("__tb"),
             payload.alias("__p"),
@@ -84,7 +78,7 @@ def asof_join(
     lrow = F.struct(*[F.col(c) for c in left.columns])
     l = left.select(
         F.col(on).alias("__k"),
-        F.col(left_ts).alias("__t"),
+        F.col("ts").alias("__t"),
         F.lit(1).alias("__side"),
         F.lit(0).cast("long").alias("__tb"),
         F.lit(None).cast(
@@ -115,8 +109,8 @@ def asof_join(
             "__m", F.when(F.col("__m").isNotNull() & in_tol, F.col("__m"))
         )
     out_cols = [F.col(f"__l.{c}").alias(c) for c in left.columns]
-    out_cols.append(F.col("__m.__ts").alias(f"{prefix}ts"))
-    out_cols.extend(F.col(f"__m.{c}").alias(f"{prefix}{c}") for c in rc)
+    out_cols.append(F.col("__m.__ts").alias("matched_ts"))
+    out_cols.extend(F.col(f"__m.{c}").alias(f"matched_{c}") for c in rc)
     return matched.select(*out_cols)
 
 

@@ -14,14 +14,13 @@ from pyspark.sql import functions as F
 from omop2owl_vocab_spark.operators.emit import dedupe_triples
 
 
-def canonicalize_triples(
-    triples: DataFrame, canon: DataFrame, curie_prefix: str = "OMOP:"
-) -> DataFrame:
+def canonicalize_triples(triples: DataFrame, canon: DataFrame) -> DataFrame:
     """``canon`` is (member, canonical) over raw concept ids; triples carry
-    CURIE-form ids, so the map is lifted to CURIEs once (cheap projection)."""
+    ``OMOP:``-CURIE ids, so the map is lifted to CURIEs once (cheap
+    projection)."""
     cm = canon.select(
-        F.concat(F.lit(curie_prefix), F.col("member")).alias("m"),
-        F.concat(F.lit(curie_prefix), F.col("canonical")).alias("c"),
+        F.concat(F.lit("OMOP:"), F.col("member")).alias("m"),
+        F.concat(F.lit("OMOP:"), F.col("canonical")).alias("c"),
     )
     subj_map = cm.withColumnRenamed("m", "_sm").withColumnRenamed("c", "_sc")
     obj_map = cm.withColumnRenamed("m", "_om").withColumnRenamed("c", "_oc")

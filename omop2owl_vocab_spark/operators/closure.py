@@ -50,8 +50,6 @@ from omop2owl_vocab_spark.operators.fixpoint import iterate
 
 def ancestor_closure(
     edges: DataFrame,
-    child_col: str = "child",
-    parent_col: str = "parent",
     max_iter: int = 12,
     include_self: bool = False,
 ) -> tuple[DataFrame, dict]:
@@ -69,8 +67,8 @@ def ancestor_closure(
     """
     pairs = (
         edges.select(
-            F.col(parent_col).alias("ancestor"),
-            F.col(child_col).alias("descendant"),
+            F.col("parent").alias("ancestor"),
+            F.col("child").alias("descendant"),
         )
         .filter(F.col("ancestor") != F.col("descendant"))
         .distinct()

@@ -34,11 +34,10 @@ def curation_decision(
     jaccard_threshold: float = 0.5,
     hash_family: str = "xxhash64",
     max_bucket_size: int | None = 10_000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, quality_ok, repetition_ok, exact_canonical, near_dup_rep,
-    keep) — the keep-list with per-stage reasons.
+    keep) over ``(doc_id, text)`` documents — the keep-list with
+    per-stage reasons.
 
     FILTER-FIRST ordering: the dedup stages (exact canonical pick,
     near-dup representative pick) run over the QUALITY SURVIVORS only, so
@@ -59,35 +58,35 @@ def curation_decision(
     `fixpoint.checkpointing` scope these cuts, and the near-dup stage's,
     are reliable checkpoints.
     """
-    quality = gopher_flags(df, text_col, id_col).select(
-        F.col(id_col), F.col("keep").alias("quality_ok")
+    quality = gopher_flags(df).select(
+        "doc_id", F.col("keep").alias("quality_ok")
     )
-    rep = repetition_flags(df, text_col, id_col).select(
-        F.col(id_col),
+    rep = repetition_flags(df).select(
+        "doc_id",
         (F.col("dup_line_ok") & F.col("top_bigram_ok")).alias("repetition_ok"),
     )
     passed = F.col("quality_ok") & F.col("repetition_ok")
-    verdicts = materialize(quality.join(rep, id_col))
+    verdicts = materialize(quality.join(rep, "doc_id"))
     survivors = materialize(
-        df.join(verdicts.filter(passed).select(id_col), id_col, "left_semi")
+        df.join(
+            verdicts.filter(passed).select("doc_id"), "doc_id", "left_semi"
+        )
     )
-    exact_dups = exact_duplicates(survivors, text_col, id_col).select(
-        F.col("dup_id").alias(id_col), F.lit(False).alias("_exact")
+    exact_dups = exact_duplicates(survivors).select(
+        F.col("dup_id").alias("doc_id"), F.lit(False).alias("_exact")
     )
     groups = near_duplicate_groups(
         survivors,
         threshold=jaccard_threshold,
         hash_family=hash_family,
         max_bucket_size=max_bucket_size,
-        text_col=text_col,
-        id_col=id_col,
     ).select(
-        F.col("doc_id").alias(id_col),
+        "doc_id",
         (F.col("doc_id") == F.col("group_id")).alias("near_dup_rep"),
     )
     out = (
-        verdicts.join(exact_dups, id_col, "left")
-        .join(groups, id_col, "left")
+        verdicts.join(exact_dups, "doc_id", "left")
+        .join(groups, "doc_id", "left")
         # survivors default to canonical=True unless listed as a dup;
         # non-survivors keep NULL (stage not evaluated)
         .withColumn(
@@ -97,7 +96,7 @@ def curation_decision(
         .drop("_exact")
     )
     return out.select(
-        id_col,
+        "doc_id",
         "quality_ok",
         "repetition_ok",
         "exact_canonical",

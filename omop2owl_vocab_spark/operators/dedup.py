@@ -122,16 +122,14 @@ def _overlap(
     )
 
 
-def exact_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Groups of byte-identical docs: (canonical_id, dup_id) pairs,
     canonical = min id per md5 group.  NULL text is F1-normalized to ''
     (consistent with the rest of the engine), so null-content docs group
     with empty docs instead of forming a separate NULL-hash group."""
     hashed = df.select(
-        F.col(id_col).alias("dup_id"),
-        F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("h"),
+        F.col("doc_id").alias("dup_id"),
+        F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("h"),
     )
     groups = (
         hashed.groupBy("h")
@@ -146,9 +144,10 @@ def exact_duplicates(
 
 
 def word_shingles(
-    df: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame, n: int = 3, id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, shingle) long form — word n-grams over whitespace tokens.
+    """(id, shingle) long form — word n-grams over the whitespace tokens
+    of ``text``.
 
     Shingles are built by FOLDING zip_with over n shifted slices of the
     token array — every slice evaluates the tokenize subtree once, total
@@ -158,7 +157,7 @@ def word_shingles(
     ≈ 12 s/doc — and this function feeds every minhash/jaccard/groups
     chain.)"""
     toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), RE2_WS + "+"),
+        F.split(F.trim(F.lower(F.col("text"))), RE2_WS + "+"),
         lambda t: t != "",
     )
     m = F.size(toks) - n + 1  # shingle count when size >= n
@@ -306,14 +305,13 @@ def lsh_candidate_pairs(
 def lsh_bucket_stats(
     signatures: DataFrame,
     bands: int = 8,
-    hash_family: str = "xxhash64",
     max_bucket_size: int | None = 10_000,
 ) -> DataFrame:
     """One-row metrics DF for the chosen bound: (n_buckets,
     n_dropped_buckets, n_dropped_ids, max_bucket_n).  Pipelines log this
     next to candidate counts so a dropped hot bucket is visible, not
     silent."""
-    sizes = _banded_keys(signatures, bands, hash_family).groupBy(
+    sizes = _banded_keys(signatures, bands).groupBy(
         "band", "key"
     ).agg(F.count("*").alias("n"))
     dropped = (
@@ -356,16 +354,14 @@ def winnow_fingerprints(
     df: DataFrame,
     k: int = 8,
     window: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     hash_family: str = "md5",
     chunk_chars: int = 4096,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03 — the
     MOSS scheme): hash every character k-gram of the whitespace-normalized
-    text, slide a window of ``window`` consecutive k-gram hashes, keep each
-    window's minimum.  Guarantees any shared substring of length
-    ≥ k + window − 1 yields a shared fingerprint.
+    ``text`` of each ``doc_id``, slide a window of ``window`` consecutive
+    k-gram hashes, keep each window's minimum.  Guarantees any shared
+    substring of length ≥ k + window − 1 yields a shared fingerprint.
 
     Output: (id, fp) distinct rows.  Everything is one JVM projection —
     ``transform(sequence(...))`` array ops, no explode of per-character
@@ -384,10 +380,10 @@ def winnow_fingerprints(
         raise ValueError(f"unknown hash_family {hash_family!r}")
     norm = F.lower(
         F.regexp_replace(
-            F.coalesce(F.col(text_col), F.lit("")), RE2_WS + "+", " "
+            F.coalesce(F.col("text"), F.lit("")), RE2_WS + "+", " "
         )
     )
-    d = df.select(F.col(id_col).alias("id"), norm.alias("s"))
+    d = df.select(F.col("doc_id").alias("id"), norm.alias("s"))
     # Bound per-row memory: a 1 MB doc would otherwise materialize a
     # ~10⁶-element hash array in one row.  Chunk with an overlap of
     # k + window − 2 chars — every window of `window` consecutive k-grams
@@ -459,17 +455,13 @@ def winnow_near_duplicates(
 def near_duplicate_groups(
     df: DataFrame,
     threshold: float = 0.5,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
     hash_family: str = "xxhash64",
     max_bucket_size: int | None = 10_000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """The complete dedup decision, composed end-to-end: shingle → minhash
-    → LSH candidates (bucket-capped) → exact-Jaccard verify → connected
-    components over verified pairs → one canonical doc per near-dup group.
+    """The complete dedup decision, composed end-to-end: word 3-gram
+    shingles → 32 minhashes → LSH candidates over 8 bands (bucket-capped)
+    → exact-Jaccard verify → connected components over verified pairs →
+    one canonical doc per near-dup group.
 
     Output (doc_id, group_id): ``group_id`` is the numerically smallest
     doc_id in the group; docs with no verified near-dup are their own
@@ -493,11 +485,10 @@ def near_duplicate_groups(
 
     # the shingled corpus feeds BOTH the minhash signature chain and the
     # exact-Jaccard verification subtrees — materialize it once
-    sh = materialize(word_shingles(df, n, text_col=text_col, id_col=id_col))
+    sh = materialize(word_shingles(df, 3))
     cand = lsh_candidate_pairs(
-        minhash_signatures(sh, num_hashes, hash_family=hash_family),
-        bands=bands,
-        num_hashes=num_hashes,
+        minhash_signatures(sh, 32, hash_family=hash_family),
+        bands=8,
         hash_family=hash_family,
         max_bucket_size=max_bucket_size,
     )
@@ -508,14 +499,14 @@ def near_duplicate_groups(
         )
     )
     ids = df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.when(
             F.assert_true(
-                F.col(id_col) >= 0,
+                F.col("doc_id") >= 0,
                 "near_duplicate_groups requires non-negative doc ids "
                 "(zero-padded string ordering)",
             ).isNull(),
-            _pad(F.col(id_col)),
+            _pad(F.col("doc_id")),
         ).alias("node"),
     )
     return (
@@ -529,11 +520,10 @@ def near_duplicate_groups(
     )
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash per doc — Arrow-vectorized pandas UDF (weighted
-    bit-vote over token hashes; genuinely awkward as builtin exprs).
+def simhash_signatures(df: DataFrame) -> DataFrame:
+    """64-bit SimHash of each doc's ``text``, keyed ``id`` = ``doc_id`` —
+    Arrow-vectorized pandas UDF (weighted bit-vote over token hashes;
+    genuinely awkward as builtin exprs).
 
     Deterministic AND engine-portable: token hash bits are defined over the
     md5 *hexdigest* — bit i (0-based) = bit (i mod 4) of hex digit (i div 4)
@@ -588,7 +578,7 @@ def simhash_signatures(
         return pd.Series(out)
 
     return df.select(
-        F.col(id_col).alias("id"), _simhash(F.col(text_col)).alias("simhash")
+        F.col("doc_id").alias("id"), _simhash(F.col("text")).alias("simhash")
     )
 
 
@@ -624,10 +614,7 @@ def ngram_overlap(
     benchmark: DataFrame,
     n: int = 8,
     min_hits: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     bench_id_col: str = "bench_id",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: every (corpus doc, benchmark doc) pair
     sharing ≥ ``min_hits`` distinct word n-grams — the standard check
@@ -637,27 +624,25 @@ def ngram_overlap(
     distinct per document, sub-``n`` documents produce none), then an
     equi-join on the shingle string counts distinct shared n-grams per
     pair.  Benchmark suites are small by construction, so the shingled
-    benchmark side broadcasts (``broadcast_benchmark=False`` for the
-    rare huge-suite case — the join falls back to AQE's choice) and the
-    corpus streams through map-side: one shuffle for the per-pair
-    aggregate, no corpus self-join anywhere.  Raise ``n`` (8–13 in
-    published pipelines) to trade recall for precision.
+    benchmark side broadcasts and the corpus streams through map-side:
+    one shuffle for the per-pair aggregate, no corpus self-join anywhere.
+    Raise ``n`` (8–13 in published pipelines) to trade recall for
+    precision.
 
-    Output schema: ``(id_col, bench_id_col, n_hits)`` — the benchmark id
-    keeps the caller's column name; ``id_col`` and ``bench_id_col`` must
-    therefore differ."""
+    Output schema: ``(doc_id, bench_id_col, n_hits)`` — the benchmark id
+    keeps the caller's column name, which must therefore not be
+    ``doc_id``."""
     if n <= 0 or min_hits <= 0:
         raise ValueError("n and min_hits must be positive")
-    if id_col == bench_id_col:
+    if bench_id_col == "doc_id":
         raise ValueError(
-            "id_col and bench_id_col must differ — the output carries both"
+            "doc_id and bench_id_col must differ — the output carries both"
         )
-    c = word_shingles(corpus, n=n, text_col=text_col, id_col=id_col)
-    b = word_shingles(
-        benchmark, n=n, text_col=text_col, id_col=bench_id_col
-    ).withColumnRenamed("id", "__bench_id")
-    if broadcast_benchmark:
-        b = F.broadcast(b)
+    c = word_shingles(corpus, n=n)
+    b = F.broadcast(
+        word_shingles(benchmark, n=n, id_col=bench_id_col)
+        .withColumnRenamed("id", "__bench_id")
+    )
     # word_shingles emits each shingle once per document on BOTH sides,
     # so count(*) per pair IS the distinct-shared-shingle count
     return (
@@ -666,7 +651,7 @@ def ngram_overlap(
         .agg(F.count("*").cast("long").alias("n_hits"))
         .filter(F.col("n_hits") >= min_hits)
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.col("__bench_id").alias(bench_id_col),
             "n_hits",
         )
@@ -676,7 +661,6 @@ def ngram_overlap(
 def containment_pairs(
     shingled: DataFrame,
     threshold_pct: int = 80,
-    candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric n-gram CONTAINMENT over co-shingle pairs:
     ``(id_a, id_b, inter, sz_a, sz_b, cont_a_e4, cont_b_e4)`` where
@@ -686,8 +670,7 @@ def containment_pairs(
     measure).  Kept pairs have max(cont_a, cont_b) ≥ ``threshold_pct``.
 
     Same inverted-index join discipline as `jaccard_pairs` (only pairs
-    sharing ≥1 shingle materialize; optional LSH ``candidates``
-    semi-prune BEFORE the self-join), same integer cross-multiplied
+    sharing ≥1 shingle materialize), same integer cross-multiplied
     filter (``inter·100 ≥ pct·sz`` — no float threshold), integer
     fixed-point outputs — hash-exact against the SQL re-derivation.
     ``shingled`` must be distinct per (id, shingle) — see
@@ -697,7 +680,7 @@ def containment_pairs(
         raise ValueError("threshold_pct must be in 1..100")
     t = int(threshold_pct)
     return (
-        _overlap(shingled, "shingle", within=candidates)
+        _overlap(shingled, "shingle")
         .filter(
             (F.col("inter") * 100 >= F.lit(t) * F.col("sz_a"))
             | (F.col("inter") * 100 >= F.lit(t) * F.col("sz_b"))

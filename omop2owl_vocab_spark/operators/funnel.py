@@ -1,7 +1,8 @@
 """Ordered-sequence funnel analysis over an event stream — the
 conversion primitive (signup → click → purchase): for each user, the
 earliest strictly-increasing chain of timestamps through the requested
-step sequence, plus how many steps were completed.
+step sequence, plus how many steps were completed.  Events are rows of
+``(user_id, event_type, ts)``; `session_paths` also reads ``event_id``.
 
 Semantics: GREEDY-EARLIEST matching — ``ts_1`` = the user's earliest
 step-1 event; ``ts_i`` = the earliest step-i event strictly after
@@ -31,51 +32,45 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def funnel_steps(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def funnel_steps(events: DataFrame, steps: list[str]) -> DataFrame:
     """One row per user who completed at least step 1:
-    ``(user_col, ts_1 .. ts_k, steps_completed)`` with ``ts_i`` the
+    ``(user_id, ts_1 .. ts_k, steps_completed)`` with ``ts_i`` the
     greedy-earliest chain timestamp in epoch micros (NULL once the
     funnel is abandoned; timestamps strictly increase along the chain).
     """
     if len(steps) < 2:
         raise ValueError("funnel needs at least 2 steps")
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     ev = events.select(
-        F.col(user_col), F.col(type_col).alias("__et"), ts_us.alias("__ts")
+        "user_id", F.col("event_type").alias("__et"), ts_us.alias("__ts")
     )
     stage_frames = []
     cur = (
         ev.filter(F.col("__et") == steps[0])
-        .groupBy(user_col)
+        .groupBy("user_id")
         .agg(F.min("__ts").alias("ts_1"))
     )
     stage_frames.append(cur)
     for i, step in enumerate(steps[1:], start=2):
         nxt = ev.filter(F.col("__et") == step)
         cur = (
-            cur.select(user_col, F.col(f"ts_{i - 1}").alias("__prev"))
-            .join(nxt, user_col)
+            cur.select("user_id", F.col(f"ts_{i - 1}").alias("__prev"))
+            .join(nxt, "user_id")
             .filter(F.col("__ts") > F.col("__prev"))
-            .groupBy(user_col)
+            .groupBy("user_id")
             .agg(F.min("__ts").alias(f"ts_{i}"))
         )
         stage_frames.append(cur)
     out = stage_frames[0]
     for f in stage_frames[1:]:
-        out = out.join(f, user_col, "left")
+        out = out.join(f, "user_id", "left")
     ts_cols = [f"ts_{i}" for i in range(1, len(steps) + 1)]
     completed = sum(
         (F.col(c).isNotNull().cast("long") for c in ts_cols),
         F.lit(0).cast("long"),
     )
     return out.select(
-        user_col, *ts_cols, completed.alias("steps_completed")
+        "user_id", *ts_cols, completed.alias("steps_completed")
     )
 
 
@@ -84,10 +79,6 @@ def session_paths(
     gap_minutes: int = 30,
     top_k: int = 100,
     max_events: int = 20,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
 ) -> DataFrame:
     """Top-k session paths: sessionize by inactivity gap (strict-> break,
     the same boundary rule as Spark's ``session_window``, verified in
@@ -118,11 +109,11 @@ def session_paths(
     from pyspark.sql import Window
 
     gap_us = gap_minutes * 60 * 1_000_000
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     ev = events.select(
-        F.col(user_col).alias("__u"),
-        F.col(type_col).alias("__et"),
-        F.col(id_col).alias("__id"),
+        F.col("user_id").alias("__u"),
+        F.col("event_type").alias("__et"),
+        F.col("event_id").alias("__id"),
         ts_us.alias("__ts"),
     )
     w = Window.partitionBy("__u").orderBy("__ts", "__id")
@@ -228,12 +219,7 @@ def transition_matrix(
     )
 
 
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    bucket_days: int = 7,
-) -> DataFrame:
+def cohort_retention(events: DataFrame, bucket_days: int = 7) -> DataFrame:
     """Cohort retention triangle: ``(cohort_bucket, offset_buckets,
     n_users)`` — users grouped by the bucket of their FIRST activity,
     counted once per later bucket they return in.  ``offset_buckets=0``
@@ -261,11 +247,11 @@ def cohort_retention(
     from pyspark.sql import Window
 
     bucket = F.expr(
-        f"unix_micros(cast({ts_col} as timestamp)) div 86400000000"
+        "unix_micros(cast(ts as timestamp)) div 86400000000"
         f" div {int(bucket_days)}"
     )
     ub = (
-        events.select(F.col(user_col).alias("u"), bucket.alias("b"))
+        events.select(F.col("user_id").alias("u"), bucket.alias("b"))
         .distinct()
     )
     coh = ub.select(

@@ -2,7 +2,8 @@
 k-core, BFS, label propagation, shortest paths, DAG layering and
 temporal reachability (iterative), plus triangles, degrees, node
 similarity, walks, link prediction, modularity and basket co-occurrence
-(one-shot).
+(one-shot).  Edge frames carry ``src``/``dst`` columns (``child``/
+``parent`` for `dag_longest_levels`); node frames carry ``node``.
 
 Determinism is the design center: scores are 10^9-scaled longs, every
 update uses integer division, and every fold is associative, so results
@@ -37,15 +38,13 @@ from omop2owl_vocab_spark.operators.text import _e4
 _SCALE = 10**9
 
 
-def _undirected_simple(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
+def _undirected_simple(edges: DataFrame) -> DataFrame:
     """Canonical undirected simple edge set ``(a, b)`` with ``a < b``:
     self-loops dropped, direction and duplicates collapsed,
     checkpointed (every undirected operator starts here — one shared
     derivation instead of four drifting copies)."""
     e = edges.select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
+        F.col("src").alias("a"), F.col("dst").alias("b")
     ).filter(F.col("a") != F.col("b"))
     return materialize(
         e.select(
@@ -93,10 +92,10 @@ def _orient_by_degree(und: DataFrame, deg: DataFrame) -> DataFrame:
     )
 
 
-def _symmetric(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+def _symmetric(edges: DataFrame) -> DataFrame:
     """Both directions ``(src, dst)`` of every simple edge: self-loops
     dropped, duplicates collapsed."""
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = edges.select("src", "dst")
     return (
         e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -125,13 +124,11 @@ def _basket_items(df: DataFrame, basket_col: str, item_col: str) -> DataFrame:
     )
 
 
-def _undirected_adjacency(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
+def _undirected_adjacency(edges: DataFrame) -> DataFrame:
     """Long-form undirected adjacency ``(node, nbr)`` over `_symmetric`,
     checkpointed; the shared input of the neighbor-set operators."""
     return materialize(
-        _symmetric(edges, src_col, dst_col).select(
+        _symmetric(edges).select(
             F.col("src").alias("node"), F.col("dst").alias("nbr")
         )
     )
@@ -139,8 +136,6 @@ def _undirected_adjacency(
 
 def pagerank_fixed(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 5,
     damping_pct: int = 85,
 ) -> DataFrame:
@@ -155,13 +150,11 @@ def pagerank_fixed(
     dangling-node mass evaporate (no redistribution) — fine for
     RANKING; totals are not conserved.
     """
-    return _integer_pagerank(edges, src, dst, None, iterations, damping_pct)
+    return _integer_pagerank(edges, None, iterations, damping_pct)
 
 
 def _integer_pagerank(
     edges: DataFrame,
-    src: str,
-    dst: str,
     seeds: DataFrame | None,
     iterations: int,
     damping_pct: int,
@@ -175,10 +168,7 @@ def _integer_pagerank(
         raise ValueError("damping_pct must be in 0..100")
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    e = materialize(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-    )
+    e = materialize(edges.select("src", "dst").distinct())
     nodes = _nodes(e)
     seed = F.lit(1)
     if seeds is not None:
@@ -220,9 +210,7 @@ def _integer_pagerank(
     return iterate(ranks, step, max_rounds=iterations)[0]
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Exact global triangle count over the UNDIRECTED simple graph
     induced by the edge list (direction, duplicates, self-loops
     dropped) — the clustering/cohesion primitive.  Returns a one-row
@@ -245,7 +233,7 @@ def triangle_count(
     equi-joins on node keys.  Reference analog: none (mandated graph
     surface next to CC / PageRank).
     """
-    und = _undirected_simple(edges, src, dst)
+    und = _undirected_simple(edges)
     oriented = _orient_by_degree(und, _degrees(und))
     wedges = (
         oriented.alias("x")
@@ -261,9 +249,7 @@ def triangle_count(
     return closed.agg(F.count("*").cast("long").alias("n_triangles"))
 
 
-def degree_distribution(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
+def degree_distribution(edges: DataFrame) -> DataFrame:
     """Degree-frequency profile of a directed edge list:
     ``(direction, degree, n_nodes)`` where ``direction`` is ``'out'``
     (node appears as source) or ``'in'`` (as destination) and
@@ -291,11 +277,11 @@ def degree_distribution(
             F.array(
                 F.struct(
                     F.lit("out").alias("direction"),
-                    F.col(src_col).alias("node"),
+                    F.col("src").alias("node"),
                 ),
                 F.struct(
                     F.lit("in").alias("direction"),
-                    F.col(dst_col).alias("node"),
+                    F.col("dst").alias("node"),
                 ),
             )
         ).alias("e")
@@ -312,8 +298,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     rounds: int = 8,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Bulk-synchronous k-core peel: ``(node, degree)`` for nodes
     remaining after ``rounds`` peel iterations on the canonical
@@ -333,7 +317,7 @@ def k_core(
         raise ValueError("k must be >= 1")
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e = _undirected_simple(edges, src_col, dst_col)
+    e = _undirected_simple(edges)
 
     def step(e: DataFrame, _r: int) -> DataFrame:
         alive = _degrees(e).filter(F.col("deg") >= k).select("node")
@@ -356,8 +340,6 @@ def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
     directed: bool = False,
 ) -> DataFrame:
     """Multi-source BFS: ``(node, dist)`` = minimum hop count from ANY
@@ -376,7 +358,7 @@ def bfs_distances(
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = edges.select("src", "dst")
     if not directed:
         e = e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -412,12 +394,7 @@ def bfs_distances(
     return dist
 
 
-def label_propagation(
-    edges: DataFrame,
-    rounds: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     """Synchronous label propagation (fixed ``rounds``): ``(node,
     label)`` where every node starts as its own label and each round
     adopts the MOST FREQUENT label among its neighbors, ties broken
@@ -433,7 +410,7 @@ def label_propagation(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e = materialize(_symmetric(edges, src_col, dst_col))
+    e = materialize(_symmetric(edges))
     labels = _nodes(e).select(
         "node", F.col("node").cast("long").alias("label")
     )
@@ -464,11 +441,9 @@ def bellman_ford(
     edges: DataFrame,
     sources: DataFrame,
     rounds: int = 6,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "w",
 ) -> DataFrame:
-    """Multi-source WEIGHTED shortest paths, Bellman–Ford style:
+    """Multi-source WEIGHTED shortest paths, Bellman–Ford style, over
+    ``(src, dst, w)`` edges:
     ``(node, dist)`` = minimum total integer weight from any source
     after exactly ``rounds`` synchronous relaxations — exact for every
     node whose shortest path uses ≤ ``rounds`` edges ("cheapest cost
@@ -480,11 +455,7 @@ def bellman_ford(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e = edges.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col(weight_col).cast("long").alias("w"),
-    )
+    e = edges.select("src", "dst", F.col("w").cast("long").alias("w"))
     dist = sources.select(
         "node", F.lit(0).cast("long").alias("dist")
     ).distinct()
@@ -568,12 +539,7 @@ def cooccurrence_pairs(
     )
 
 
-def dag_longest_levels(
-    edges: DataFrame,
-    max_iter: int = 16,
-    child_col: str = "child",
-    parent_col: str = "parent",
-) -> DataFrame:
+def dag_longest_levels(edges: DataFrame, max_iter: int = 16) -> DataFrame:
     """Longest-path DAG layering: ``(node, level)`` where roots (nodes
     that never appear as a child) sit at level 0 and every other node's
     level is ``max(level(parent)) + 1`` — the topological strata for
@@ -590,9 +556,9 @@ def dag_longest_levels(
     The sum is exact: level ≤ depth ≤ ``max_iter`` and nodes ≤
     2^63/max_iter.
     """
-    e = edges.select(
-        F.col(child_col).alias("child"), F.col(parent_col).alias("parent")
-    ).filter(F.col("child") != F.col("parent"))
+    e = edges.select("child", "parent").filter(
+        F.col("child") != F.col("parent")
+    )
     levels = _nodes(e, "child", "parent").select(
         "node", F.lit(0).cast("long").alias("level")
     )
@@ -623,8 +589,6 @@ def neighbor_jaccard(
     edges: DataFrame,
     threshold: float = 0.25,
     min_common: int = 1,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Structural node similarity: ``(node_a, node_b, common, union_sz,
     jaccard_e4)`` for unordered node pairs whose UNDIRECTED neighbor
@@ -643,7 +607,7 @@ def neighbor_jaccard(
     """
     uni = F.col("sz_a") + F.col("sz_b") - F.col("inter")
     jac = F.col("inter") / uni
-    adj = _undirected_adjacency(edges, src_col, dst_col)
+    adj = _undirected_adjacency(edges)
     return (
         _overlap(adj, "nbr", id_col="node")
         .filter((F.col("inter") >= min_common) & (jac >= threshold))
@@ -660,8 +624,6 @@ def neighbor_jaccard(
 def deterministic_walks(
     edges: DataFrame,
     length: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
     mult_a: int = 2654435761,
     mult_b: int = 40503,
 ) -> DataFrame:
@@ -690,7 +652,7 @@ def deterministic_walks(
             "(2**31-1)*mult_a + length*mult_b must stay below 2**63"
         )
     adj = (
-        _symmetric(edges, src_col, dst_col)
+        _symmetric(edges)
         .groupBy(F.col("src").alias("node"))
         .agg(F.sort_array(F.collect_set("dst")).alias("nbrs"))
     )
@@ -725,11 +687,7 @@ def deterministic_walks(
     return walks.select("start", "path")
 
 
-def reciprocity(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def reciprocity(edges: DataFrame) -> DataFrame:
     """Directed-edge mutuality: one row ``(n_edges, n_reciprocal,
     reciprocity_e4)`` where ``n_edges`` counts DISTINCT directed edges
     (self-loops dropped, duplicates collapsed), ``n_reciprocal`` counts
@@ -751,9 +709,7 @@ def reciprocity(
     construction, so hub nodes cannot create a hot partition).
     """
     e = (
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
+        edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
@@ -782,11 +738,7 @@ def reciprocity(
     )
 
 
-def clustering_coefficient(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def clustering_coefficient(edges: DataFrame) -> DataFrame:
     """Per-node local clustering coefficient over the UNDIRECTED simple
     graph induced by the edge list: ``(node, deg, n_tri, lcc_e4)`` with
     ``n_tri`` the EXACT number of triangles through each node and
@@ -806,7 +758,7 @@ def clustering_coefficient(
     throughout; no float anywhere, so the DuckDB oracle matches
     hash-exact.
     """
-    und = _undirected_simple(edges, src_col, dst_col)
+    und = _undirected_simple(edges)
     deg = _degrees(und)
     oriented = _orient_by_degree(und, deg)
     closed = (
@@ -849,13 +801,7 @@ def clustering_coefficient(
     )
 
 
-def link_prediction(
-    edges: DataFrame,
-    top_k: int = 100,
-    min_common: int = 1,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def link_prediction(edges: DataFrame, top_k: int = 100) -> DataFrame:
     """Topological link prediction over the UNDIRECTED simple graph:
     the ``top_k`` NON-ADJACENT node pairs ranked by common-neighbor
     count — ``(node_a, node_b, cn, pa)`` with ``cn`` = |N(a) ∩ N(b)|
@@ -879,7 +825,7 @@ def link_prediction(
     """
     if top_k < 1:
         raise ValueError("top_k must be >= 1")
-    adj = _undirected_adjacency(edges, src_col, dst_col)
+    adj = _undirected_adjacency(edges)
     deg = adj.groupBy("node").agg(F.count("*").cast("long").alias("deg"))
     cn = (
         _shared_key_pairs(adj, "nbr", id_col="node")
@@ -888,7 +834,7 @@ def link_prediction(
             F.col("id_b").alias("node_b"),
             F.col("n").alias("cn"),
         )
-        .filter(F.col("cn") >= min_common)
+        .filter(F.col("cn") >= 1)
     )
     und = adj.filter(F.col("node") < F.col("nbr")).select(
         F.col("node").alias("node_a"), F.col("nbr").alias("node_b")
@@ -915,12 +861,7 @@ def link_prediction(
     )
 
 
-def hits_fixed(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    iterations: int = 3,
-) -> DataFrame:
+def hits_fixed(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """Kleinberg HITS in pure integer arithmetic: ``(node, hub_e9,
     auth_e9)`` after exactly ``iterations`` rounds over the DEDUPLICATED
     directed edge set (self-loops dropped) — the hub/authority twin of
@@ -938,7 +879,7 @@ def hits_fixed(
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     e = materialize(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
@@ -1074,13 +1015,9 @@ def association_rules(
 def modularity(
     edges: DataFrame,
     labels: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    node_col: str = "node",
-    label_col: str = "label",
 ) -> DataFrame:
-    """Newman modularity decomposition of a node labeling over the
-    UNDIRECTED simple graph: one row per community ``(label, n_nodes,
+    """Newman modularity decomposition of a ``(node, label)`` labeling over
+    the UNDIRECTED simple graph: one row per community ``(label, n_nodes,
     in_edges, tot_deg, m, contrib_num)`` where ``in_edges`` counts
     edges with both endpoints in the community, ``tot_deg`` sums member
     degrees, ``m`` is the global edge count, and
@@ -1103,11 +1040,9 @@ def modularity(
     4·m·in_c and tot_c² stay under 2^63 (m beyond ~2.3·10^18 internal
     edges per community is past any real graph).
     """
-    und = _undirected_simple(edges, src_col, dst_col)
+    und = _undirected_simple(edges)
     m_row = und.agg(F.count("*").cast("long").alias("m"))
-    lab = labels.select(
-        F.col(node_col).alias("node"), F.col(label_col).alias("label")
-    )
+    lab = labels.select("node", "label")
     la = lab.select(F.col("node").alias("a"), F.col("label").alias("la"))
     lb = lab.select(F.col("node").alias("b"), F.col("label").alias("lb"))
     labeled = und.join(la, "a").join(lb, "b")
@@ -1148,15 +1083,11 @@ def temporal_reachability(
     edges: DataFrame,
     sources: DataFrame,
     rounds: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    time_col: str = "t",
-    node_col: str = "node",
-    start_col: str = "t0",
 ) -> DataFrame:
     """Time-RESPECTING reachability: ``(node, arrival)`` = the earliest
-    arrival time at every node reachable from ``sources`` within
-    ``rounds`` hops, where an edge ``(u, v, t)`` is traversable only if
+    arrival time at every node reachable from ``sources`` (``node``, start
+    time ``t0``) within ``rounds`` hops over ``(src, dst, t)`` edges, where
+    an edge ``(u, v, t)`` is traversable only if
     ``t >= arrival(u)`` (static reachability overcounts by ignoring time
     order).  Unreached nodes are absent.  Exactly ``rounds``
     relaxations of
@@ -1170,15 +1101,9 @@ def temporal_reachability(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e = edges.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col(time_col).alias("t"),
-    )
+    e = edges.select("src", "dst", "t")
     arr = (
-        sources.select(
-            F.col(node_col).alias("node"), F.col(start_col).alias("arrival")
-        )
+        sources.select("node", F.col("t0").alias("arrival"))
         .groupBy("node")
         .agg(F.min("arrival").alias("arrival"))
     )
@@ -1193,13 +1118,7 @@ def temporal_reachability(
 
 
 def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    node_col: str = "node",
-    iterations: int = 3,
-    damping_pct: int = 85,
+    edges: DataFrame, seeds: DataFrame, iterations: int = 3
 ) -> DataFrame:
     """Personalized PageRank: random-walk-with-restart mass RESTRICTED to
     a seed set ("entities most related to THESE concepts").  Returns
@@ -1210,11 +1129,8 @@ def personalized_pagerank(
         r_{t+1}(v) = (100-d)·S div 100 · [v ∈ seeds]
                      + d·Σ_{u→v} (r_t(u) div deg⁺(u)) div 100
 
-    `pagerank_fixed` is the every-node-a-seed case, and both run one
-    integer core; the seed flag is a broadcast join computed once on the
-    node spine, not per round.
+    with d = 85.  `pagerank_fixed` is the every-node-a-seed case, and
+    both run one integer core; the seed flag is a broadcast join computed
+    once on the node spine, not per round.
     """
-    seed_nodes = seeds.select(F.col(node_col).alias("node"))
-    return _integer_pagerank(
-        edges, src_col, dst_col, seed_nodes, iterations, damping_pct
-    )
+    return _integer_pagerank(edges, seeds.select("node"), iterations, 85)

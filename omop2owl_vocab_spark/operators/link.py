@@ -23,14 +23,12 @@ from omop2owl_vocab_spark.operators.fixpoint import iterate, materialize
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
+    edges: DataFrame, max_iter: int = 25
 ) -> tuple[DataFrame, dict]:
-    """Return ``(labels, stats)`` with labels = (node, component) and
-    component = min node id (lexicographic — ids are strings end-to-end,
-    matching the reference's all-string data plane) in the component.
+    """Return ``(labels, stats)`` over ``(src, dst)`` edges, with labels
+    = (node, component) and component = min node id (lexicographic — ids
+    are strings end-to-end, matching the reference's all-string data
+    plane) in the component.
 
     Input edges need not be symmetric or deduplicated.
 
@@ -41,7 +39,7 @@ def connected_components(
     when ``PipelineConfig.cc_checkpoint_dir`` is set).
     """
     e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .filter(F.col("a") != F.col("b"))
     )
     rev = e.select(F.col("b").alias("a"), F.col("a").alias("b"))

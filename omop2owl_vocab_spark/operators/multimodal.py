@@ -47,16 +47,17 @@ FEATURES_SCHEMA = StructType(
 )
 
 
-def synth_media(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Deterministic fake media table from a text table: payload =
-    utf-8 bytes of the text (stands in for encoded image bytes)."""
+def synth_media(df: DataFrame) -> DataFrame:
+    """Deterministic fake media table from a ``(doc_id, text)`` table:
+    payload = utf-8 bytes of the text (stands in for encoded image
+    bytes)."""
     return df.select(
-        F.col(id_col).cast("long").alias("media_id"),
+        F.col("doc_id").cast("long").alias("media_id"),
         F.lit("image").alias("kind"),
         F.lit("image/fake").alias("mime"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
-        (F.length(F.col(text_col)) % 640).cast("long").alias("meta_width"),
-        (F.length(F.col(text_col)) % 480).cast("long").alias("meta_height"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
+        (F.length(F.col("text")) % 640).cast("long").alias("meta_width"),
+        (F.length(F.col("text")) % 480).cast("long").alias("meta_height"),
         F.lit(None).cast("long").alias("meta_duration_ms"),
     )
 

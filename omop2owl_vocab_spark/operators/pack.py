@@ -20,11 +20,10 @@ def train_val_test_split(
     val_pct: int = 5,
     test_pct: int = 5,
     seed: int = 42,
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Deterministic stratum per document: ``train`` / ``val`` / ``test``.
+    """Deterministic stratum per ``doc_id``: ``train`` / ``val`` / ``test``.
 
-    Bucket = first byte of md5(f"{seed}:{id}") → 0..255; granularity is
+    Bucket = first byte of md5(f"{seed}:{doc_id}") → 0..255; granularity is
     1/256 ≈ 0.4% (documented — pass percentages accordingly).  Hashing
     (not modulo on the id) keeps the split independent of id assignment
     order, stable under corpus growth, and reproducible across engines
@@ -36,7 +35,7 @@ def train_val_test_split(
     bucket = F.conv(
         F.substring(
             F.md5(
-                F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string"))
+                F.concat_ws(":", F.lit(str(seed)), F.col("doc_id").cast("string"))
             ),
             1,
             2,
@@ -52,7 +51,7 @@ def train_val_test_split(
         .otherwise("train")
     )
     return df.select(
-        F.col(id_col), bucket.alias("split_bucket"), split.alias("split")
+        "doc_id", bucket.alias("split_bucket"), split.alias("split")
     )
 
 
@@ -60,8 +59,6 @@ def pack_documents(
     df: DataFrame,
     ctx_len: int = 2048,
     n_shards: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_tokens_col: str | None = None,
 ) -> DataFrame:
     """Concatenate-then-chunk packing bookkeeping: which context window
@@ -75,14 +72,14 @@ def pack_documents(
     than one shard, so at 10⁹ docs this is n_shards independent linear
     scans, not one global sort — raise ``n_shards`` with the corpus (one
     shard ≈ one output file of ctx-sized rows).  Token counts default to
-    whitespace tokens; pass ``n_tokens_col`` naming a precomputed
-    (tokenizer-exact) count column to budget in real tokens — the
-    standard flow runs the tokenizer once upstream, persists the count,
-    and packs against it.  Output: (id, shard, n_tokens, tok_start, tok_end,
-    pack_id) with ``tok_start`` the document's offset in its shard's
-    concatenated token stream and ``pack_id`` = tok_start // ctx_len
-    (documents straddling a boundary belong to the pack they start in;
-    the writer splits them downstream).
+    whitespace tokens of ``text``; pass ``n_tokens_col`` naming a
+    precomputed (tokenizer-exact) count column to budget in real tokens
+    — the standard flow runs the tokenizer once upstream, persists the
+    count, and packs against it.  Output: (doc_id, shard, n_tokens,
+    tok_start, tok_end, pack_id) with ``tok_start`` the document's offset
+    in its shard's concatenated token stream and ``pack_id`` = tok_start
+    // ctx_len (documents straddling a boundary belong to the pack they
+    start in; the writer splits them downstream).
     """
     if ctx_len <= 0 or n_shards <= 0:
         raise ValueError("ctx_len and n_shards must be positive")
@@ -91,29 +88,29 @@ def pack_documents(
     else:
         n_tok = F.size(
             F.filter(
-                F.split(F.trim(F.col(text_col)), RE2_WS + "+"),
+                F.split(F.trim(F.col("text")), RE2_WS + "+"),
                 lambda t: t != "",
             )
         ).cast("long")
     shard = (
         F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 2), 16, 10
+            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10
         ).cast("long")
         % n_shards
     )
     base = df.select(
-        F.col(id_col),
+        "doc_id",
         shard.alias("shard"),
         n_tok.alias("n_tokens"),
     )
     w = (
         Window.partitionBy("shard")
-        .orderBy(F.col(id_col))
+        .orderBy(F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = F.sum("n_tokens").over(w)
     out = base.select(
-        id_col,
+        "doc_id",
         "shard",
         "n_tokens",
         (cum - F.col("n_tokens")).alias("tok_start"),
@@ -131,9 +128,7 @@ def pack_documents(
     )
 
 
-def pack_slices(
-    packed: DataFrame, ctx_len: int = 2048, id_col: str = "doc_id"
-) -> DataFrame:
+def pack_slices(packed: DataFrame, ctx_len: int = 2048) -> DataFrame:
     """Writer-side splitter over ``pack_documents`` output: one row per
     (document, context window it overlaps), with exact token offsets on
     both axes — a shard writer cuts ctx_len windows directly from these
@@ -185,7 +180,7 @@ def pack_slices(
     )
     last = F.expr(f"(tok_end - 1) div {int(ctx_len)}")
     s = packed.filter(F.col("n_tokens") > 0).select(
-        id_col,
+        "doc_id",
         "shard",
         "tok_start",
         "tok_end",
@@ -194,7 +189,7 @@ def pack_slices(
     slice_start = F.greatest("tok_start", F.col("pack_id") * ctx_len)
     slice_end = F.least("tok_end", (F.col("pack_id") + 1) * ctx_len)
     return s.select(
-        id_col,
+        "doc_id",
         "shard",
         "pack_id",
         (slice_start - F.col("tok_start")).alias("doc_tok_start"),

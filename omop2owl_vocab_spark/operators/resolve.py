@@ -194,13 +194,11 @@ def fuzzy_join(
     )
 
 
-def block_stats(
-    df: DataFrame, block_col: str, top_k: int = 20
-) -> DataFrame:
+def block_stats(df: DataFrame, block_col: str) -> DataFrame:
     """Pre-flight forecast for the blocked join: per-block row count
-    and the pair count ``n·(n−1)/2`` it implies, largest blocks first
-    (top-k via TakeOrderedAndProject — no global sort).  Read this the
-    way `lsh_bucket_stats` is read: a block whose ``n_pairs`` dwarfs
+    and the pair count ``n·(n−1)/2`` it implies, the 20 largest blocks
+    first (top-k via TakeOrderedAndProject — no global sort).  Read this
+    the way `lsh_bucket_stats` is read: a block whose ``n_pairs`` dwarfs
     the rest is the one to split with a composite key."""
     counts = df.groupBy(F.col(block_col).alias("block")).agg(
         F.count("*").cast("long").alias("n_rows")
@@ -214,5 +212,5 @@ def block_stats(
             .alias("n_pairs"),
         )
         .orderBy(F.col("n_pairs").desc(), F.col("block").asc())
-        .limit(top_k)
+        .limit(20)
     )

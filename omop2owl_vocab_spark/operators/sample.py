@@ -18,12 +18,11 @@ def stratified_sample(
     df: DataFrame,
     k: int,
     strata_col: str = "lang",
-    id_col: str = "doc_id",
     seed: int = 42,
 ) -> DataFrame:
     """The k lowest-md5-rank documents of every stratum.
 
-    Rank key = md5(f"{seed}:{id}") — a uniform, reproducible shuffle of
+    Rank key = md5(f"{seed}:{doc_id}") — a uniform, reproducible shuffle of
     each stratum; changing ``seed`` re-deals.  Exact top-k per stratum
     via ``row_number`` over (key, id): one partitioned window — strata
     sort independently, so the plan is n_strata parallel linear sorts,
@@ -36,16 +35,16 @@ def stratified_sample(
     form here IS the correctness contract; the prune is a strict filter
     that cannot change the selected set when the bound holds.
 
-    Output: (id, stratum, sample_key, sample_rank ∈ 1..k).
+    Output: (doc_id, stratum, sample_key, sample_rank ∈ 1..k).
     """
     if k <= 0:
         raise ValueError("k must be positive")
     key = F.md5(
-        F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string"))
+        F.concat_ws(":", F.lit(str(seed)), F.col("doc_id").cast("string"))
     )
-    w = Window.partitionBy(strata_col).orderBy("sample_key", id_col)
+    w = Window.partitionBy(strata_col).orderBy("sample_key", "doc_id")
     return (
-        df.select(id_col, strata_col, key.alias("sample_key"))
+        df.select("doc_id", strata_col, key.alias("sample_key"))
         .withColumn("sample_rank", F.row_number().over(w).cast("long"))
         .filter(F.col("sample_rank") <= k)
     )
@@ -54,11 +53,11 @@ def stratified_sample(
 _HEX_SPACE = 16**15
 
 
-def _u60(seed: int, id_col: str):
-    """Uniform 60-bit draw per id — md5-prefix, engine-portable."""
+def _u60(seed: int):
+    """Uniform 60-bit draw per ``doc_id`` — md5-prefix, engine-portable."""
     return F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(f"mix{seed}:"), F.col(id_col).cast("string"))),
+            F.md5(F.concat(F.lit(f"mix{seed}:"), F.col("doc_id").cast("string"))),
             1,
             15,
         ),
@@ -70,19 +69,17 @@ def _u60(seed: int, id_col: str):
 def mixture_sample(
     df: DataFrame,
     rates: dict[str, float],
-    source_col: str = "source",
-    id_col: str = "doc_id",
     seed: int = 0,
     default_rate: float = 0.0,
 ) -> DataFrame:
     """Deterministic data-mixture resampling — the domain-reweighting
-    primitive (Pile / DoReMi style): each source gets a sampling rate;
-    ``rate < 1`` downsamples, ``rate > 1`` UPSAMPLES by emitting
-    ``floor(rate)`` full copies plus one more with probability
+    primitive (Pile / DoReMi style): each ``source`` value gets a
+    sampling rate; ``rate < 1`` downsamples, ``rate > 1`` UPSAMPLES by
+    emitting ``floor(rate)`` full copies plus one more with probability
     ``frac(rate)``.  Unlisted sources fall back to ``default_rate``
     (0.0 = drop — the explicit-allowlist posture).
 
-    Determinism without a single float at runtime: each id draws a
+    Determinism without a single float at runtime: each doc_id draws a
     uniform 60-bit integer ``u = md5-prefix(seed:id)`` and the
     fractional acceptance is the INTEGER comparison ``u < floor(frac ·
     16^15)`` — thresholds are computed in Python at plan time, so the
@@ -102,7 +99,7 @@ def mixture_sample(
     """
     if default_rate < 0 or any(r < 0 for r in rates.values()):
         raise ValueError("rates must be non-negative")
-    u = _u60(seed, id_col)
+    u = _u60(seed)
 
     def n_copies(rate: float):
         base = int(rate)
@@ -111,7 +108,7 @@ def mixture_sample(
 
     expr = None
     for src, rate in sorted(rates.items()):
-        cond = F.col(source_col) == src
+        cond = F.col("source") == src
         expr = (
             F.when(cond, n_copies(rate))
             if expr is None
@@ -134,7 +131,6 @@ def pps_sample(
     df: DataFrame,
     weight_col: str,
     k: int,
-    id_col: str = "doc_id",
     seed: int = 7,
 ) -> DataFrame:
     """Poisson probability-proportional-to-size sampling: include each
@@ -166,7 +162,7 @@ def pps_sample(
         F.substring(
             F.md5(
                 F.concat(
-                    F.lit(f"pps{seed}:"), F.col(id_col).cast("string")
+                    F.lit(f"pps{seed}:"), F.col("doc_id").cast("string")
                 )
             ),
             1,
@@ -189,14 +185,14 @@ def pps_sample(
     )
     return (
         df.select(
-            F.col(id_col),
+            "doc_id",
             F.col(weight_col).cast("long").alias(weight_col + "_w"),
             draw.alias("__draw"),
         )
         .crossJoin(broadcast(tot))
         .filter(lhs < rhs)
         .select(
-            id_col,
+            "doc_id",
             F.col(weight_col + "_w").alias("weight"),
             F.col("__draw").alias("pps_key"),
         )

@@ -88,10 +88,9 @@ def global_prefix_sum(
     df: DataFrame,
     order_by: list[Column],
     value_col: str,
-    out_col: str = "cum",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Every input row extended with ``out_col`` = the running total of
+    """Every input row extended with ``cum`` = the running total of
     ``value_col`` over the global ``order_by`` ordering (inclusive of
     the current row).  Exact long arithmetic; the result is identical
     for ANY partition count — boundaries move work, not values."""
@@ -101,7 +100,7 @@ def global_prefix_sum(
     )
     return (
         scanned.withColumn(
-            out_col,
+            "cum",
             (F.col("__local") + F.coalesce(F.col("__off"), F.lit(0)))
             .cast("long"),
         )
@@ -114,14 +113,13 @@ def budget_select(
     order_by: list[Column],
     cost_col: str,
     budget: int,
-    cum_col: str = "cum",
 ) -> DataFrame:
     """Greedy selection under a global budget: walk the table in
     ``order_by`` order (best-first — quality rank, priority, price)
     accumulating ``cost_col``, keep every row whose INCLUSIVE running
     total still fits ``budget``.  The token-budget data-selection
     primitive ("take the highest-quality documents up to 10B training
-    tokens"), returning the kept rows plus their running total.
+    tokens"), returning the kept rows plus their running total ``cum``.
 
     One `global_prefix_sum` + a pushed filter — the cut is a plain
     predicate on the cum column, so partitions past the budget point
@@ -129,8 +127,8 @@ def budget_select(
     """
     if budget < 0:
         raise ValueError("budget must be >= 0")
-    summed = global_prefix_sum(df, order_by, cost_col, out_col=cum_col)
-    return summed.filter(F.col(cum_col) <= budget)
+    summed = global_prefix_sum(df, order_by, cost_col)
+    return summed.filter(F.col("cum") <= budget)
 
 
 def skyline_2d(

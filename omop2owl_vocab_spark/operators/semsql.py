@@ -38,10 +38,10 @@ CORE_PREFIXES = {
 def write_semsql_sqlite(
     triples: DataFrame,
     path: str,
-    prefix_map: dict[str, str] | None = None,
     max_rows: int = 5_000_000,
 ) -> int:
-    """Write ``statements`` + ``prefix`` tables; returns row count.
+    """Write ``statements`` + ``prefix`` tables (the bundled prefix map);
+    returns row count.
 
     Single pass over the plan: rows are counted while streaming (a separate
     guard ``count()`` would execute the whole upstream DAG twice); crossing
@@ -60,20 +60,17 @@ def write_semsql_sqlite(
             "language TEXT)"
         )
         con.execute("CREATE TABLE prefix (prefix TEXT, base TEXT)")
-        if prefix_map is None:
-            # reference parity: its .db prefix table carries the full
-            # bundled prefixes.csv (~235 rows) + the hardcoded pair
-            # (omop2owl_vocab.py:123,126,137) — a downstream tool
-            # expanding foreign CURIEs through this table expects them.
-            # Single source (sources/prefixes.py) so the .db can't drift
-            # from the dim/manifest.
-            from omop2owl_vocab_spark.sources.prefixes import (
-                default_prefix_map,
-            )
+        # reference parity: its .db prefix table carries the full
+        # bundled prefixes.csv (~235 rows) + the hardcoded pair
+        # (omop2owl_vocab.py:123,126,137) — a downstream tool
+        # expanding foreign CURIEs through this table expects them.
+        # Single source (sources/prefixes.py) so the .db can't drift
+        # from the dim/manifest.
+        from omop2owl_vocab_spark.sources.prefixes import default_prefix_map
 
-            prefix_map = default_prefix_map()
         con.executemany(
-            "INSERT INTO prefix VALUES (?, ?)", sorted(prefix_map.items())
+            "INSERT INTO prefix VALUES (?, ?)",
+            sorted(default_prefix_map().items()),
         )
         batch = []
         cols = triples.select(

@@ -21,17 +21,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def lis_per_group(
-    df: DataFrame,
-    group_col: str = "user_id",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Longest STRICTLY-increasing subsequence length per group:
-    ``(group, n_events, lis_len)`` over the (ts, id)-ordered value
-    sequence — the monotone-trend depth readout (engagement ramps,
-    price ladders, dose escalation), and the canonical can't-window DP.
+def lis_per_group(df: DataFrame) -> DataFrame:
+    """Longest STRICTLY-increasing subsequence length per ``user_id``:
+    ``(user_id, n_events, lis_len)`` over the ``value`` sequence ordered
+    by (``ts``, ``event_id``) — the monotone-trend depth readout
+    (engagement ramps, price ladders, dose escalation), and the canonical
+    can't-window DP.
 
     Patience-sorting O(n log n) per group (numpy ``searchsorted`` on
     the pile tops — vectorized binary search, no Python-level loop
@@ -49,8 +44,8 @@ def lis_per_group(
     # group key keeps its INPUT type (a lossy cast("long") would merge
     # every non-numeric key into one NULL group and silently compute
     # one interleaved LIS)
-    g_type = dict(df.dtypes)[group_col]
-    out_schema = f"{group_col} {g_type}, n_events long, lis_len long"
+    g_type = dict(df.dtypes)["user_id"]
+    out_schema = f"user_id {g_type}, n_events long, lis_len long"
 
     def _lis(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -67,16 +62,16 @@ def lis_per_group(
                 n_piles += 1
         return pd.DataFrame(
             {
-                group_col: [pdf["__g"].iloc[0]],
+                "user_id": [pdf["__g"].iloc[0]],
                 "n_events": [len(vals)],
                 "lis_len": [n_piles],
             }
         )
 
     base = df.select(
-        F.col(group_col).alias("__g"),
-        F.col(value_col).cast("double").alias("__v"),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("__ts"),
-        F.col(id_col).alias("__id"),  # keeps input type (tiebreak only)
+        F.col("user_id").alias("__g"),
+        F.col("value").cast("double").alias("__v"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("__ts"),
+        F.col("event_id").alias("__id"),  # keeps input type (tiebreak only)
     ).filter(F.col("__v").isNotNull())
     return base.groupBy("__g").applyInPandas(_lis, schema=out_schema)

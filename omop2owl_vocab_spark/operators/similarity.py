@@ -112,8 +112,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k neighbors per query (excluding self-matches by id).
 
@@ -121,8 +119,8 @@ def cosine_topk(
     until the rank-k aggregate on (query_id) keys.
     """
     return _ranked_cosine(
-        _vectors(corpus, id_col, vec_col, "neighbor_id", "c"),
-        _vectors(queries, id_col, vec_col, "query_id", "q"),
+        _vectors(corpus, "vec_id", "embedding", "neighbor_id", "c"),
+        _vectors(queries, "vec_id", "embedding", "query_id", "q"),
         k,
     )
 
@@ -158,11 +156,10 @@ def hyperplane_buckets(
     df: DataFrame,
     n_bits: int = 8,
     dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
 ) -> DataFrame:
-    """Deterministic random-hyperplane LSH bucket per vector.
+    """Deterministic random-hyperplane LSH bucket per ``embedding``:
+    ``(vec_id, embedding, bucket)``.
 
     The ±1 weight matrix comes from ``_hyperplane_weights`` (driver-side
     md5, plan-time constant, embedded as literal arrays — reproducible
@@ -182,16 +179,14 @@ def hyperplane_buckets(
             "hyperplane_buckets requires an explicit dim= (embedding "
             "length); inferring it would run a driver-side job per call"
         )
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     weights = _hyperplane_weights(n_bits, dim, seed)
 
     bits = []
     for b in range(n_bits):
         w = F.array(*[F.lit(x) for x in weights[b]])
         bits.append(F.when(_dot(v, w) >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return df.select(
-        F.col(id_col), F.col(vec_col), F.concat(*bits).alias("bucket")
-    )
+    return df.select("vec_id", "embedding", F.concat(*bits).alias("bucket"))
 
 
 def _probe_buckets(bucket: Column, n_bits: int, probes: int) -> Column:
@@ -219,8 +214,6 @@ def ann_topk_bucketed(
     n_bits: int = 8,
     dim: int | None = None,
     probes: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """ANN top-k: compare only within the query's hyperplane bucket(s).
@@ -240,8 +233,8 @@ def ann_topk_bucketed(
     where a forced broadcast of the "query" side is an OOM, and the
     bucket equi-join should fall back to the planner/AQE choice (r5
     verdict #5)."""
-    cb = hyperplane_buckets(corpus, n_bits, dim=dim, id_col=id_col, vec_col=vec_col)
-    qb = hyperplane_buckets(queries, n_bits, dim=dim, id_col=id_col, vec_col=vec_col)
+    cb = hyperplane_buckets(corpus, n_bits, dim=dim)
+    qb = hyperplane_buckets(queries, n_bits, dim=dim)
     if probes:
         # corpus buckets are disjoint per vector, query probe buckets are
         # distinct strings → no (query, neighbor) pair can appear twice,
@@ -250,8 +243,8 @@ def ann_topk_bucketed(
             "bucket", F.explode(_probe_buckets(F.col("bucket"), n_bits, probes))
         )
     return _ranked_cosine(
-        _vectors(cb, id_col, vec_col, "neighbor_id", "c", "bucket"),
-        _vectors(qb, id_col, vec_col, "query_id", "q", "bucket"),
+        _vectors(cb, "vec_id", "embedding", "neighbor_id", "c", "bucket"),
+        _vectors(qb, "vec_id", "embedding", "query_id", "q", "bucket"),
         k,
         "bucket",
         broadcast_queries,
@@ -259,16 +252,13 @@ def ann_topk_bucketed(
 
 
 def ivf_assign(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rank_limit: int = 1,
+    df: DataFrame, centroids: DataFrame, rank_limit: int = 1
 ) -> DataFrame:
     """IVF coarse quantization: nearest-centroid assignment (top
     ``rank_limit`` centroids per vector, for multi-probe on the query side).
 
-    ``centroids`` is a small (id, vector) frame — broadcast; squared L2
+    Both frames carry ``(vec_id, embedding)``; ``centroids`` is small —
+    broadcast; squared L2
     distance is a LEFT FOLD over components (matches SQL ``list_reduce``
     term-for-term, so assignments are bit-identical across engines); ties
     break on centroid id.  Output: (id, vector, centroid_id, probe_rank).
@@ -283,12 +273,12 @@ def ivf_assign(
     ``rank_limit>1`` — the tiny multi-probe query side.
     """
     c = centroids.select(
-        F.col(id_col).alias("centroid_id"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").cast("array<double>").alias("cvec"),
     )
     v = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("vec"),
     )
     dist2 = F.aggregate(
         F.zip_with(F.col("vec"), F.col("cvec"), lambda x, y: (x - y) * (x - y)),
@@ -325,8 +315,6 @@ def ivf_topk(
     centroids: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-probed ANN top-k: corpus vectors live in their single nearest
     centroid's inverted list; each query scans its ``nprobe`` nearest
@@ -340,8 +328,8 @@ def ivf_topk(
     """
     if nprobe < 1:
         raise ValueError(f"nprobe must be positive, got {nprobe}")
-    cl = ivf_assign(corpus, centroids, id_col, vec_col, rank_limit=1)
-    ql = ivf_assign(queries, centroids, id_col, vec_col, rank_limit=nprobe)
+    cl = ivf_assign(corpus, centroids, rank_limit=1)
+    ql = ivf_assign(queries, centroids, rank_limit=nprobe)
     return _ranked_cosine(
         _vectors(cl, "id", "vec", "neighbor_id", "c", "centroid_id"),
         _vectors(ql, "id", "vec", "query_id", "q", "centroid_id"),
@@ -356,12 +344,10 @@ def embedding_near_duplicates(
     n_bits: int = 8,
     dim: int | None = None,
     n_tables: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine ≥ threshold, bucketed by
-    hyperplane LSH so only same-bucket pairs are scored.  ``dim`` is
-    required (see ``hyperplane_buckets``).
+    """Near-duplicate ``vec_id`` pairs by ``embedding`` cosine ≥
+    threshold, bucketed by hyperplane LSH so only same-bucket pairs are
+    scored.  ``dim`` is required (see ``hyperplane_buckets``).
 
     ``n_tables`` > 1 is standard OR-amplification: L independent
     hyperplane tables (seeds 42, 43, …), a pair is scored if it collides
@@ -375,11 +361,11 @@ def embedding_near_duplicates(
     tagged = None
     for t in range(n_tables):
         b = hyperplane_buckets(
-            df, n_bits, dim=dim, id_col=id_col, vec_col=vec_col, seed=42 + t
+            df, n_bits, dim=dim, seed=42 + t
         ).withColumn("bucket", F.concat(F.lit(f"{t}:"), F.col("bucket")))
         tagged = b if tagged is None else tagged.unionByName(b)
-    a = tagged.select(F.col(id_col).alias("id_a"), "bucket")
-    c = tagged.select(F.col(id_col).alias("id_b"), "bucket")
+    a = tagged.select(F.col("vec_id").alias("id_a"), "bucket")
+    c = tagged.select(F.col("vec_id").alias("id_b"), "bucket")
     pairs = (
         a.join(c, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -387,8 +373,8 @@ def embedding_near_duplicates(
     )
     if n_tables > 1:
         pairs = pairs.dropDuplicates(["id_a", "id_b"])
-    va = _vectors(df, id_col, vec_col, "id_a", "a")
-    vb = _vectors(df, id_col, vec_col, "id_b", "b")
+    va = _vectors(df, "vec_id", "embedding", "id_a", "a")
+    vb = _vectors(df, "vec_id", "embedding", "id_b", "b")
     cos = _cosine(F.col("av"), F.col("bv"), F.col("an"), F.col("bn"))
     return (
         pairs.join(va, "id_a")
@@ -405,11 +391,8 @@ def ann_recall(
     k: int = 10,
     dim: int | None = None,
     n_bits: int = 8,
-    probes: int = 0,
     centroids: DataFrame | None = None,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN quality as a first-class, queryable metric: one row per
     approximate method with its top-``k`` recall against the brute-force
@@ -432,19 +415,17 @@ def ann_recall(
     the underlying operators' bucketed plans.
     """
     truth = materialize(
-        cosine_topk(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
+        cosine_topk(corpus, queries, k=k)
         .select("query_id", "neighbor_id")
     )
     approx: dict[str, DataFrame] = {
         "hyperplane": ann_topk_bucketed(
-            corpus, queries, k=k, n_bits=n_bits, dim=dim, probes=probes,
-            id_col=id_col, vec_col=vec_col,
+            corpus, queries, k=k, n_bits=n_bits, dim=dim
         )
     }
     if centroids is not None:
         approx["ivf"] = ivf_topk(
-            corpus, queries, centroids, k=k, nprobe=nprobe,
-            id_col=id_col, vec_col=vec_col,
+            corpus, queries, centroids, k=k, nprobe=nprobe
         )
     labeled = None
     for method, df in approx.items():
@@ -488,22 +469,17 @@ def ann_recall(
     )
 
 
-def scalar_quantize(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    levels: int = 256,
-) -> DataFrame:
-    """Per-dimension scalar quantization (the int8 compression step in
-    front of ANN indexes — 4x smaller vectors, distance computed on
-    codes): corpus-wide min/max per dimension, each component mapped to
-    ``floor((x - min) * (levels-1) / (max - min))`` in {0..levels-1};
-    constant dimensions map to 0.
+def scalar_quantize(emb: DataFrame) -> DataFrame:
+    """Per-dimension 256-level scalar quantization of ``embedding`` (the
+    int8 compression step in front of ANN indexes — 4x smaller vectors,
+    distance computed on codes): corpus-wide min/max per dimension, each
+    component mapped to ``floor((x - min) * 255 / (max - min))`` in
+    {0..255}; constant dimensions map to 0.
 
     Everything is EXACT integer arithmetic after a fixed-point e6
     conversion (floor(x*1e6+0.5) on the double-widened component —
     deterministic across engines), so the codes are hash-reproducible:
-    the floor division is computed as ``(d*(levels-1) - pmod(...)) / r``
+    the floor division is computed as ``(d*255 - pmod(...)) / r``
     on longs, never a double rounding.
 
     Plan: posexplode → per-dimension min/max hash-agg (rows = dim
@@ -513,13 +489,13 @@ def scalar_quantize(
     shuffle is the dimension-keyed stats agg whose input is the one
     unavoidable full scan.
 
-    Returns ``(id_col, codes: array<long>)``.
+    Returns ``(vec_id, codes: array<long>)``.
     """
     v6 = F.transform(
-        F.col(vec_col).cast("array<double>"),
+        F.col("embedding").cast("array<double>"),
         lambda x: F.floor(x * 1000000 + F.lit(0.5)).cast("long"),
     )
-    e6 = emb.select(F.col(id_col), v6.alias("__v6"))
+    e6 = emb.select("vec_id", v6.alias("__v6"))
     ex = e6.select(F.posexplode("__v6").alias("pos", "val"))
     stats = ex.groupBy("pos").agg(
         F.min("val").alias("mn"), F.max("val").alias("mx")
@@ -534,7 +510,7 @@ def scalar_quantize(
             lambda s: s["mx"],
         ).alias("__maxs"),
     )
-    lv = F.lit(levels - 1)
+    lv = F.lit(255)
     diff = F.zip_with(F.col("__v6"), F.col("__mins"), lambda x, m: x - m)
     rng = F.zip_with(F.col("__maxs"), F.col("__mins"), lambda a, b: a - b)
     codes = F.zip_with(
@@ -546,19 +522,15 @@ def scalar_quantize(
     )
     return (
         e6.crossJoin(F.broadcast(packed))
-        .select(F.col(id_col), codes.alias("codes"))
+        .select("vec_id", codes.alias("codes"))
     )
 
 
-def centroids(
-    emb: DataFrame,
-    group_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-group embedding centroids in exact fixed point — the k-means
-    / IVF-training UPDATE step (assign is `ivf_topk`'s bucketing) and
+def centroids(emb: DataFrame) -> DataFrame:
+    """Per-``label`` ``embedding`` centroids in exact fixed point — the
+    k-means / IVF-training UPDATE step (assign is `ivf_topk`'s bucketing) and
     the class-prototype builder for nearest-centroid classification:
-    ``(group_col, dim, n, sum_e6, mean_e6)`` long-form, one row per
+    ``(label, dim, n, sum_e6, mean_e6)`` long-form, one row per
     (group, dimension).
 
     Components are e6 fixed-pointed FIRST (``floor(x·10^6 + 0.5)`` on
@@ -578,19 +550,19 @@ def centroids(
     """
     v6 = F.posexplode(
         F.transform(
-            F.col(vec_col).cast("array<double>"),
+            F.col("embedding").cast("array<double>"),
             lambda x: F.floor(x * 1000000 + F.lit(0.5)).cast("long"),
         )
     )
-    ex = emb.select(F.col(group_col), v6.alias("dim", "v6"))
+    ex = emb.select("label", v6.alias("dim", "v6"))
     return (
-        ex.groupBy(group_col, "dim")
+        ex.groupBy("label", "dim")
         .agg(
             F.count("*").cast("long").alias("n"),
             F.sum("v6").cast("long").alias("sum_e6"),
         )
         .select(
-            group_col,
+            "label",
             F.col("dim").cast("long").alias("dim"),
             "n",
             "sum_e6",

@@ -254,11 +254,10 @@ def rank_normalize(
     df: DataFrame,
     keys: list[str],
     value_col: str,
-    out_col: str = "pct_rank_e4",
 ) -> DataFrame:
     """Per-group rank normalization (the quantile/rank feature scaling
     used before tree-free models and for cross-group score calibration):
-    appends ``out_col`` = percent_rank within each ``keys`` group in
+    appends ``pct_rank_e4`` = percent_rank within each ``keys`` group in
     EXACT e4 fixed point — ``(rank-1)*10000 div (n-1)`` on integers
     (single-row groups pin to 0), never a double, so engines can't
     diverge on rounding.  Ties share a rank (SQL percent_rank
@@ -280,7 +279,7 @@ def rank_normalize(
         / F.col("__n1")
     ).cast("long")
     return ranked.select(
-        *[c for c in df.columns], pct.alias(out_col)
+        *[c for c in df.columns], pct.alias("pct_rank_e4")
     )
 
 
@@ -352,10 +351,9 @@ def winsorize(
     value_col: str,
     low_pct: int = 5,
     high_pct: int = 95,
-    out_col: str = "clipped",
 ) -> DataFrame:
     """Per-group winsorization at EXACT nearest-rank percentiles: every
-    input row extended with ``out_col`` = ``value_col`` clipped into
+    input row extended with ``clipped`` = ``value_col`` clipped into
     ``[p_low, p_high]`` of its group — the robust-preprocessing clip
     (outlier-capped features, spike-capped metrics) that, unlike
     z-score trimming, never invents a value: both fences are actual
@@ -383,7 +381,7 @@ def winsorize(
     return (
         df.join(fences, group_cols, "left")
         .withColumn(
-            out_col,
+            "clipped",
             F.when(F.col("__lo").isNull() | v.isNull(), v)
             .when(v < F.col("__lo"), F.col("__lo"))
             .when(v > F.col("__hi"), F.col("__hi"))

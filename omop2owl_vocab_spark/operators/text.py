@@ -1,4 +1,5 @@
 """Text-analysis operators for large-scale training-data pipelines.
+Documents are frames with a ``doc_id`` and a ``text`` column.
 
 All hot-path logic is built-in ``pyspark.sql.functions`` (JVM, whole-stage
 codegen).  Float-valued scores are returned as ``floor(x*10⁴ + 0.5)``
@@ -43,15 +44,15 @@ def _tokens(text: Column) -> Column:
     return F.filter(F.split(F.trim(text), RE2_WS + "+"), lambda t: t != "")
 
 
-def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Whitespace token count, BPE-ish subword count (4-chars-per-token
     heuristic over non-space chars), char count."""
-    text = F.col(text_col)
+    text = F.col("text")
     nonspace = F.length(F.regexp_replace(text, RE2_WS, ""))
     # GPT-style pre-tokenizer shape: word runs and single punctuation marks
     pieces = F.regexp_extract_all(text, F.lit(r"\w+|[^\w \t\n\f\r]"), 0)
     return df.select(
-        F.col(id_col),
+        "doc_id",
         F.size(_tokens(text)).cast("long").alias("n_tokens"),
         F.ceil(nonspace / 4).cast("long").alias("n_subwords"),
         F.size(pieces).cast("long").alias("n_pieces"),
@@ -59,12 +60,7 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def token_vocab(
-    df: DataFrame,
-    top_k: int = 1000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def token_vocab(df: DataFrame, top_k: int = 1000) -> DataFrame:
     """Corpus-global token vocabulary: the ``top_k`` most frequent
     whitespace tokens with occurrence and document frequencies — the
     tokenizer-training / stopword-analysis primitive.
@@ -80,21 +76,21 @@ def token_vocab(
     if top_k <= 0:
         raise ValueError("top_k must be positive")
     return (
-        df.select(F.col(id_col), F.explode(_tokens(F.col(text_col))).alias("token"))
+        df.select("doc_id", F.explode(_tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(
             F.count("*").alias("n_occurrences"),
-            F.countDistinct(id_col).alias("n_docs"),
+            F.countDistinct("doc_id").alias("n_docs"),
         )
         .orderBy(F.col("n_occurrences").desc(), F.col("token").asc())
         .limit(top_k)
     )
 
 
-def quality_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Length / punctuation-ratio / stopword-ratio / mean-token-length
     quality signals (the usual pre-training filters)."""
-    text = F.col(text_col)
+    text = F.col("text")
     n_chars = F.length(text)
     n_punct = n_chars - F.length(F.regexp_replace(text, r"[^\w \t\n\f\r]", ""))
     toks = _tokens(text)
@@ -104,7 +100,7 @@ def quality_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     )
     safe_tokens = F.greatest(n_tokens, F.lit(1))
     return df.select(
-        F.col(id_col),
+        "doc_id",
         n_chars.cast("long").alias("n_chars"),
         _e4(n_punct / F.greatest(n_chars, F.lit(1))).alias("punct_ratio_e4"),
         _e4(n_stop / safe_tokens).alias("stopword_ratio_e4"),
@@ -114,19 +110,19 @@ def quality_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     )
 
 
-def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Marker-lexicon language guess: the language with the most marker-word
     hits wins; ties broken by language code order; 'und' if no hits.
 
     Implemented as a greatest-of-structs expression — one projection, no
     shuffle, no UDF.
     """
-    toks = F.transform(_tokens(F.col(text_col)), lambda t: F.lower(t))
+    toks = F.transform(_tokens(F.col("text")), lambda t: F.lower(t))
     scores = [
         F.size(F.filter(toks, lambda t: t.isin(*words))).alias(f"score_{lang}")
         for lang, words in LANG_MARKERS.items()
     ]
-    scored = df.select(F.col(id_col), *scores)
+    scored = df.select("doc_id", *scores)
     # pick argmax deterministically: greatest (score, reverse-alphabetic lang)
     best = F.greatest(
         *[
@@ -138,7 +134,7 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
         ]
     )
     return scored.select(
-        F.col(id_col),
+        "doc_id",
         F.when(best["s"] > 0, best["lang"]).otherwise("und").alias("lang_guess"),
         best["s"].cast("long").alias("marker_hits"),
     )
@@ -220,9 +216,7 @@ def gopher_flags(
     )
 
 
-def repetition_flags(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_flags(df: DataFrame) -> DataFrame:
     """Gopher's within-document repetition signals (Rae et al. 2021 —
     repetitious documents are the strongest low-quality predictor):
 
@@ -236,12 +230,12 @@ def repetition_flags(
     the same shuffle shape the dedup operators scale with.  Fixed-point
     e4 export keeps the DuckDB oracle exact.
 
-    Precondition: ``id_col`` must be UNIQUE (like every id-keyed operator
+    Precondition: ``doc_id`` must be UNIQUE (like every id-keyed operator
     here — duplicate ids would merge bigram counts across rows).  NULL
     ids are handled (null-safe join), but only one NULL-id row is
     meaningful for the same reason.
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     lines = F.filter(F.split(text, "\n"), lambda ln: F.trim(ln) != "")
     toks = F.transform(_tokens(text), lambda t: F.lower(t))
     # bigrams via zip_with over two slices: both array arguments evaluate
@@ -266,7 +260,7 @@ def repetition_flags(
     # and the shuffle is the same shape the dedup operators already
     # scale with.)
     stats = df.select(
-        F.col(id_col),
+        "doc_id",
         F.size(lines).alias("_n_lines"),
         (F.size(lines) - F.size(F.array_distinct(lines))).alias("_n_dup"),
         # count = size(toks)-1, never building the bigram strings a
@@ -274,22 +268,22 @@ def repetition_flags(
         F.greatest(F.size(toks) - 1, F.lit(0)).alias("_n_bigrams"),
     )
     top = (
-        df.select(F.col(id_col), F.explode(bigrams).alias("g"))
-        .groupBy(id_col, "g")
+        df.select("doc_id", F.explode(bigrams).alias("g"))
+        .groupBy("doc_id", "g")
         .agg(F.count("*").alias("c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.max("c").alias("_top_bg"))
-        .withColumnRenamed(id_col, "_tid")
+        .withColumnRenamed("doc_id", "_tid")
     )
     m = stats.join(
-        top, stats[id_col].eqNullSafe(top["_tid"]), "left"
+        top, stats["doc_id"].eqNullSafe(top["_tid"]), "left"
     ).withColumn("_top_bg", F.coalesce(F.col("_top_bg"), F.lit(0)))
     n_lines = F.col("_n_lines")
     n_dup_lines = F.col("_n_dup")
     n_bigrams = F.col("_n_bigrams")
     top_bigram = F.col("_top_bg")
     return m.select(
-        F.col(id_col),
+        "doc_id",
         _e4(n_dup_lines / F.greatest(n_lines, F.lit(1))).alias("dup_line_ratio_e4"),
         _e4(top_bigram / F.greatest(n_bigrams, F.lit(1))).alias(
             "top_bigram_ratio_e4"
@@ -300,14 +294,14 @@ def repetition_flags(
     )
 
 
-def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprint: md5 of the whitespace-normalized text (md5 is
     bit-identical across engines, unlike xxhash64 vs DuckDB hash()), plus a
     16-bucket shard key from the first hex nibble."""
-    norm = F.regexp_replace(F.trim(F.col(text_col)), RE2_WS + "+", " ")
+    norm = F.regexp_replace(F.trim(F.col("text")), RE2_WS + "+", " ")
     fp = F.md5(norm)
     return df.select(
-        F.col(id_col),
+        "doc_id",
         fp.alias("fp_md5"),
         F.conv(F.substring(fp, 1, 1), 16, 10).cast("long").alias("fp_bucket"),
     )
@@ -323,36 +317,32 @@ PII_IPV4_RE = (
 )
 
 
-def pii_flags(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def pii_flags(df: DataFrame) -> DataFrame:
     """Per-document PII counts (emails, IPv4 addresses) + a has_pii flag —
     the detection half of the standard pre-tokenization scrub.  Pure JVM
     regex extraction (codegen, no UDF); patterns are RE2-compatible so the
     DuckDB oracle re-derives counts with the identical expressions."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_email = F.size(F.regexp_extract_all(t, F.lit(PII_EMAIL_RE), 0))
     n_ipv4 = F.size(F.regexp_extract_all(t, F.lit(PII_IPV4_RE), 0))
     return df.select(
-        F.col(id_col),
+        "doc_id",
         n_email.cast("long").alias("n_emails"),
         n_ipv4.cast("long").alias("n_ipv4"),
         ((n_email > 0) | (n_ipv4 > 0)).alias("has_pii"),
     )
 
 
-def redact_pii(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """The scrub half: emails → ``[EMAIL]``, IPv4s → ``[IP]``.  Emails are
     replaced FIRST so an address whose domain label parses like a dotted
     quad can't be half-redacted by the IP pass.  Returns (id, redacted
     text) — downstream tokenization joins on id."""
-    t = F.col(text_col)
+    t = F.col("text")
     scrubbed = F.regexp_replace(
         F.regexp_replace(t, PII_EMAIL_RE, "[EMAIL]"), PII_IPV4_RE, "[IP]"
     )
-    return df.select(F.col(id_col), scrubbed.alias("redacted"))
+    return df.select("doc_id", scrubbed.alias("redacted"))
 
 
 def pii_scrub(
@@ -430,12 +420,7 @@ def domain_flags(
     )
 
 
-def line_dedup(
-    df: DataFrame,
-    min_count: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def line_dedup(df: DataFrame, min_count: int = 2) -> DataFrame:
     """Corpus-wide duplicated-line removal (the CCNet/C4 boilerplate
     pass): drop every line whose normalized form (``lower(trim(line))``)
     occurs at least ``min_count`` times across the WHOLE corpus —
@@ -464,8 +449,8 @@ def line_dedup(
     if min_count < 2:
         raise ValueError("min_count must be >= 2")
     lines = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        "doc_id",
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     ).withColumn(
         "line_key",
         F.when(
@@ -485,7 +470,7 @@ def line_dedup(
     kept = F.when(
         ~F.col("__dup"), F.struct(F.col("pos"), F.col("line"))
     )
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_lines"),
         F.sum(F.col("__dup").cast("long")).cast("long").alias("n_removed"),
         F.concat_ws(
@@ -501,8 +486,6 @@ def tfidf_top_terms(
     df: DataFrame,
     k: int = 5,
     idf_mode: str = "log",
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Top-``k`` TF-IDF terms per document — the keyword-extraction /
     corpus-drift primitive.  ``tf`` = raw occurrence count in the doc,
@@ -545,12 +528,12 @@ def tfidf_top_terms(
 
     tf = (
         df.select(
-            F.col(id_col), F.explode(_tokens(F.col(text_col))).alias("term")
+            F.col("doc_id"), F.explode(_tokens(F.col("text"))).alias("term")
         )
-        .groupBy(id_col, "term")
+        .groupBy("doc_id", "term")
         .agg(F.count("*").cast("long").alias("tf"))
     )
-    n = df.agg(F.countDistinct(id_col).cast("long").alias("n_docs"))
+    n = df.agg(F.countDistinct("doc_id").cast("long").alias("n_docs"))
     j = tf.withColumn(
         "df",
         F.count("*").over(Window.partitionBy("term")).cast("long"),
@@ -563,7 +546,7 @@ def tfidf_top_terms(
         score = (F.col("tf") * (F.col("n_docs") + 1)).cast("double") / (
             F.col("df") + 1
         ).cast("double")
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("score").desc(), F.col("term").asc()
     )
     return (
@@ -571,7 +554,7 @@ def tfidf_top_terms(
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
         .select(
-            id_col, "term", "tf", "df", "rank", _e4(F.col("score")).alias("score_e4")
+            "doc_id", "term", "tf", "df", "rank", _e4(F.col("score")).alias("score_e4")
         )
     )
 
@@ -580,7 +563,6 @@ def bigram_pmi(
     df: DataFrame,
     min_count: int = 5,
     top_m: int = 100,
-    text_col: str = "text",
 ) -> DataFrame:
     """Corpus-level collocation extraction: the ``top_m`` word bigrams
     by pointwise mutual information — the classic phrase-mining /
@@ -617,7 +599,7 @@ def bigram_pmi(
     if top_m <= 0:
         raise ValueError("top_m must be positive")
     toks = df.select(
-        F.transform(_tokens(F.col(text_col)), lambda t: F.lower(t)).alias(
+        F.transform(_tokens(F.col("text")), lambda t: F.lower(t)).alias(
             "__t"
         )
     )
@@ -677,7 +659,6 @@ def skipgram_cooccurrence(
     window: int = 3,
     min_count: int = 5,
     top_m: int = 100,
-    text_col: str = "text",
 ) -> DataFrame:
     """Windowed skip-gram co-occurrence: the ``top_m`` ordered token
     pairs (w1 before w2, forward distance ≤ ``window``) by occurrence
@@ -704,7 +685,7 @@ def skipgram_cooccurrence(
     if min_count < 1 or top_m <= 0:
         raise ValueError("min_count and top_m must be positive")
     toks = df.select(
-        F.transform(_tokens(F.col(text_col)), lambda t: F.lower(t)).alias(
+        F.transform(_tokens(F.col("text")), lambda t: F.lower(t)).alias(
             "__t"
         )
     )
@@ -738,8 +719,6 @@ def chunk_documents(
     df: DataFrame,
     chunk_len: int = 512,
     overlap: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Overlapping character chunking — the RAG/indexing splitter:
     ``(id, chunk_idx, char_start, chunk)`` windows of ``chunk_len``
@@ -768,22 +747,22 @@ def chunk_documents(
         raise ValueError("overlap must be in [0, chunk_len)")
     step = chunk_len - overlap
     n_chunks = F.expr(
-        f"(greatest(length({text_col}) - {overlap}, 1) + {step} - 1)"
+        f"(greatest(length(text) - {overlap}, 1) + {step} - 1)"
         f" div {step}"
     )
     return (
         df.filter(
-            F.col(text_col).isNotNull() & (F.length(text_col) > 0)
+            F.col("text").isNotNull() & (F.length("text") > 0)
         )
         .select(
-            F.col(id_col),
-            F.col(text_col).alias("__t"),
+            "doc_id",
+            F.col("text").alias("__t"),
             F.explode(
                 F.sequence(F.lit(0).cast("long"), n_chunks - 1)
             ).alias("chunk_idx"),
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_idx",
             (F.col("chunk_idx") * step).alias("char_start"),
             F.expr(
@@ -795,8 +774,6 @@ def chunk_documents(
 
 def inverted_index(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_postings: int = 20,
     min_df: int = 1,
 ) -> DataFrame:
@@ -814,9 +791,9 @@ def inverted_index(
     slice); cap it upstream with a stopword/min-length filter when df
     is unbounded, exactly like the LSH bucket caps.
     """
-    toks = _tokens(F.lower(F.col(text_col)))
+    toks = _tokens(F.lower(F.col("text")))
     term_doc = (
-        df.select(F.col(id_col).alias("doc"), F.explode(toks).alias("term"))
+        df.select(F.col("doc_id").alias("doc"), F.explode(toks).alias("term"))
         .groupBy("term", "doc")
         .agg(F.count("*").alias("tf"))
     )
@@ -836,11 +813,7 @@ def inverted_index(
     )
 
 
-def trigram_lm(
-    df: DataFrame,
-    min_count: int = 1,
-    text_col: str = "text",
-) -> DataFrame:
+def trigram_lm(df: DataFrame, min_count: int = 1) -> DataFrame:
     """Conditional trigram counts — the classic count-based LM table
     ``(w1, w2, w3, n, prob_e4)`` with ``prob_e4`` the maximum-likelihood
     next-token probability P(w3 | w1 w2) in 4-decimal fixed point.  The
@@ -869,7 +842,7 @@ def trigram_lm(
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
     toks = df.select(
-        F.transform(_tokens(F.col(text_col)), lambda t: F.lower(t)).alias(
+        F.transform(_tokens(F.col("text")), lambda t: F.lower(t)).alias(
             "__t"
         )
     )
@@ -915,11 +888,7 @@ FULL_URL_RE = r"https?://[^\s]+"
 _TRACKING_RE = r"^(utm_[^=]*|fbclid|gclid|ref)="
 
 
-def url_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def url_dedup(df: DataFrame) -> DataFrame:
     """Canonical-URL deduplication — the crawl-frontier / CCNet-style
     URL key: extract every ``https?://`` URL, normalize each to its
     canonical form, and aggregate to ``(url, n_urls, n_docs,
@@ -943,10 +912,10 @@ def url_dedup(
     which partial-aggregates before the shuffle — no join anywhere.
     """
     urls = df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.explode(
             F.regexp_extract_all(
-                F.coalesce(F.col(text_col), F.lit("")), F.lit(FULL_URL_RE), 0
+                F.coalesce(F.col("text"), F.lit("")), F.lit(FULL_URL_RE), 0
             )
         ).alias("u"),
     )
@@ -1017,8 +986,6 @@ def url_dedup(
 
 def postings_delta(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_df: int = 2,
     max_postings: int = 64,
 ) -> DataFrame:
@@ -1045,8 +1012,8 @@ def postings_delta(
         raise ValueError("max_postings must be >= 1")
     term_doc = (
         df.select(
-            F.col(id_col).alias("doc"),
-            F.explode(_tokens(F.lower(F.col(text_col)))).alias("term"),
+            F.col("doc_id").alias("doc"),
+            F.explode(_tokens(F.lower(F.col("text")))).alias("term"),
         )
         .distinct()
     )
@@ -1072,11 +1039,7 @@ def postings_delta(
     )
 
 
-def sentence_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def sentence_stats(df: DataFrame) -> DataFrame:
     """Per-document sentence segmentation stats: split on terminal
     punctuation runs (``[.!?]+``), drop empty segments, and report
     ``(doc_id, n_sentences, sum_words, max_words, avg_words_e2)`` —
@@ -1098,7 +1061,7 @@ def sentence_stats(
     """
     sents = F.filter(
         F.transform(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), r"[.!?]+"),
+            F.split(F.coalesce(F.col("text"), F.lit("")), r"[.!?]+"),
             lambda s: F.trim(s),
         ),
         lambda s: s != "",
@@ -1108,7 +1071,7 @@ def sentence_stats(
         lambda s: F.size(F.filter(F.split(s, r"\s+"), lambda w: w != "")),
     )
     staged = df.select(
-        F.col(id_col).alias("doc_id"), words.alias("__w")
+        "doc_id", words.alias("__w")
     )
     n = F.size("__w")
     total = F.aggregate(

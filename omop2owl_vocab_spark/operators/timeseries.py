@@ -17,14 +17,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def gap_fill_daily(
-    events: DataFrame,
-    key_col: str,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-key contiguous daily counts: ``(key, day, n)`` for EVERY
-    epoch day between the key's first and last event, zeros where the
-    key was silent.
+def gap_fill_daily(events: DataFrame, key_col: str) -> DataFrame:
+    """Per-key contiguous daily counts of the events' ``ts``: ``(key,
+    day, n)`` for EVERY epoch day between the key's first and last
+    event, zeros where the key was silent.
 
     Plan shape: one hash-agg to (key, day) counts — the only
     data-sized shuffle, map-side combined — then a per-key min/max
@@ -41,7 +37,7 @@ def gap_fill_daily(
     matters.
     """
     day = F.expr(
-        f"unix_micros(cast({ts_col} as timestamp)) div 86400000000"
+        "unix_micros(cast(ts as timestamp)) div 86400000000"
     )
     counts = (
         events.select(F.col(key_col).alias("key"), day.alias("day"))
@@ -165,10 +161,9 @@ def cumulative_distinct(
     keys: list[str],
     item_col: str,
     seq_cols: list[str],
-    out_col: str = "n_seen",
 ) -> DataFrame:
     """Running count of DISTINCT items per key over an ordered stream:
-    one output row per input row, ``out_col`` = how many distinct
+    one output row per input row, ``n_seen`` = how many distinct
     ``item_col`` values the key has produced up to and including this
     row — the discovery/engagement curve (new vocabulary per user, new
     files touched per repo over time).
@@ -189,7 +184,7 @@ def cumulative_distinct(
         "__new", (F.row_number().over(w_first) == 1).cast("long")
     )
     return flagged.withColumn(
-        out_col, F.sum("__new").over(w_run)
+        "n_seen", F.sum("__new").over(w_run)
     ).drop("__new")
 
 

@@ -66,19 +66,16 @@ def _match_len(word: Column, pos: Column, by_len: dict[int, list[str]]) -> Colum
 def subword_token_counts(
     df: DataFrame,
     vocab: list[str] | tuple[str, ...] | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    out_col: str = "n_tokens",
 ) -> DataFrame:
-    """Per-document exact subword token count under greedy longest-prefix
-    matching against ``vocab``: ``(id_col, out_col)``.
+    """Per-document exact subword token count of ``text`` under greedy
+    longest-prefix matching against ``vocab``: ``(doc_id, n_tokens)``.
 
     Words come from the same RE2 whitespace split the rest of the text
     surface uses; each word folds left-to-right over its character
     positions (``aggregate`` over ``sequence(1, len)``) advancing by the
     matched piece length and counting one token per piece.  Feed the
     output to :func:`~omop2owl_vocab_spark.operators.pack.pack_documents`
-    via ``n_tokens_col=out_col`` to pack in tokenizer-exact budget.
+    via ``n_tokens_col="n_tokens"`` to pack in tokenizer-exact budget.
     """
     pieces = list(DEFAULT_SUBWORD_VOCAB if vocab is None else vocab)
     if not pieces:
@@ -99,7 +96,7 @@ def subword_token_counts(
     # depends on every operator using the identical RE2 split); NULL text
     # normalizes to zero tokens (F1 convention), matching the oracle's
     # LEFT JOIN + COALESCE(SUM, 0)
-    words = _tokens(F.coalesce(F.col(text_col), F.lit("")))
+    words = _tokens(F.coalesce(F.col("text"), F.lit("")))
 
     def word_tokens(w: Column) -> Column:
         zero = F.struct(
@@ -124,7 +121,7 @@ def subword_token_counts(
         F.lit(0).cast("long"),
         lambda a, x: a + x,
     )
-    return df.select(F.col(id_col), n_tok.alias(out_col))
+    return df.select("doc_id", n_tok.alias("n_tokens"))
 
 
 def subword_vocab_from_corpus(
@@ -132,15 +129,14 @@ def subword_vocab_from_corpus(
     n_pieces: int = 64,
     min_len: int = 2,
     max_len: int = 4,
-    text_col: str = "text",
 ) -> DataFrame:
     """Derive the subword piece vocabulary FROM the corpus — the
     `token_vocab`-style merge table the tokenizer then matches against:
     the ``n_pieces`` most frequent character n-grams (lengths
-    ``min_len``..``max_len``) across all word occurrences, ranked by a
-    TOTAL order (count desc, piece asc) so the cut at ``n_pieces`` is
-    deterministic and engine-portable (the DuckDB oracle re-derives the
-    identical set).
+    ``min_len``..``max_len``) across all word occurrences in ``text``,
+    ranked by a TOTAL order (count desc, piece asc) so the cut at
+    ``n_pieces`` is deterministic and engine-portable (the DuckDB oracle
+    re-derives the identical set).
 
     Plan shape: explode words → explode per-position substrings (both
     narrow, O(len x n_lengths) per word) → one partial-combining hash
@@ -154,7 +150,7 @@ def subword_vocab_from_corpus(
     if n_pieces <= 0:
         raise ValueError("n_pieces must be positive")
     words = F.explode(
-        _tokens(F.coalesce(F.col(text_col), F.lit("")))
+        _tokens(F.coalesce(F.col("text"), F.lit("")))
     ).alias("w")
     w = F.col("w")
     pieces = F.explode(

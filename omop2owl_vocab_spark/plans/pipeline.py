@@ -54,6 +54,8 @@ MIN_BUCKET_ROWS = MAX_RECORDS_PER_FILE // 16
 # 1M-row skew corpus one per slot ran the write stage's longest task at
 # 7.2 s vs 4.4 s for 16 buckets (tools/bench_skew_ab.py)
 BUCKETS_PER_SLOT = 4
+# relationship_ids whose edges are merged into one canonical concept (s4)
+EQUIVALENCE_RELS = ("Maps to",)
 
 
 @dataclass
@@ -65,7 +67,6 @@ class PipelineConfig:
     ontology_id: str = "OMOP"
     relationships: list[str] = field(default_factory=lambda: ["ALL"])
     vocabs: list[str] = field(default_factory=list)  # R8 scoping; [] = all
-    equivalence_rels: list[str] = field(default_factory=lambda: ["Maps to"])
     canonicalize: bool = True
     exclude_singletons: bool = False
     resume: bool = True
@@ -129,7 +130,6 @@ class PipelineConfig:
     def key_s4(self) -> dict:
         return self.key_s1() | {
             "stage": "s4",
-            "equivalence_rels": self.equivalence_rels,
             # the equivalence graph is vocab-scoped (see run_pipeline) —
             # a different scope is a different canon map
             "vocabs": self.vocabs,
@@ -253,7 +253,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     if cfg.canonicalize:
         def _canon_map() -> DataFrame:
             eq = edges.filter(
-                F.col("relationship_id").isin(cfg.equivalence_rels)
+                F.col("relationship_id").isin(*EQUIVALENCE_RELS)
             ).select(
                 F.col("concept_id_1").alias("src"),
                 F.col("concept_id_2").alias("dst"),

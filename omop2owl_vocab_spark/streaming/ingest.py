@@ -1,9 +1,9 @@
 """Incremental code_files → triples (Structured Streaming file source).
 
-Stateless emission only: concept triples (R1-R3) and containment edges for
-each micro-batch.  Cross-batch work (same-sha linking, CC) is inherently
-global and stays in the batch pipeline — run it as a periodic compaction
-over the streamed output.
+Stateless emission only: each micro-batch emits its concept triples
+(R1-R3).  Edge triples (containment, imports, same-content links) and
+cross-batch work (CC) need the whole corpus and come from the batch
+pipeline — run it as a periodic compaction over the streamed output.
 """
 
 from __future__ import annotations

@@ -135,6 +135,24 @@ def test_cli_canonicalize_flags(spark, tmp_path):
     assert both.canonicalize is False  # last wins, never ambiguous
 
 
+def test_cli_semsql_only_checks_output_before_starting_spark(
+    tmp_path, monkeypatch
+):
+    """-s on an outdir without a triples output exits before any JVM
+    starts."""
+    import pytest
+
+    from omop2owl_vocab_spark import cli
+
+    def no_spark(*a, **kw):
+        raise AssertionError("get_spark called before the output check")
+
+    monkeypatch.setattr(cli, "get_spark", no_spark)
+    d = vars(cli.cli_parser().parse_args(["-O", str(tmp_path), "-s"]))
+    with pytest.raises(SystemExit, match="needs an existing triples output"):
+        cli.route_and_run(d)
+
+
 def test_cli_omop_mode_writes_semsql_by_default(spark, tmp_path):
     """Reference parity: omop-mode runs produce the .db unless -S
     (omop2owl_vocab.py:540-542); -S suppresses it; -s rebuilds it alone."""

@@ -16,10 +16,10 @@ Upstream stages are checkpointed once and reused, so each measured run
 is exactly the contended path: canon rewrite → layout shuffle →
 partitioned parquet write.  Runs are interleaved for noise control.  Per
 run we record wall, the output file count (in all and of the giant
-vocab), and — via the Spark UI REST API — the task-duration
-min/median/max of the write stage (the layout's reduce side) and of the
-stage holding the run's longest task (the number the layout exists to
-bound).
+vocab), and — via the Spark UI REST API (`tools/spark_ui.py`) — the
+task-duration min/median/max of the write stage (the layout's reduce
+side) and of the stage holding the run's longest task (the number the
+layout exists to bound).
 
 Usage: ``python tools/bench_skew_ab.py`` from the repo root; env
 ``SKEW_N`` (rows, default 1M), ``SKEW_ROUNDS`` (3), ``SKEW_ROOT`` (work
@@ -38,7 +38,6 @@ import shutil
 import statistics
 import sys
 import time
-import urllib.request
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -48,6 +47,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from omop2owl_vocab_spark.plans import pipeline  # noqa: E402
 from omop2owl_vocab_spark.session import get_spark  # noqa: E402
 from omop2owl_vocab_spark.sources.synth import synth_code_files  # noqa: E402
+from tools.spark_ui import StageStats  # noqa: E402
 
 N_ROWS = int(os.environ.get("SKEW_N", 1_000_000))
 ROUNDS = int(os.environ.get("SKEW_ROUNDS", 3))
@@ -75,48 +75,16 @@ VARIANTS = {
 }
 
 
-def _rest(path: str):
-    with urllib.request.urlopen(UI + path, timeout=10) as r:
-        return json.load(r)
-
-
-def _stage_ids() -> set[int]:
-    return {s["stageId"] for s in _rest(f"/applications/{APP}/stages")}
-
-
-def _task_stats(s: dict) -> dict | None:
-    try:
-        ts = _rest(
-            f"/applications/{APP}/stages/{s['stageId']}/{s['attemptId']}"
-            "/taskSummary?quantiles=0.0,0.5,1.0"
-        )
-    except Exception:
-        return None
-    dur = ts.get("duration") or [0, 0, 0]
-    return {
-        "stage": s["name"].split("\n")[0][:80],
-        "num_tasks": s["numTasks"],
-        "task_ms_min": round(dur[0]),
-        "task_ms_med": round(dur[1]),
-        "task_ms_max": round(dur[2]),
-    }
-
-
 def _new_stage_stats(before: set[int]) -> dict:
     """Task-duration distribution of stages completed since ``before``:
     the straggler stage (the one with the longest single task) and the
     write stage (the last one: the layout's reduce side)."""
-    stats = [
-        (s["stageId"], _task_stats(s))
-        for s in _rest(f"/applications/{APP}/stages?status=complete")
-        if s["stageId"] not in before
-    ]
-    stats = [(i, t) for i, t in stats if t is not None]
-    worst = max((t for _, t in stats), key=lambda t: t["task_ms_max"])
+    stats = UI.completed_since(before)
+    worst = max(stats, key=lambda t: t["task_ms_max"])
     return {
         "max_task_ms": worst["task_ms_max"],
         "straggler": worst,
-        "write_stage": max(stats, key=lambda it: it[0])[1],
+        "write_stage": max(stats, key=lambda t: t["stage_id"]),
     }
 
 
@@ -134,7 +102,7 @@ def _measured_run(variant: str) -> dict:
     except OSError:
         pass
     pipeline._salted_repartition = VARIANTS[variant]
-    before = _stage_ids()
+    before = UI.stage_ids()
     t0 = time.monotonic()
     pipeline.run_pipeline(spark, _cfg())
     wall = time.monotonic() - t0
@@ -159,8 +127,7 @@ if __name__ == "__main__":
         master=f"local[{CPUS}]",
         extra_conf={"spark.ui.enabled": "true"},
     )
-    UI = spark.sparkContext.uiWebUrl + "/api/v1"
-    APP = _rest("/applications")[0]["id"]
+    UI = StageStats(spark)
 
     if not os.path.exists(f"{ROOT}/src/_SUCCESS"):
         shutil.rmtree(ROOT, ignore_errors=True)

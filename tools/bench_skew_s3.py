@@ -12,8 +12,10 @@ join-key distribution — and with ``bucket_count`` the join is co-located
 number: a pin that no task in the emission stage runs longer than 4x the
 stage median.
 
-Usage: ``python tools/bench_skew_s3.py``; writes BENCH_SKEW_S3.json and
-prints one JSON line.  Env: SKEW_N rows (default 2M), SKEW_ROOT.
+Usage: ``python tools/bench_skew_s3.py``; writes BENCH_SKEW_S3.json at
+the repo root and prints one JSON line.  Env: SKEW_N rows (default 2M),
+SKEW_ROOT.  Task durations come from the session's own UI REST API
+(`tools/spark_ui.py`).
 """
 
 from __future__ import annotations
@@ -24,64 +26,35 @@ import os
 import shutil
 import sys
 import time
-import urllib.request
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from omop2owl_vocab_spark.operators.emit import emit_triples  # noqa: E402
 from omop2owl_vocab_spark.plans.checkpoint import CheckpointManager  # noqa: E402
 from omop2owl_vocab_spark.plans.pipeline import PipelineConfig, _load_inputs  # noqa: E402
 from omop2owl_vocab_spark.session import get_spark  # noqa: E402
 from omop2owl_vocab_spark.sources.synth import synth_code_files  # noqa: E402
+from tools.spark_ui import StageStats  # noqa: E402
 
 N_ROWS = int(os.environ.get("SKEW_N", 2_000_000))
 ROUNDS = int(os.environ.get("SKEW_ROUNDS", 3))
 ROOT = os.environ.get("SKEW_ROOT", "/dev/shm/skew_s3")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-UI = "http://localhost:4040/api/v1"
 
 
-def _rest(path: str):
-    with urllib.request.urlopen(UI + path, timeout=10) as r:
-        return json.load(r)
-
-
-def _stage_ids() -> set[int]:
-    return {s["stageId"] for s in _rest(f"/applications/{APP}/stages")}
-
-
-def _new_stage_stats(before: set[int]) -> dict:
-    worst = None
-    max_task_ms = 0.0
-    worst_ratio = 0.0
-    for s in _rest(f"/applications/{APP}/stages?status=complete"):
-        if s["stageId"] in before:
-            continue
-        try:
-            ts = _rest(
-                f"/applications/{APP}/stages/{s['stageId']}/0/taskSummary"
-                "?quantiles=0.0,0.5,1.0"
-            )
-        except Exception:
-            continue
-        dur = ts.get("duration") or [0, 0, 0]
-        # straggler ratio only meaningful for parallel stages with real work
-        if s["numTasks"] >= 4 and dur[1] >= 50:
-            ratio = dur[2] / max(dur[1], 1.0)
-            if ratio > worst_ratio:
-                worst_ratio = ratio
-        if dur[2] > max_task_ms:
-            max_task_ms = dur[2]
-            worst = {
-                "stage": s["name"].split("\n")[0][:80],
-                "num_tasks": s["numTasks"],
-                "task_ms_min": round(dur[0]),
-                "task_ms_med": round(dur[1]),
-                "task_ms_max": round(dur[2]),
-            }
+def _new_stage_stats(ui: StageStats, before: set[int]) -> dict:
+    stats = ui.completed_since(before)
+    # straggler ratio only meaningful for parallel stages with real work
+    ratios = [
+        t["task_ms_max"] / max(t["task_ms_med"], 1)
+        for t in stats
+        if t["num_tasks"] >= 4 and t["task_ms_med"] >= 50
+    ]
+    worst = max(stats, key=lambda t: t["task_ms_max"], default=None)
     return {
-        "max_task_ms": round(max_task_ms),
-        "worst_max_over_med": round(worst_ratio, 2),
+        "max_task_ms": worst["task_ms_max"] if worst else 0,
+        "worst_max_over_med": round(max(ratios, default=0.0), 2),
         "straggler": worst,
     }
 
@@ -93,7 +66,7 @@ if __name__ == "__main__":
         extra_conf={"spark.ui.enabled": "true"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    APP = _rest("/applications")[0]["id"]
+    ui = StageStats(spark)
 
     if not os.path.exists(f"{ROOT}/src/_SUCCESS"):
         shutil.rmtree(ROOT, ignore_errors=True)
@@ -120,13 +93,14 @@ if __name__ == "__main__":
 
     runs = []
     for _ in range(ROUNDS):
-        before = _stage_ids()
+        before = ui.stage_ids()
         t0 = time.monotonic()
         emit_triples(
             concepts, edges, relationships=cfg.relationships, dedupe=False
         ).write.format("noop").mode("overwrite").save()
         wall = time.monotonic() - t0
-        runs.append({"wall_sec": round(wall, 2), **_new_stage_stats(before)})
+        stats = _new_stage_stats(ui, before)
+        runs.append({"wall_sec": round(wall, 2), **stats})
 
     out = {
         "n_rows": N_ROWS,
@@ -137,7 +111,7 @@ if __name__ == "__main__":
         "max_over_med_worst": max(r["worst_max_over_med"] for r in runs),
         "date": dt.date.today().isoformat(),
     }
-    with open("/root/repo/BENCH_SKEW_S3.json", "w") as f:
+    with open(os.path.join(REPO, "BENCH_SKEW_S3.json"), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps({
         "metric": "s3_skew_max_over_med",
