@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from omop2owl_vocab_spark.functions.curie import omop_curie
 from omop2owl_vocab_spark.operators.emit import dedupe_triples
 
 
@@ -19,8 +20,8 @@ def canonicalize_triples(triples: DataFrame, canon: DataFrame) -> DataFrame:
     ``OMOP:``-CURIE ids, so the map is lifted to CURIEs once (cheap
     projection)."""
     cm = canon.select(
-        F.concat(F.lit("OMOP:"), F.col("member")).alias("m"),
-        F.concat(F.lit("OMOP:"), F.col("canonical")).alias("c"),
+        omop_curie("member").alias("m"),
+        omop_curie("canonical").alias("c"),
     )
     subj_map = cm.withColumnRenamed("m", "_sm").withColumnRenamed("c", "_sc")
     obj_map = cm.withColumnRenamed("m", "_om").withColumnRenamed("c", "_oc")

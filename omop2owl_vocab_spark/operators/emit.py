@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from omop2owl_vocab_spark.functions.curie import omop_curie
 from omop2owl_vocab_spark.functions.sanitize import sanitize_predicate_col
 from omop2owl_vocab_spark.schemas import ANNOTATION_COLUMNS
 
@@ -63,7 +64,7 @@ def emit_concept_triples(concepts: DataFrame) -> DataFrame:
     entries += [f"'OMOP:{a}', {a}, true" for a in ANNOTATION_COLUMNS]
     stack_expr = f"stack({len(entries)}, {', '.join(entries)}) as (pred, obj, obj_is_literal)"
     out = concepts.select(
-        F.concat(F.lit("OMOP:"), F.col("concept_id")).alias("subj"),
+        omop_curie("concept_id").alias("subj"),
         F.expr(stack_expr),
         _partition_vocab().alias("_vid"),
         (F.col("src_sha256") if has_sha else F.lit("")).alias("src_sha256"),
@@ -149,9 +150,9 @@ def resolve_edges(
 def emit_edge_triples(edges: DataFrame) -> DataFrame:
     """R4-R6 rendering of resolved edges as CURIE triples."""
     return edges.select(
-        F.concat(F.lit("OMOP:"), F.col("subject")).alias("subj"),
+        omop_curie("subject").alias("subj"),
         F.col("predicate").alias("pred"),
-        F.concat(F.lit("OMOP:"), F.col("object")).alias("obj"),
+        omop_curie("object").alias("obj"),
         F.lit(False).alias("obj_is_literal"),
         "vocabulary_id",
         "src_sha256",

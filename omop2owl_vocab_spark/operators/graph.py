@@ -834,7 +834,6 @@ def link_prediction(edges: DataFrame, top_k: int = 100) -> DataFrame:
             F.col("id_b").alias("node_b"),
             F.col("n").alias("cn"),
         )
-        .filter(F.col("cn") >= 1)
     )
     und = adj.filter(F.col("node") < F.col("nbr")).select(
         F.col("node").alias("node_a"), F.col("nbr").alias("node_b")

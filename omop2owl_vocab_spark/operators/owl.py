@@ -32,30 +32,13 @@ import shutil
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from omop2owl_vocab_spark.functions.curie import PREFIX_MAP
-from omop2owl_vocab_spark.operators.semsql import CORE_PREFIXES
-
-# single prefix source of truth shared with the semsql sink — the .owl and
-# .db artifacts must resolve a CURIE to the same IRI
-_XML_NS = {**CORE_PREFIXES, **PREFIX_MAP}
+from omop2owl_vocab_spark.functions.curie import NAMESPACES, expand_iri
 
 
 def _xml_escape(col: Column) -> Column:
     out = F.replace(col, F.lit("&"), F.lit("&amp;"))
     out = F.replace(out, F.lit("<"), F.lit("&lt;"))
     return F.replace(out, F.lit(">"), F.lit("&gt;"))
-
-
-def _expand_iri(col: Column) -> Column:
-    """CURIE → full IRI (prefixes are a tiny closed set — a when-chain
-    stays in codegen; unknown prefixes pass through unchanged)."""
-    out = col
-    for pfx, base in _XML_NS.items():
-        out = F.when(
-            col.startswith(f"{pfx}:"),
-            F.concat(F.lit(base), F.substring(col, len(pfx) + 2, 1 << 20)),
-        ).otherwise(out)
-    return out
 
 
 def owl_class_fragments(triples: DataFrame) -> DataFrame:
@@ -67,7 +50,7 @@ def owl_class_fragments(triples: DataFrame) -> DataFrame:
         "obj",
         "obj_is_literal",
         _xml_escape(F.col("obj")).alias("obj_esc"),
-        _expand_iri(F.col("obj")).alias("obj_iri"),
+        expand_iri("obj").alias("obj_iri"),
     )
     line = (
         F.when(F.col("pred") == "rdf:type", F.lit(None))  # carried by the tag
@@ -94,7 +77,7 @@ def owl_class_fragments(triples: DataFrame) -> DataFrame:
                     "    <rdfs:subClassOf>\n      <owl:Restriction>\n"
                     '        <owl:onProperty rdf:resource="'
                 ),
-                _expand_iri(F.col("pred")),
+                expand_iri("pred"),
                 F.lit('"/>\n        <owl:someValuesFrom rdf:resource="'),
                 F.col("obj_iri"),
                 F.lit(
@@ -104,7 +87,7 @@ def owl_class_fragments(triples: DataFrame) -> DataFrame:
         )
     )
     return (
-        t.select("subj", line.alias("line"), _expand_iri(F.col("subj")).alias("iri"))
+        t.select("subj", line.alias("line"), expand_iri("subj").alias("iri"))
         .groupBy("subj")
         .agg(
             F.concat(
@@ -128,21 +111,16 @@ def property_declarations(triples: DataFrame) -> list[str]:
     predicates.  The distinct-predicate set is bounded by the
     relationship-type count (~500 in full OMOP) — a driver collect is
     correct here."""
-    preds = [
-        (r["pred"], r["lit_only"])
-        for r in triples.groupBy("pred")
+    rows = (
+        triples.groupBy("pred")
         .agg(F.min(F.col("obj_is_literal").cast("int")).alias("lit_only"))
+        .select("pred", "lit_only", expand_iri("pred").alias("iri"))
         .collect()
-    ]
+    )
     decls = []
-    for pred, lit_only in sorted(preds):
-        if pred in ("rdf:type", "rdfs:subClassOf", "rdfs:label"):
-            continue
-        iri = None
-        for pfx, base in _XML_NS.items():
-            if pred.startswith(f"{pfx}:"):
-                iri = base + pred.split(":", 1)[1]
-        if iri is None:
+    for pred, lit_only, iri in sorted(rows):
+        # an unknown prefix passes through expand_iri: no IRI to declare
+        if pred in ("rdf:type", "rdfs:subClassOf", "rdfs:label") or iri == pred:
             continue
         kind = "AnnotationProperty" if lit_only else "ObjectProperty"
         decls.append(f'  <owl:{kind} rdf:about="{iri}"/>')
@@ -167,7 +145,7 @@ def write_owl_rdfxml(
     tmp_path = path + ".tmp"
     with open(tmp_path, "w", encoding="utf-8") as out:
         out.write('<?xml version="1.0"?>\n<rdf:RDF')
-        for pfx, base in sorted(_XML_NS.items()):
+        for pfx, base in sorted(NAMESPACES.items()):
             out.write(f'\n    xmlns:{pfx}="{base}"')
         out.write(">\n")
         if ontology_iri:

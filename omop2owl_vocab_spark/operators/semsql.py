@@ -23,17 +23,6 @@ from pyspark.sql import DataFrame
 
 _BATCH = 10_000
 
-# the standard XML namespaces every CURIE in our emitted triples can use
-# (consumed by the RDF/XML sink's namespace header, operators/owl.py);
-# the semsql .db prefix table instead carries the FULL bundled dim via
-# sources.prefixes.default_prefix_map (these four are in it verbatim)
-CORE_PREFIXES = {
-    "rdf": "http://www.w3.org/1999/02/22-rdf-syntax-ns#",
-    "rdfs": "http://www.w3.org/2000/01/rdf-schema#",
-    "owl": "http://www.w3.org/2002/07/owl#",
-    "xsd": "http://www.w3.org/2001/XMLSchema#",
-}
-
 
 def write_semsql_sqlite(
     triples: DataFrame,
@@ -64,8 +53,6 @@ def write_semsql_sqlite(
         # bundled prefixes.csv (~235 rows) + the hardcoded pair
         # (omop2owl_vocab.py:123,126,137) — a downstream tool
         # expanding foreign CURIEs through this table expects them.
-        # Single source (sources/prefixes.py) so the .db can't drift
-        # from the dim/manifest.
         from omop2owl_vocab_spark.sources.prefixes import default_prefix_map
 
         con.executemany(

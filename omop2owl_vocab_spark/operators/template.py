@@ -20,29 +20,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from omop2owl_vocab_spark.functions.curie import PREFIX_MAP
+from omop2owl_vocab_spark.functions.curie import expand_iri
+from omop2owl_vocab_spark.schemas import ANNOTATION_COLUMNS
 
 ROBOT_SUBHEADER = {
     "ID": "ID",
     "Label": "A rdfs:label",
     "Type": "TYPE",
-    "domain_id": "A OMOP:domain_id",
-    "vocabulary_id": "A OMOP:vocabulary_id",
-    "concept_class_id": "A OMOP:concept_class_id",
-    "standard_concept": "A OMOP:standard_concept",
-    "concept_code": "A OMOP:concept_code",
-    "valid_start_date": "A OMOP:valid_start_date",
-    "valid_end_date": "A OMOP:valid_end_date",
-    "invalid_reason": "A OMOP:invalid_reason",
+    **{a: f"A OMOP:{a}" for a in ANNOTATION_COLUMNS},
     "rdfs:subClassOf": "SC % SPLIT=|",
-}
-
-_WELL_KNOWN = {
-    "rdf:": "http://www.w3.org/1999/02/22-rdf-syntax-ns#",
-    "rdfs:": "http://www.w3.org/2000/01/rdf-schema#",
-    "owl:": "http://www.w3.org/2002/07/owl#",
-    "OMOP:": PREFIX_MAP["OMOP"],
-    "omoprel:": PREFIX_MAP["omoprel"],
 }
 
 
@@ -73,14 +59,7 @@ def to_robot_template(triples: DataFrame) -> tuple[DataFrame, dict[str, str]]:
     )
     ann_map = {
         "Label": "rdfs:label",
-        "domain_id": "OMOP:domain_id",
-        "vocabulary_id": "OMOP:vocabulary_id",
-        "concept_class_id": "OMOP:concept_class_id",
-        "standard_concept": "OMOP:standard_concept",
-        "concept_code": "OMOP:concept_code",
-        "valid_start_date": "OMOP:valid_start_date",
-        "valid_end_date": "OMOP:valid_end_date",
-        "invalid_reason": "OMOP:invalid_reason",
+        **{a: f"OMOP:{a}" for a in ANNOTATION_COLUMNS},
     }
     aggs = [
         F.max(F.when(F.col("pred") == p, F.col("obj"))).alias(col)
@@ -105,7 +84,7 @@ def to_robot_template(triples: DataFrame) -> tuple[DataFrame, dict[str, str]]:
     for p in edge_preds:
         if p != "rdfs:subClassOf":
             subheader[p] = f"SC {p} some % SPLIT=|"
-    cols = ["ID", "Label", "Type"] + [c for c in ann_map if c != "Label"] + [
+    cols = ["ID", "Label", "Type"] + ANNOTATION_COLUMNS + [
         p for p in ["rdfs:subClassOf"] if p in wide.columns
     ] + [p for p in edge_preds if p != "rdfs:subClassOf"]
     return wide.select(*[c for c in cols if c in wide.columns]), subheader
@@ -134,17 +113,7 @@ def write_robot_template_tsv(
 def to_ntriples(triples: DataFrame) -> DataFrame:
     """One N-Triples line per row (column ``line``)."""
     def iri(col):
-        out = F.concat(F.lit("<"), F.col(col), F.lit(">"))
-        for pfx, base in _WELL_KNOWN.items():
-            out = F.when(
-                F.col(col).startswith(pfx),
-                F.concat(
-                    F.lit("<" + base),
-                    F.expr(f"substring({col}, {len(pfx) + 1})"),
-                    F.lit(">"),
-                ),
-            ).otherwise(out)
-        return out
+        return F.concat(F.lit("<"), expand_iri(col), F.lit(">"))
 
     # full STRING_LITERAL_QUOTED escaping: backslash first, then quote,
     # newline, CR, tab — a raw newline inside a literal is invalid N-Triples

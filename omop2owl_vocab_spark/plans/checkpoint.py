@@ -65,7 +65,6 @@ class CheckpointManager:
         stage: str,
         df: DataFrame,
         lineage_col: str | None = None,
-        extra: dict | None = None,
     ) -> DataFrame:
         """Materialize a stage and return the re-read frame (truncates
         lineage like the reference's pickle round-trip, but distributed).
@@ -80,9 +79,7 @@ class CheckpointManager:
         counted.write.mode("overwrite").parquet(d)
         wall = time.monotonic() - t0
         out = df.sparkSession.read.parquet(d)
-        self._write_metrics(
-            stage, out, wall, obs.get["rows"], lineage_col, extra
-        )
+        self._write_metrics(stage, out, wall, obs.get["rows"], lineage_col)
         return out
 
     def _write_metrics(

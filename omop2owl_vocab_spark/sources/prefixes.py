@@ -7,8 +7,8 @@ The reference ships a 235-row ``prefixes.csv`` (234 unique prefixes —
 ``omop2owl_vocab_spark/data/prefixes.csv`` (public prefix→IRI data, not
 code — the reference's semsql ``.db`` carries these rows, and downstream
 tools expanding foreign CURIEs through the prefix table expect them).
-``load_prefix_map`` overlays bundled < user csv < hardcoded pair; the dim
-is broadcast when joined.
+``default_prefix_map`` overlays ``functions.curie.NAMESPACES`` on it; the
+dim is broadcast when joined.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from omop2owl_vocab_spark.functions.curie import PREFIX_MAP
+from omop2owl_vocab_spark.functions.curie import NAMESPACES
 
 PREFIX_SCHEMA = StructType(
     [
@@ -46,41 +46,13 @@ def bundled_prefix_map() -> dict[str, str]:
 
 
 def default_prefix_map() -> dict[str, str]:
-    """THE default prefix table for emitted artifacts (semsql ``.db``,
-    manifest) — single source so sinks can't drift from the dim:
-    bundled csv overlaid by the hardcoded pair (same precedence as
-    ``load_prefix_map`` with no user csv)."""
-    return {**bundled_prefix_map(), **PREFIX_MAP}
+    """The prefix table of the semsql ``.db`` and of ``prefix_dim``: the
+    bundled csv overlaid by ``NAMESPACES`` (the reference's hardcoded pair
+    also shadows its csv rows, omop2owl_vocab.py:38-41)."""
+    return {**bundled_prefix_map(), **NAMESPACES}
 
 
-def load_prefix_map(
-    spark: SparkSession,
-    csv_path: str | None = None,
-    include_bundled: bool = True,
-) -> dict[str, str]:
-    """Driver-side dict (the dim is tiny — a dict beats a join).
-
-    Precedence: hardcoded ``PREFIX_MAP`` > user csv > bundled csv (the
-    reference also lets its csv-loaded entries be shadowed by the
-    hardcoded pair, omop2owl_vocab.py:38-41)."""
-    out = dict(PREFIX_MAP)
-    if csv_path:
-        rows = (
-            spark.read.schema(PREFIX_SCHEMA)
-            .option("header", True)
-            .csv(csv_path)
-            .collect()
-        )
-        for r in rows:
-            out.setdefault(r["prefix"], r["base"])
-    if include_bundled:
-        for k, v in bundled_prefix_map().items():
-            out.setdefault(k, v)
-    return out
-
-
-def prefix_dim(spark: SparkSession, csv_path: str | None = None) -> DataFrame:
+def prefix_dim(spark: SparkSession) -> DataFrame:
     """Broadcast-ready DataFrame form, for join-based IRI expansion."""
-    m = load_prefix_map(spark, csv_path)
-    df = spark.createDataFrame(sorted(m.items()), PREFIX_SCHEMA)
-    return F.broadcast(df)
+    m = default_prefix_map()
+    return F.broadcast(spark.createDataFrame(sorted(m.items()), PREFIX_SCHEMA))

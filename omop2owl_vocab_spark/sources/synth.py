@@ -19,13 +19,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 LANGS = ["python", "java", "go", "js", "rs", "c"]
+N_REPOS = 8
 _EXT = {"python": "py", "java": "java", "go": "go", "js": "js", "rs": "rs", "c": "c"}
 
 
 def synth_code_files(
     spark: SparkSession,
     n_rows: int,
-    n_repos: int = 8,
     lang_cuts: tuple[int, int, int, int, int] = (55, 80, 85, 90, 95),
 ) -> DataFrame:
     """``lang_cuts`` are the cumulative percent thresholds for
@@ -55,17 +55,17 @@ def synth_code_files(
         .when(lang == "java", "java")
         .otherwise(lang)
     )
-    repo = F.concat(F.lit("repo"), (F.col("i") % n_repos).cast("string"))
+    repo = F.concat(F.lit("repo"), (F.col("i") % N_REPOS).cast("string"))
     pkg = ((F.col("i") / 40).cast("long") % 10).cast("string")
     path = F.concat(
         F.lit("src/pkg"), pkg, F.lit("/mod"), F.col("i").cast("string"),
         F.lit("."), ext,
     )
-    # imp1 resolves: target row t keeps ck's residue mod n_repos (same repo)
-    # because m8 is a multiple of n_repos, so pkg/stem point at a real file.
+    # imp1 resolves: target row t keeps ck's residue mod N_REPOS (same repo)
+    # because m8 is a multiple of N_REPOS, so pkg/stem point at a real file.
     # imp2 is intentionally dangling-ish (exercises unresolved imports).
-    m8 = max(n_rows - (n_rows % n_repos), n_repos)
-    t = (ck + n_repos * (1 + F.pmod(F.xxhash64(ck, F.lit(99)), F.lit(25)))) % m8
+    m8 = max(n_rows - (n_rows % N_REPOS), N_REPOS)
+    t = (ck + N_REPOS * (1 + F.pmod(F.xxhash64(ck, F.lit(99)), F.lit(25)))) % m8
     imp1 = F.concat(
         F.lit("import pkg"), ((t / 40).cast("long") % 10).cast("string"),
         F.lit(".mod"), t.cast("string"),

@@ -106,8 +106,8 @@ def test_streaming_ingest(spark, tmp_path):
 
 
 def test_prefix_dim(spark):
-    from omop2owl_vocab_spark.sources.prefixes import load_prefix_map, prefix_dim
+    from omop2owl_vocab_spark.sources.prefixes import default_prefix_map, prefix_dim
 
-    m = load_prefix_map(spark)
+    m = default_prefix_map()
     assert m["OMOP"].startswith("https://athena")
     assert prefix_dim(spark).count() == len(m)

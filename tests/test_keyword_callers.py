@@ -2,12 +2,14 @@
 
 A defaulted parameter that nothing sets is a configuration no test or
 benchmark covers.  The scan below reads every public top-level function
-of ``operators/`` and ``functions/``, then every call in the package, the
-driver entry, ``bench.py``, ``kgbench/``, ``tools/`` and ``tests/``
-(tests count as callers).  A call sets a parameter by naming it or by
-reaching its position; ``*args``/``**kwargs`` splats set nothing here.
-Calls match on the function's bare name: no two public operators share
-one.
+of ``operators/``, ``functions/``, ``sources/`` and ``plans/``, then every
+call in the package, ``__spark_entry__.py``, ``bench.py``, ``kgbench/``,
+``tools/`` and ``tests/`` (tests count as callers).  A call sets a
+parameter by naming it or by reaching its position; ``*args``/``**kwargs``
+splats set nothing here.  Calls match on the function's bare name: no two
+public functions share one.  ``streaming/`` (triggers and watermarks are
+deployment settings) and ``api.omop2owl`` (the reference's own keyword
+surface, kept for parity) are not scanned.
 """
 
 import ast
@@ -35,7 +37,7 @@ def _keyword_params(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
 def public_keyword_params(root: Path) -> dict[str, tuple[str, list]]:
     """function name -> (module path, defaulted parameters)."""
     out = {}
-    for sub in ("operators", "functions"):
+    for sub in ("operators", "functions", "sources", "plans"):
         for f in sorted((root / PKG / sub).glob("*.py")):
             for node in ast.parse(f.read_text()).body:
                 if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
