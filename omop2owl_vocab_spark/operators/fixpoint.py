@@ -32,11 +32,8 @@ scans / 140 exchanges / 0 reused exchanges in ``dd_prefix_join`` alone).
   them, so whoever opened the scope deletes the subdir once the result
   is materialized elsewhere.  ``setCheckpointDir`` is
   SparkContext-global: the unique subdir keeps successive operators
-  from interleaving files, but two scopes open at once in different
-  threads share the one setting.  The scope is a context variable, so
-  it covers every operator called inside it, nested ones included; a
-  thread sees it only when its target runs in a copy of the opener's
-  context (``run_pipeline`` runs its s3 ∥ s4 threads that way).
+  from interleaving files.  The scope is a context variable, so it
+  covers every operator called inside it, nested ones included.
   The scope is the only switch: no operator takes a checkpoint option.
 - **Skip**: a frame whose analyzed plan is already a bare ``LogicalRDD``
   (an earlier checkpoint's output on either path, or a frame built from
@@ -130,8 +127,6 @@ def iterate(
         if signature is None:
             frame = materialize(frame)
         else:
-            # unnamed, so a fresh uuid name per cut keeps concurrent
-            # loops (the s3 ∥ s4 threads) apart
             obs = Observation()
             frame = materialize(frame.observe(obs, signature.alias("sig")))
             sigs.append(obs.get["sig"])

@@ -1,7 +1,8 @@
 """Pipeline orchestration — the engine's ``omop2owl()`` equivalent
 (reference orchestrator at ``omop2owl_vocab.py:430-545``).
 
-One lazy DAG per stage, checkpointed between stages:
+One lazy DAG per stage, checkpointed between stages; the stages run in
+this order on the calling thread (s4 only when canonicalizing):
 
     S1 derive   code_files → (concepts, raw_edges)          [code mode]
                 or concept/concept_relationship CSVs        [omop compat mode]
@@ -235,20 +236,20 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
 
     # emission: skip the dedup shuffle here when canonicalization follows
     # (it dedupes after the rewrite; one full-width shuffle instead of two)
-    def _run_s3():
-        return ckpt_s3.get_or_compute(
-            spark,
-            "s3_triples_raw",
-            lambda: emit_triples(
-                concepts,
-                edges,
-                relationships=cfg.relationships,
-                exclude_singletons=cfg.exclude_singletons,
-                dedupe=not cfg.canonicalize,
-            ),
-            lineage_col="vocabulary_id",
-            resume=cfg.resume,
-        )
+    triples, cached = ckpt_s3.get_or_compute(
+        spark,
+        "s3_triples_raw",
+        lambda: emit_triples(
+            concepts,
+            edges,
+            relationships=cfg.relationships,
+            exclude_singletons=cfg.exclude_singletons,
+            dedupe=not cfg.canonicalize,
+        ),
+        lineage_col="vocabulary_id",
+        resume=cfg.resume,
+    )
+    report["stages"]["s3_triples_raw"] = {"cached": cached}
 
     if cfg.canonicalize:
         def _canon_map() -> DataFrame:
@@ -276,38 +277,9 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
             report["stages"]["s4_link"] = stats
             return canonical_map(labels)
 
-        # s3 (emission) and s4 (equivalence CC → canon map) are
-        # INDEPENDENT given the s1 frames — overlap them from two driver
-        # threads (guide §2.6).  The FIFO scheduler gives s3's stages the
-        # cores first, so CC jobs queue behind them and s4 ends after s3:
-        # s4 is the critical path (traced, 4 cores: a CC job waited 1.41 s
-        # for a core behind an 8-task s3 stage).
-        # Each stage keeps its own CheckpointManager/directory, so
-        # resume/kill semantics are unchanged; job descriptions are
-        # thread-local so the UI attribution stays correct.  Each target
-        # runs in a copy of the caller's context, so an enclosing
-        # `fixpoint.checkpointing` scope reaches the CC rounds too (pool
-        # threads do not inherit context variables).
-        import contextvars
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        def _run_s4():
-            return ckpt_s4.get_or_compute(
-                spark, "s4_canon_map", _canon_map, resume=cfg.resume
-            )
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f3, f4 = (
-                pool.submit(
-                    contextvars.copy_context().run, inheritable_thread_target(fn)
-                )
-                for fn in (_run_s3, _run_s4)
-            )
-            triples_raw, cached3 = f3.result()
-            canon, cached = f4.result()
-        report["stages"]["s3_triples_raw"] = {"cached": cached3}
+        canon, cached = ckpt_s4.get_or_compute(
+            spark, "s4_canon_map", _canon_map, resume=cfg.resume
+        )
         report["stages"]["s4_canon_map"] = {"cached": cached}
         # the canon map is materialized in its own checkpoint now — the
         # CC rounds' reliable checkpoint files (never auto-deleted by
@@ -322,11 +294,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
         # s5+s6 fused: canonical rewrite → dedup → salted write, one pass;
         # the partitioned output directory IS the s5 artifact (resume-wise
         # the _SUCCESS marker plays the checkpoint role)
-        triples = canonicalize_triples(triples_raw, canon)
-    else:
-        triples_raw, cached3 = _run_s3()
-        report["stages"]["s3_triples_raw"] = {"cached": cached3}
-        triples = triples_raw
+        triples = canonicalize_triples(triples, canon)
 
     if cfg.compact_output:
         # salt from the raw-stage lineage: canonicalization only shrinks

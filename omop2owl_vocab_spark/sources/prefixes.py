@@ -1,4 +1,4 @@
-"""S3 — the prefix→base-IRI dimension table.
+"""S3 — the prefix→base-IRI map.
 
 The reference ships a 235-row ``prefixes.csv`` (234 unique prefixes —
 ``FBcv`` appears twice upstream; the dict keeps the last) consumed by semsql
@@ -7,8 +7,7 @@ The reference ships a 235-row ``prefixes.csv`` (234 unique prefixes —
 ``omop2owl_vocab_spark/data/prefixes.csv`` (public prefix→IRI data, not
 code — the reference's semsql ``.db`` carries these rows, and downstream
 tools expanding foreign CURIEs through the prefix table expect them).
-``default_prefix_map`` overlays ``functions.curie.NAMESPACES`` on it; the
-dim is broadcast when joined.
+``default_prefix_map`` overlays ``functions.curie.NAMESPACES`` on it.
 """
 
 from __future__ import annotations
@@ -17,18 +16,7 @@ import csv
 import os
 from functools import lru_cache
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
-
 from omop2owl_vocab_spark.functions.curie import NAMESPACES
-
-PREFIX_SCHEMA = StructType(
-    [
-        StructField("prefix", StringType(), False),
-        StructField("base", StringType(), False),
-    ]
-)
 
 BUNDLED_PREFIXES_CSV = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -39,20 +27,15 @@ BUNDLED_PREFIXES_CSV = os.path.join(
 
 @lru_cache(maxsize=1)
 def bundled_prefix_map() -> dict[str, str]:
-    """The reference's full prefix dim, read driver-side (tiny, stdlib csv
+    """The reference's full prefix table, read driver-side (tiny, stdlib csv
     — no Spark job for a 235-row constant file)."""
     with open(BUNDLED_PREFIXES_CSV, newline="") as f:
         return {row["prefix"]: row["base"] for row in csv.DictReader(f)}
 
 
 def default_prefix_map() -> dict[str, str]:
-    """The prefix table of the semsql ``.db`` and of ``prefix_dim``: the
-    bundled csv overlaid by ``NAMESPACES`` (the reference's hardcoded pair
-    also shadows its csv rows, omop2owl_vocab.py:38-41)."""
+    """The prefix table of the semsql ``.db``: the bundled csv overlaid by
+    ``NAMESPACES`` (the reference's hardcoded pair also shadows its csv
+    rows, omop2owl_vocab.py:38-41)."""
     return {**bundled_prefix_map(), **NAMESPACES}
 
-
-def prefix_dim(spark: SparkSession) -> DataFrame:
-    """Broadcast-ready DataFrame form, for join-based IRI expansion."""
-    m = default_prefix_map()
-    return F.broadcast(spark.createDataFrame(sorted(m.items()), PREFIX_SCHEMA))

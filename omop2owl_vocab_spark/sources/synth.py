@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 LANGS = ["python", "java", "go", "js", "rs", "c"]
 N_REPOS = 8
-_EXT = {"python": "py", "java": "java", "go": "go", "js": "js", "rs": "rs", "c": "c"}
 
 
 def synth_code_files(

@@ -1,7 +1,7 @@
 """The shared round driver (`operators/fixpoint.py`) and the iterative
 operators built on it: local and reliable materialization, round cap,
 fixed-round mode, empty inputs, and one materialization policy for the
-whole package, the pipeline's CC thread included."""
+whole package, the pipeline's CC included."""
 
 import os
 import uuid
@@ -280,11 +280,9 @@ def test_nested_scope_keeps_the_enclosing_policy(spark, tmp_path, monkeypatch):
     assert _holds_files(outer)
 
 
-def test_enclosing_scope_reaches_the_pipeline_cc_thread(
-    spark, tmp_path, monkeypatch
-):
-    """`run_pipeline` runs CC in a pool thread; a scope the caller opened
-    still makes its rounds reliable, with the same triples."""
+def test_enclosing_scope_reaches_the_pipeline_cc(spark, tmp_path, monkeypatch):
+    """A scope the caller opened around `run_pipeline` makes its CC
+    rounds reliable, with the same triples."""
     src = str(tmp_path / "cf")
     synth_code_files(spark, 2000).write.parquet(src)
 
@@ -302,17 +300,30 @@ def test_enclosing_scope_reaches_the_pipeline_cc_thread(
     assert reliable == local
 
 
+def _package_lines_with(needles, skip=None):
+    """``path:line`` of every package source line holding one of
+    ``needles``, outside the file ``skip``."""
+    pkg = Path(graph.__file__).parents[1]
+    return [
+        f"{p.relative_to(pkg)}:{n}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != skip
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if any(t in line for t in needles)
+    ]
+
+
 def test_only_fixpoint_cuts_lineage():
     """`fixpoint.materialize` is the one lineage cut in the package, and
     nothing outside it caches a frame instead."""
-    pkg = Path(graph.__file__).parents[1]
-    policy = Path(graph.__file__).with_name("fixpoint.py")
     cuts = ("localCheckpoint(", ".checkpoint(", ".persist(", ".cache(")
-    hits = [
-        f"{p.relative_to(pkg)}:{n}"
-        for p in sorted(pkg.rglob("*.py"))
-        if p != policy
-        for n, line in enumerate(p.read_text().splitlines(), 1)
-        if any(c in line for c in cuts)
-    ]
-    assert hits == []
+    policy = Path(graph.__file__).with_name("fixpoint.py")
+    assert _package_lines_with(cuts, skip=policy) == []
+
+
+def test_package_starts_no_threads():
+    """`run_pipeline` runs its stages in order on the calling thread, and
+    no package code starts a thread: a driver-side overlap comes back
+    only with its own interleaved A/B."""
+    spawns = ("ThreadPoolExecutor", "threading.Thread", "inheritable_thread_target")
+    assert _package_lines_with(spawns) == []

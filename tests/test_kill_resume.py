@@ -86,8 +86,8 @@ def _sorted_triples(spark, out):
 
 def test_kill_during_reliable_cc_then_resume(spark, tmp_path, monkeypatch):
     """Kill the pipeline once its CC rounds write reliable checkpoint
-    files; the rerun skips s1, matches an uninterrupted run row for row,
-    and deletes the CC subdir it opened itself."""
+    files; the rerun skips s1 and s3, matches an uninterrupted run row
+    for row, and deletes the CC subdir it opened itself."""
     import omop2owl_vocab_spark.plans.pipeline as pipeline_mod
 
     src = str(tmp_path / "cf")
@@ -123,8 +123,8 @@ def test_kill_during_reliable_cc_then_resume(spark, tmp_path, monkeypatch):
     assert killed or proc.returncode == 0
     orphans = set(os.listdir(cc))
 
-    # s1 is checkpointed before the CC thread starts: the rerun must not
-    # derive it again
+    # s1 and s3 are checkpointed before CC starts: the rerun must not
+    # derive s1 again, and reports s3 cached
     def no_derive(*_a, **_k):
         raise AssertionError("s1 recomputed on resume")
 
@@ -133,6 +133,8 @@ def test_kill_during_reliable_cc_then_resume(spark, tmp_path, monkeypatch):
     report = run_pipeline(
         spark, PipelineConfig(source=src, output_dir=out, cc_checkpoint_dir=cc)
     )
+    if killed:
+        assert report["stages"]["s3_triples_raw"] == {"cached": True}
     sub = report["stages"].get("s4_link", {}).get("checkpoint_subdir")
     if sub is not None:
         assert sub.startswith(cc) and not os.path.exists(sub)
