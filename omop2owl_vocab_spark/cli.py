@@ -102,11 +102,6 @@ def cli_parser() -> argparse.ArgumentParser:
         "default; compat-scale outputs only, K3 parity sink)",
     )
     p.add_argument(
-        "--bucket-count", type=int, default=0,
-        help="materialize s1 checkpoints as bucketed tables clustered on "
-        "the join keys (shuffle-free emission join); 0 = off",
-    )
-    p.add_argument(
         "--compact-output", action="store_true",
         help="salted repartition before the final write for few files per "
         "vocabulary, a large vocabulary spread over its share of the "
@@ -159,7 +154,6 @@ def route_and_run(d: dict) -> dict:
         canonicalize=canonicalize_default(d.get("canonicalize"), mode),
         exclude_singletons=d.get("exclude_singletons", False),
         resume=d.get("use_cache", False),
-        bucket_count=d.get("bucket_count", 0),
         compact_output=d.get("compact_output", False),
     )
     spark = get_spark(master=d.get("master"))

@@ -116,8 +116,9 @@ def resolve_edges(
     # forward rows: join on the RAW concept_id_1 column — one inner join
     # does the R7 membership filter (omop2owl_vocab.py:347) AND the
     # vocab/sha fetch.  Joining on the raw column (not a when() expression)
-    # preserves any bucketing/partitioning of the inputs, enabling
-    # shuffle-free co-located joins when checkpoints are bucketed.
+    # keeps the key a plain attribute: the planner broadcasts the concept
+    # side, or above the broadcast threshold plans a sort-merge join on
+    # the column itself.
     fwd = (
         rel_df.filter(~is_rev)
         .join(subj_dim, F.col("concept_id_1") == F.col("_subj_id"), "inner")

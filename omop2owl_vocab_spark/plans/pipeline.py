@@ -79,13 +79,6 @@ class PipelineConfig:
     # (subj, pred, obj) distribute uniformly, and partitionBy splits files
     # per vocab within each task.
     compact_output: bool = False
-    # bucket_count > 0 materializes the s1 checkpoints as bucketed tables
-    # hash-clustered on their join keys (concepts on concept_id, edges on
-    # concept_id_1), making the emission membership join co-located —
-    # zero shuffle on either side.  The local analog of Iceberg
-    # storage-partitioned joins for the 10^12-row case where neither side
-    # broadcasts.  0 = plain parquet directories.
-    bucket_count: int = 0
     # reliable-checkpoint dir for the CC driver loop (HDFS/S3/shared fs):
     # run_pipeline opens a `fixpoint.checkpointing` scope on it around
     # the CC call and deletes the scope's subdir once the canon map
@@ -116,7 +109,6 @@ class PipelineConfig:
             "source": self.source,
             "mode": self.mode,
             "concept_relationship_path": self.concept_relationship_path,
-            "bucket_count": self.bucket_count,
         }
 
     def key_s3(self) -> dict:
@@ -149,19 +141,12 @@ def _load_inputs(
         concepts, _ = ckpt.get_or_compute(
             spark, "s1_concepts", lambda: derive_concepts(code),
             lineage_col="vocabulary_id", resume=cfg.resume,
-            bucket_col="concept_id", bucket_count=cfg.bucket_count,
         )
         edges, _ = ckpt.get_or_compute(
             spark, "s1_edges", lambda: derive_edges(concepts),
             lineage_col="relationship_id", resume=cfg.resume,
-            bucket_col="concept_id_1", bucket_count=cfg.bucket_count,
         )
     elif cfg.mode == "omop":
-        if cfg.bucket_count:
-            raise ValueError(
-                "bucket_count applies to code mode only (omop mode reads "
-                "CSVs directly with no checkpointed s1 stage to bucket)"
-            )
         concepts = read_concept(spark, cfg.source)
         edges = read_concept_relationship(spark, cfg.concept_relationship_path)
     else:

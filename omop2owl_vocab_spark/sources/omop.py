@@ -43,8 +43,12 @@ def _sniff_sep(spark: SparkSession, paths: list[str]) -> str:
     return "\t" if line.count("\t") > line.count(",") else ","
 
 
-def _read_csv(spark: SparkSession, path, schema) -> DataFrame:
+def _read_csv(spark: SparkSession, path, schema, table: str) -> DataFrame:
     paths = _expand(path)
+    if not paths:
+        raise FileNotFoundError(
+            f"no {table} file to read: the path list is empty"
+        )
     sep = _sniff_sep(spark, paths)
     df = (
         spark.read.schema(schema)
@@ -58,11 +62,13 @@ def _read_csv(spark: SparkSession, path, schema) -> DataFrame:
 def read_concept(spark: SparkSession, path) -> DataFrame:
     """Concept table: all-string schema, NaN→'' (F1). No validity filter —
     the reference only annotates concept invalid_reason (SURVEY §1.1)."""
-    return _read_csv(spark, path, CONCEPT_SCHEMA)
+    return _read_csv(spark, path, CONCEPT_SCHEMA, "concept")
 
 
 def read_concept_relationship(spark: SparkSession, path) -> DataFrame:
     """Relationship table with the validity filter F2 applied at the scan
     (reference: omop2owl_vocab.py:390-391) so Catalyst pushes it down."""
-    df = _read_csv(spark, path, CONCEPT_RELATIONSHIP_SCHEMA)
+    df = _read_csv(
+        spark, path, CONCEPT_RELATIONSHIP_SCHEMA, "concept_relationship"
+    )
     return df.filter(df.invalid_reason == "")

@@ -30,8 +30,8 @@ def synth_code_files(
     """``lang_cuts`` are the cumulative percent thresholds for
     python/java/go/js/rs (remainder = c).  The default reproduces the
     documented ≈55/25/5/5/5/5 skew; pass e.g. ``(90, 92, 94, 96, 98)``
-    for the pathological one-giant-vocab corpus ``tools/bench_skew_s3.py``
-    uses (the SNOMED analog at its worst)."""
+    for the pathological one-giant-vocab corpus (the SNOMED analog at its
+    worst; ``BENCH_SKEW_S3.json`` records its s3 task skew)."""
     df = spark.range(n_rows).select(F.col("id").alias("i"))
 
     # duplicate-content key: rows 19 mod 20 repeat the previous row's content

@@ -3,7 +3,11 @@
 import glob
 import os
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
 from omop2owl_vocab_spark.plans import pipeline
+from omop2owl_vocab_spark.plans.checkpoint import CheckpointManager
 from omop2owl_vocab_spark.plans.pipeline import PipelineConfig, run_pipeline
 from omop2owl_vocab_spark.sources.synth import synth_code_files
 
@@ -86,3 +90,23 @@ def test_relayout_reuses_upstream_checkpoints(spark, tmp_path):
     assert report["stages"]["s3_triples_raw"] == {"cached": True}
     assert report["stages"]["s4_canon_map"] == {"cached": True}
     assert report["stages"]["s6_write"] == {"cached": False}
+
+
+def test_checkpoint_rows_ride_the_write(spark, tmp_path, monkeypatch):
+    """A stage's ``rows`` is observed on its write: no count() job over
+    the re-read frame, with or without lineage."""
+    ckpt = CheckpointManager(str(tmp_path / "ckpt"), {"t": 1})
+    df = spark.range(37).select(
+        F.col("id").alias("k"), (F.col("id") % 3).cast("string").alias("v")
+    )
+
+    def boom(*_a, **_k):
+        raise AssertionError("count() in a checkpoint write")
+
+    monkeypatch.setattr(DataFrame, "count", boom)
+    ckpt.write("plain", df)
+    ckpt.write("lineage", df, lineage_col="v")
+    assert [ckpt.metrics(s)["rows"] for s in ("plain", "lineage")] == [37, 37]
+    assert "partition_lineage" not in ckpt.metrics("plain")
+    lineage = ckpt.metrics("lineage")["partition_lineage"]
+    assert lineage == {"0": 13, "1": 12, "2": 12}

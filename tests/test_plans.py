@@ -204,8 +204,7 @@ def test_pipeline_config_fields_are_pinned():
     assert [f.name for f in fields(PipelineConfig)] == [
         "source", "output_dir", "mode", "concept_relationship_path",
         "ontology_id", "relationships", "vocabs", "canonicalize",
-        "exclude_singletons", "resume", "compact_output", "bucket_count",
-        "cc_checkpoint_dir",
+        "exclude_singletons", "resume", "compact_output", "cc_checkpoint_dir",
     ]
 
 

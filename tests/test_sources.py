@@ -2,7 +2,12 @@
 Athena TSV via pandas sep=None, omop2owl_vocab.py:379-383) and glob
 expansion."""
 
-from omop2owl_vocab_spark.sources.omop import read_concept
+import pytest
+
+from omop2owl_vocab_spark.sources.omop import (
+    read_concept,
+    read_concept_relationship,
+)
 
 HEADER = (
     "concept_id,concept_name,domain_id,vocabulary_id,concept_class_id,"
@@ -34,3 +39,13 @@ def test_glob_expansion(spark, tmp_path):
         )
     df = read_concept(spark, str(tmp_path / "c*.csv"))
     assert df.count() == 3
+
+
+@pytest.mark.parametrize(
+    "reader, table",
+    [(read_concept, "concept"),
+     (read_concept_relationship, "concept_relationship")],
+)
+def test_empty_path_list_names_the_table(spark, reader, table):
+    with pytest.raises(FileNotFoundError, match=f"no {table} file"):
+        reader(spark, [])

@@ -1,6 +1,6 @@
 """Task-duration stats of completed Spark stages, read from the live
 application's UI REST API (the session needs ``spark.ui.enabled=true``).
-Shared by the skew tools ``bench_skew_ab.py`` and ``bench_skew_s3.py``.
+Read by the skew tool ``bench_skew_ab.py``.
 
 The address and application id come from the session itself, so a second
 Spark app holding port 4040 is never read by mistake.
